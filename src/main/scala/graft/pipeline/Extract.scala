@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** The flagship pipeline: transcripts table → per-turn extraction results.
   *
@@ -137,56 +140,90 @@ object Extract {
 
   /** Observed metrics (A2 via df.observe): corpus counters collected as a
     * side effect of the write, no extra pass. Read them after the action via
-    * the returned Observation.
+    * the returned Observation (see [[observed]]). `extra` adds more named
+    * aggregates to the same observation.
     */
-  def withObservedMetrics(results: Dataset[TurnResult]): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation("extract_metrics")
-    val df = results.toDF().observe(obs,
-      count(lit(1)).as("rows"),
+  def withObservedMetrics(results: Dataset[TurnResult],
+                          extra: Column*): (DataFrame, Observation) = {
+    val obs = Observation("extract_metrics")
+    val df = results.toDF().observe(obs, count(lit(1)).as("rows"), Seq(
       sum(when(col("filtered"), 1L).otherwise(0L)).as("filtered_rows"),
       sum(when(col("status") === "error", 1L).otherwise(0L)).as("error_rows"),
-      sum(length(coalesce(col("md"), lit("")))).as("md_chars"))
+      sum(length(coalesce(col("md"), lit("")))).as("md_chars")) ++ extra: _*)
     (df, obs)
   }
 
-  /** Checkpointed production run (Q3-Q5 semantics, SURVEY §7.3): skip keys
-    * already present in `outDir`, extract only the remainder, append results
-    * + per-partition lineage. Idempotent under re-runs and task retries
-    * (parquet file commits are atomic per task attempt); error rows are
-    * carried, never dropped, so a later pass can re-parse them by key.
-    * Returns the observed corpus metrics for the increment.
-    *
-    * Lineage is maintained INCREMENTALLY (round 4): the increment is
-    * re-read from exactly the part-files this run appended (a before/after
-    * listing diff of the results dir — O(increment) bytes, never a full
-    * rescan), its bucket aggregates are merged into `lineage_buckets`
-    * (sums add, min/max combine — all associative), and its physical-
-    * partition lineage is APPENDED under a fresh `run_id`. A zero-row
-    * resume therefore touches no results data at all beyond the anti-join's
-    * pruned key scan: lineage files are left byte-identical (spec-asserted
-    * in GoldenSpec).
+  /** Upper bound on the wait for an observation's listener event after its
+    * action has returned; a backstop only — the event normally lands in
+    * milliseconds.
     */
+  private val ObservationWait = scala.concurrent.duration.Duration(60, "s")
+
+  /** The metrics of `obs` after its action has finished, or None when
+    * there are none: when AQE prunes the observed subtree (an anti-join
+    * whose other side turned out empty) Spark reports an empty row, and an
+    * older listener never completes the observation at all — a plain
+    * `obs.get` would then block forever. Callers treat None as "unknown".
+    */
+  private def observed(obs: Observation): Option[Map[String, Any]] =
+    scala.util.Try(scala.concurrent.Await.result(obs.future, ObservationWait))
+      .toOption.filter(_.length > 0)
+      .map(r => r.getValuesMap[Any](r.schema.fieldNames.toSeq))
+
   /** The deterministic conv_id-hash bucket (portable md5-prefix family) —
     * the content key shared by bucket lineage and the optional
     * bucket-partitioned results layout.
     */
-  def bucketCol(c: org.apache.spark.sql.Column, nBuckets: Int = 32): org.apache.spark.sql.Column =
+  def bucketCol(c: Column, nBuckets: Int = 32): Column =
+    bucketHash(c, nBuckets).cast("int")
+
+  /** [[bucketCol]] as the long the lineage tables store. */
+  private def bucketHash(c: Column, nBuckets: Int = 32): Column =
     pmod(conv(substring(md5(c), 1, 15), 16, 10).cast("long"),
-      lit(nBuckets.toLong)).cast("int")
+      lit(nBuckets.toLong))
+
+  /** The results table's schema: the [[TurnResult]] encoder's, plus the
+    * `bucket` partition column in the bucket-partitioned layout. Internal
+    * tables are read with fixed schemas, which skips Spark's schema
+    * inference job (one per read).
+    */
+  private def resultsSchema(partitioned: Boolean): StructType = {
+    val s = Encoders.product[TurnResult].schema
+    if (partitioned) s.add("bucket", IntegerType) else s
+  }
+
+  /** Fixed schemas of the two lineage tables: the output schemas of the
+    * functions that define them (analysis of an empty plan; no job).
+    */
+  private def bucketLineageSchema(spark: SparkSession): StructType =
+    bucketLineage(spark.createDataFrame(
+      java.util.List.of[Row](), resultsSchema(false))).schema
+
+  private def runLineageSchema(spark: SparkSession): StructType =
+    partitionLineage(spark.createDataFrame(
+      java.util.List.of[Row](), resultsSchema(false)))
+      .withColumn("run_id", lit(0L)).schema
 
   /** Manifest-aware read of a results table (plain dir when no manifest —
     * see [[SnapshotStore]]). All internal readers resolve through this, so
     * maintenance ops' pre-commit file movements are never observed.
     */
   def readResults(spark: SparkSession, outDir: String): DataFrame =
-    SnapshotStore.read(spark, s"$outDir/results")
+    SnapshotStore.read(spark, s"$outDir/results", resultsSchemaAt(spark, outDir))
+
+  private def resultsSchemaAt(spark: SparkSession, outDir: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(s"$outDir/results")
+    resultsSchema(isBucketPartitioned(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
+  }
 
   /** Time-travel read: the results table as of snapshot `id` (the
     * VERSION-AS-OF analog; see [[SnapshotStore.readAt]] for the expiry
     * contract). Available once the table carries a manifest.
     */
   def readResultsAt(spark: SparkSession, outDir: String, id: Long): DataFrame =
-    SnapshotStore.readAt(spark, s"$outDir/results", id)
+    SnapshotStore.readAt(spark, s"$outDir/results", id,
+      resultsSchemaAt(spark, outDir))
 
   /** Retention maintenance (Iceberg `expire_snapshots` analog): keep the
     * newest `retainLast` snapshots of the results table, delete the rest's
@@ -225,6 +262,54 @@ object Extract {
     healedParts.write.mode("overwrite").parquet(s"$outDir/lineage")
     healedParts.unpersist(blocking = false)
   }
+
+  /** The `lineage_buckets` rows (≤ nBuckets), read with a fixed schema. */
+  private def readBucketLineage(spark: SparkSession, outDir: String): Seq[LineageTally] =
+    spark.read.schema(bucketLineageSchema(spark))
+      .parquet(s"$outDir/lineage_buckets").collect().toSeq.map(LineageTally.fromRow)
+
+  /** (max `run_id`, count of null `run_id`s) of the partition lineage in one
+    * aggregate; max is -1 for an empty table. A table written before run
+    * ids existed has no such column, so every row reads as null — that
+    * count replaces a separate schema probe. The run log is small, so one
+    * task reads it all and the aggregate needs no shuffle: one job.
+    */
+  private def runIdStats(spark: SparkSession, outDir: String): (Long, Long) = {
+    val r = spark.read.schema(runLineageSchema(spark)).parquet(s"$outDir/lineage")
+      .coalesce(1)
+      .agg(coalesce(max(col("run_id")), lit(-1L)), count_if(col("run_id").isNull))
+      .collect()(0)
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** Start `a` on a new driver thread and return a function that waits for
+    * its value (rethrowing its failure). Spark runs the two threads' jobs
+    * concurrently; a new thread inherits the caller's Spark local properties
+    * (job group, scheduler pool), so its jobs stay attributed to the call.
+    */
+  private def fork[A](a: => A): () => A = {
+    val task = new java.util.concurrent.FutureTask[A](() => a)
+    new Thread(task, "graft-lineage").start()
+    () => try task.get() catch {
+      case e: java.util.concurrent.ExecutionException => throw e.getCause
+    }
+  }
+
+  /** Overwrite `lineage_buckets` with driver-held rows (one file). */
+  private def writeBucketLineage(spark: SparkSession, outDir: String,
+                                 buckets: Seq[LineageTally]): Unit =
+    spark.createDataFrame(buckets.sortBy(_.key).map(t => Row(t.key.map(Long.box).orNull,
+        t.rows_out, t.filtered_rows, t.error_rows, t.md_chars, t.min_conv_id,
+        t.max_conv_id)).asJava, bucketLineageSchema(spark))
+      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/lineage_buckets")
+
+  /** Append one run's partition lineage from driver-held rows (one file). */
+  private def appendRunLineage(spark: SparkSession, outDir: String,
+                               parts: Seq[LineageTally], runId: Long): Unit =
+    spark.createDataFrame(parts.sortBy(_.key).map(t => Row(t.key.get.toInt,
+        t.rows_out, t.filtered_rows, t.error_rows, t.min_conv_id,
+        t.max_conv_id, runId)).asJava, runLineageSchema(spark))
+      .coalesce(1).write.mode("append").parquet(s"$outDir/lineage")
 
   /** Move every part-file from `srcDir` into `dstDir` (fresh UUID names —
     * collisions impossible), returning the qualified destination paths for
@@ -330,6 +415,43 @@ object Extract {
     out.result()
   }
 
+  /** Checkpointed production run (Q3-Q5 semantics, SURVEY §7.3): skip keys
+    * already present in `outDir`, extract only the remainder, append results
+    * + lineage. Idempotent under re-runs and task retries (parquet file
+    * commits are atomic per task attempt); error rows are carried, never
+    * dropped, so a later pass can re-parse them by key. Returns the observed
+    * corpus metrics for the increment.
+    *
+    * Lineage is maintained INCREMENTALLY and in the same pass as the write
+    * (the InkStream idea: derived state is kept consistent by the pass that
+    * changes the base table, not rebuilt by re-reading it):
+    *  - alongside the write, on a second driver thread, one collect of the
+    *    ≤32 `lineage_buckets` rows and one aggregate over the run log (max
+    *    `run_id`, null `run_id`s), both with fixed schemas;
+    *  - the resume anti-join counts the existing results while it scans
+    *    their keys (an observation on the results side);
+    *  - the write's observation tallies the increment per conv_id-hash
+    *    bucket and per write task partition ([[LineageTally]]);
+    *  - the driver merges the bucket tally into the old rows (sums add,
+    *    min/max combine — all associative) and writes both lineage tables
+    *    from driver-held rows: `lineage_buckets` overwritten, the partition
+    *    lineage APPENDED under a fresh `run_id`.
+    * `lineage.part_id` is therefore the task partition of the write that
+    * produced the rows — the run that actually happened. A zero-row resume
+    * writes no lineage at all: its files stay byte-identical (spec-asserted
+    * in GoldenSpec).
+    *
+    * Self-healing: the results append and the lineage writes are separate
+    * non-atomic steps, so a crash between them leaves lineage stale, which a
+    * later zero-row resume would never repair. After the write, from the
+    * numbers already in hand, the run heals (recomputes both tables from the
+    * full results) when the reparse marker exists (reparse keeps the key
+    * set, so the count invariant cannot see its half-patched lineage), when
+    * a lineage table is missing, when a `run_id` is null (a table from
+    * before run ids), when the bucket `rows_out` sum differs from the
+    * observed results count, or when an observation came back empty —
+    * unknown counts as stale, never as a wait.
+    */
   def runCheckpointed(spark: SparkSession, transcriptsPath: String,
                       outDir: String, bucketPartitioned: Boolean = false): Map[String, Any] = {
     val turns = readTranscripts(spark, transcriptsPath)
@@ -346,38 +468,28 @@ object Extract {
     // discovery
     val usePartitioned =
       if (existed) isBucketPartitioned(fs, resultsPath) else bucketPartitioned
-    // self-healing guard for the incremental lineage: the results append
-    // and the lineage writes are separate non-atomic steps, so a crash
-    // between them leaves lineage stale — and a later zero-row resume
-    // would never repair it. The check costs one parquet FOOTER count
-    // (metadata only, no data scan) plus two ≤(32+runs)-row reads; when it
-    // trips, this run falls back to a full lineage recompute.
-    val bucketsPath = new org.apache.hadoop.fs.Path(s"$outDir/lineage_buckets")
-    val lineagePath = new org.apache.hadoop.fs.Path(s"$outDir/lineage")
-    // (only lineage_buckets carries the rows_out == table-count invariant:
-    // the partition-lineage table is an append-only run log whose sums
-    // legitimately exceed the row count once reparseErrors has appended a
-    // re-parse batch)
-    val healNeeded = existed && {
-      if (fs.exists(lineageMarker(outDir))) true // crashed mid-reparse:
-      // results already swapped, lineage patch incomplete — the bucket
-      // invariant below CANNOT catch this (reparse preserves the key set,
-      // so rows_out is unchanged while filtered/error/md_chars are stale)
-      else if (!fs.exists(bucketsPath) || !fs.exists(lineagePath)) true
-      else if (!spark.read.parquet(s"$outDir/lineage").columns.contains("run_id"))
-        true // pre-run_id lineage table (older layout): heal stamps run_id 0
-      else {
-        val resultCount = readResults(spark, outDir).count()
-        val bucketsSum = spark.read.parquet(s"$outDir/lineage_buckets")
-          .agg(coalesce(sum(col("rows_out")), lit(0L))).collect()(0).getLong(0)
-        bucketsSum != resultCount
-      }
+    val markerSet = fs.exists(lineageMarker(outDir))
+    // the lineage state is read alongside the write (it touches neither
+    // lineage table), on a second driver thread
+    val lineageState = fork {
+      val buckets =
+        if (fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/lineage_buckets")))
+          Some(readBucketLineage(spark, outDir))
+        else None
+      val runLog =
+        if (fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/lineage")))
+          Some(runIdStats(spark, outDir))
+        else None
+      (buckets, runLog)
     }
+    val scanned = Observation("resumed_results")
     val remaining =
-      if (existed) resumeFrom(turns, readResults(spark, outDir))
+      if (existed) resumeFrom(turns, readResults(spark, outDir)
+        .select("conv_id", "turn_idx").observe(scanned, count(lit(1)).as("rows")))
       else turns
     val (df, obs) = withObservedMetrics(
-      extract(remaining).sortWithinPartitions("conv_id", "turn_idx"))
+      extract(remaining).sortWithinPartitions("conv_id", "turn_idx"),
+      LineageTally.column(bucketHash(col("conv_id"))).as("lineage"))
     val before = dataFiles()
     // the live set per the manifest, when the table carries one: crash
     // orphans may exist physically but must not enter the next snapshot
@@ -392,7 +504,9 @@ object Extract {
       df.withColumn("bucket", bucketCol(col("conv_id")))
         .write.partitionBy("bucket").mode("append").parquet(s"$outDir/results")
     else df.write.mode("append").parquet(s"$outDir/results")
-    val metrics = obs.get.map { case (k, v) => k -> v }
+    val (oldBuckets, runLog) = lineageState()
+    val written = observed(obs)
+    val metrics = written.getOrElse(Map.empty) - "lineage"
     val incRows = metrics.getOrElse("rows", 0L).asInstanceOf[Long]
     val newFiles = (dataFiles() -- before).toSeq.sorted
     // a manifest-carrying table folds the appended files into a new
@@ -406,45 +520,25 @@ object Extract {
         SnapshotStore.commitRebase(fs, resultsPath, adds = newFiles,
           removes = Seq.empty)
     }
+    // (only lineage_buckets carries the rows_out == table-count invariant:
+    // the partition-lineage table is an append-only run log whose sums
+    // legitimately exceed the row count once reparseErrors has appended a
+    // re-parse batch)
+    val healNeeded = written.isEmpty || existed && (markerSet ||
+      oldBuckets.isEmpty ||
+      runLog.forall { case (_, nullRunIds) => nullRunIds > 0L } ||
+      observed(scanned).map(_("rows").asInstanceOf[Long]) !=
+        Some(oldBuckets.get.map(_.rows_out).sum))
     if (healNeeded) {
-      // stale/missing lineage detected (crashed previous run): recompute
-      // both tables from the full results table — the pre-round-4 shape,
-      // run only when the incremental invariant is broken
       healLineage(spark, outDir)
       fs.delete(lineageMarker(outDir), false) // cleared only after the heal
-    } else if (incRows > 0L && newFiles.nonEmpty) {
-      // the increment, re-read from only this run's files (column-pruned
-      // to the 4 lineage columns by the aggregates below)
-      val inc = spark.read.parquet(newFiles: _*)
-      val incBuckets = bucketLineage(inc)
-      val merged =
-        if (fs.exists(bucketsPath))
-          spark.read.parquet(s"$outDir/lineage_buckets")
-            .unionByName(incBuckets)
-            .groupBy(col("bucket"))
-            .agg(
-              sum(col("rows_out")).as("rows_out"),
-              sum(col("filtered_rows")).as("filtered_rows"),
-              sum(col("error_rows")).as("error_rows"),
-              sum(col("md_chars")).as("md_chars"),
-              min(col("min_conv_id")).as("min_conv_id"),
-              max(col("max_conv_id")).as("max_conv_id"))
-        else incBuckets
-      // ≤ nBuckets rows — materialize eagerly so the overwrite below can't
-      // race its own read of the pre-merge files
-      val mat = merged.localCheckpoint(true)
-      mat.write.mode("overwrite").parquet(s"$outDir/lineage_buckets")
-      mat.unpersist(blocking = false)
-      // physical-partition lineage: one appended batch per run (records the
-      // run that actually happened, rather than re-deriving partitions from
-      // a full re-read of prior runs' files)
-      val runId =
-        if (fs.exists(lineagePath))
-          spark.read.parquet(s"$outDir/lineage")
-            .agg(coalesce(max(col("run_id")), lit(-1L))).collect()(0).getLong(0) + 1L
-        else 0L
-      partitionLineage(inc).withColumn("run_id", lit(runId))
-        .write.mode("append").parquet(s"$outDir/lineage")
+    } else if (incRows > 0L) {
+      val inc = LineageTally.tallies(written.get("lineage").asInstanceOf[Row])
+      val bucketsWritten = fork(writeBucketLineage(spark, outDir,
+        LineageTally.merge(oldBuckets.getOrElse(Seq.empty) ++ inc.buckets)))
+      appendRunLineage(spark, outDir, inc.parts,
+        runLog.fold(0L)(_._1 + 1L))
+      bucketsWritten()
     }
     metrics
   }
@@ -491,11 +585,14 @@ object Extract {
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = lineageMarker(outDir)
     // a crashed previous pass (marker present) or a pre-run_id lineage
-    // table: heal BEFORE taking deltas against it
-    val lineagePath = new org.apache.hadoop.fs.Path(s"$outDir/lineage")
-    if (fs.exists(marker) ||
-        (fs.exists(lineagePath) &&
-          !spark.read.parquet(s"$outDir/lineage").columns.contains("run_id"))) {
+    // table: heal BEFORE taking deltas against it (a healed run log holds
+    // run 0 only)
+    val (maxRunId, nullRunIds) =
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/lineage")))
+        runIdStats(spark, outDir)
+      else (-1L, 0L)
+    val healed = fs.exists(marker) || nullRunIds > 0L
+    if (healed) {
       healLineage(spark, outDir)
       fs.delete(marker, false)
     }
@@ -533,8 +630,8 @@ object Extract {
       val (incDf, obs) = withObservedMetrics(
         extract(turnsErr).sortWithinPartitions("conv_id", "turn_idx"))
       incDf.write.mode("overwrite").parquet(incDir)
-      val metrics = obs.get.map { case (k, v) => k -> v }
-      val inc = spark.read.parquet(incDir)
+      val metrics = observed(obs).getOrElse(Map.empty[String, Any])
+      val inc = spark.read.schema(resultsSchema(false)).parquet(incDir)
 
       // manifest bootstrap BEFORE any file moves: from here on, readers
       // resolve through a committed snapshot, so nothing below is visible
@@ -562,7 +659,8 @@ object Extract {
       // carried, so the bucket is recomputed for routing either way
       val keptSrc =
         if (fullRewrite) results.drop("bucket")
-        else spark.read.parquet(errFiles.toSeq.sorted: _*)
+        else spark.read.schema(resultsSchema(false))
+          .parquet(errFiles.toSeq.sorted: _*)
       val kept = keptSrc.where(col("status") =!= "error")
       if (partitioned)
         kept.withColumn("bucket", bucketCol(col("conv_id")))
@@ -591,7 +689,8 @@ object Extract {
       val newAgg = bucketLineage(inc)
         .select(col("bucket"), col("filtered_rows").as("f_new"),
           col("error_rows").as("e_new"), col("md_chars").as("m_new"))
-      val patched = spark.read.parquet(s"$outDir/lineage_buckets")
+      val patched = spark.read.schema(bucketLineageSchema(spark))
+        .parquet(s"$outDir/lineage_buckets")
         .join(oldAgg, Seq("bucket"), "left")
         .join(newAgg, Seq("bucket"), "left")
         .select(col("bucket"),
@@ -608,8 +707,7 @@ object Extract {
       patched.unpersist(blocking = false)
       oldAgg.unpersist(blocking = false)
 
-      val runId = spark.read.parquet(s"$outDir/lineage")
-        .agg(coalesce(max(col("run_id")), lit(-1L))).collect()(0).getLong(0) + 1L
+      val runId = (if (healed) 0L else maxRunId) + 1L
       partitionLineage(inc).withColumn("run_id", lit(runId))
         .write.mode("append").parquet(s"$outDir/lineage")
       // lineage consistent again: clear the heal marker
@@ -709,7 +807,10 @@ object Extract {
 
   /** Per-partition lineage/metrics table (SURVEY §4 checkpoint/lineage):
     * rows in/out, filtered and error counts per physical partition, written
-    * alongside results for auditability + resume bookkeeping.
+    * alongside results for auditability + resume bookkeeping. The heal and
+    * the reparse pass derive it with this function; [[runCheckpointed]]
+    * writes the same columns from its write-pass [[LineageTally]], where
+    * `part_id` is the write's task partition.
     */
   def partitionLineage(results: DataFrame): DataFrame = {
     results
@@ -735,9 +836,7 @@ object Extract {
     */
   def bucketLineage(results: DataFrame, nBuckets: Int = 32): DataFrame = {
     results
-      .withColumn("bucket",
-        pmod(conv(substring(md5(col("conv_id")), 1, 15), 16, 10).cast("long"),
-          lit(nBuckets.toLong)))
+      .withColumn("bucket", bucketHash(col("conv_id"), nBuckets))
       .groupBy(col("bucket"))
       .agg(
         count(lit(1)).as("rows_out"),

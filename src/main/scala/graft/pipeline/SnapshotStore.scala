@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Poor-man's snapshot manifests for a results table — the plain-parquet
   * stand-in for Iceberg's atomic snapshot commit (COVERAGE.md divergence #2,
@@ -283,18 +284,19 @@ object SnapshotStore {
     }
 
   /** Read a results table through its manifest when present, else as a
-    * plain parquet dir. basePath keeps partition-dir columns (bucket=N)
-    * alive under an explicit file list.
+    * plain parquet dir, with the caller's fixed `schema` (no inference
+    * job). basePath keeps partition-dir columns (bucket=N) alive under an
+    * explicit file list.
     */
-  def read(spark: SparkSession, resultsDir: String): DataFrame = {
+  def read(spark: SparkSession, resultsDir: String, schema: StructType): DataFrame = {
     val p = new Path(resultsDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     liveFiles(fs, p) match {
       case Some(files) if files.nonEmpty =>
-        spark.read.option("basePath", resultsDir).parquet(files: _*)
+        spark.read.schema(schema).option("basePath", resultsDir).parquet(files: _*)
       case Some(_) =>
         throw new IllegalStateException(s"snapshot of $resultsDir lists no files")
-      case None => spark.read.parquet(resultsDir)
+      case None => spark.read.schema(schema).parquet(resultsDir)
     }
   }
 
@@ -303,7 +305,8 @@ object SnapshotStore {
     * files has since been retired by a compaction sweep (the analog of
     * reading an expired snapshot).
     */
-  def readAt(spark: SparkSession, resultsDir: String, id: Long): DataFrame = {
+  def readAt(spark: SparkSession, resultsDir: String, id: Long,
+             schema: StructType): DataFrame = {
     val p = new Path(resultsDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val manifest = snapshots(fs, p).collectFirst { case (`id`, m) => m }
@@ -314,6 +317,6 @@ object SnapshotStore {
       throw new IllegalStateException(
         s"snapshot $id references retired file $missing (expired by compaction)")
     }
-    spark.read.option("basePath", resultsDir).parquet(files: _*)
+    spark.read.schema(schema).option("basePath", resultsDir).parquet(files: _*)
   }
 }
