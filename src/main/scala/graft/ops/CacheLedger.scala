@@ -29,13 +29,16 @@ object CacheLedger {
     * should adapt to data size, not a constant) — correct at every scale,
     * since a genuinely large cached table keeps advisory-sized partitions.
     * Applied here because track() is the single chokepoint every op-level
-    * persist flows through; a user's explicit setting is respected.
+    * persist flows through. A user's explicit setting is respected: the
+    * check is against the session's explicitly set SQL confs, which hold
+    * both the settings given at session creation and any later
+    * `spark.conf.set` (the SparkContext's conf sees only the former).
     */
   private def enableAdaptiveCachePartitioning(df: DataFrame): Unit =
     try {
       val k = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
       val s = df.sparkSession
-      if (!s.sparkContext.getConf.contains(k)) s.conf.set(k, "true")
+      if (!s.conf.getAll.contains(k)) s.conf.set(k, "true")
     } catch { case scala.util.control.NonFatal(_) => }
 
   private[ops] def track(df: DataFrame): DataFrame = {

@@ -1871,29 +1871,24 @@ object DocOps {
   def dedupKeepers(docs: DataFrame, tau: Double = 0.5, maxIters: Int = 25): DataFrame =
     keepersFromEdges(docs, nearDupEdges(docs, tau), maxIters)
 
-  /** [[dedupKeepers]] with an explicit edge set — the same CC fixpoint over
+  /** [[dedupKeepers]] with an explicit edge set — the same CC labels over
     * any near-dup relation (MinHash, SimHash, embedding-cosine), and the
     * entry point the adversarial-scale spec drives with a synthetic
     * high-diameter graph.
+    *
+    * Labels come from [[ComponentLabels.labelsOf]]: an edge set within
+    * `spark.sql.autoBroadcastJoinThreshold` (16 bytes an edge) is solved
+    * on the driver by union-find — it fits one node by Spark's own
+    * broadcast bound, and the fixpoint's ~16 jobs would be pure scheduling
+    * overhead; a larger one runs the [[componentLabels]] fixpoint. Both
+    * give the exact component minima.
     */
   def keepersFromEdges(docs: DataFrame, edges0: DataFrame,
                        maxIters: Int = 25): DataFrame = {
-    // localCheckpoint (EAGER) instead of persist throughout the loop: each
-    // round's plan references the previous round's dataframe TWICE (labels
-    // join nbrMin-of-labels, then the pointer-jump self-join), so without
-    // lineage TRUNCATION the logical plan doubles per round and drags the
-    // whole nearDups subtree along — analysis/optimization time explodes
-    // exponentially (measured: 35 s of pure driver planning at sf0.1).
-    // Checkpointed rounds keep the plan constant-size; the data is
-    // materialized eagerly, which the convergence check needs anyway.
-    val edges = edges0.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
-    // undirected adjacency: propagate labels both ways
-    val adj = edges.union(
-      edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    val (labels, _) = componentLabels(adj, maxIters)
-    // the final label table is checkpointed (already materialized by its
-    // labelSum pass); isolated docs — the corpus majority — join back with
-    // keeper=self in one broadcast-able pass
+    // edge-touched docs only; isolated docs — the corpus majority — join
+    // back with keeper=self (a broadcast join whenever the labels came
+    // back driver-sized)
+    val labels = ComponentLabels.labelsOf(edges0, maxIters)
     docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -1941,9 +1936,11 @@ object DocOps {
     *  1. [[contractEdges]] maps new-edge endpoints through `labels0` —
     *     the label table is an exact contraction of the old graph, so old
     *     edges never need to be revisited;
-    *  2. the alternating-star fixpoint ([[componentLabels]]) runs over the
-    *     contracted graph only — ≤|newEdges| edges, and a single merge of
-    *     two million-doc components is ONE contracted edge;
+    *  2. component labels ([[ComponentLabels.labelsOf]]: driver union-find
+    *     when it fits the broadcast threshold, else the [[componentLabels]]
+    *     fixpoint) over the contracted graph only — ≤|newEdges| edges, and
+    *     a single merge of two million-doc components is ONE contracted
+    *     edge;
     *  3. the relabel table (old root → new root, new doc → root) joins
     *     back over `labels0` on the label column — a join against a
     *     relabel side bounded by the affected components (broadcast-sized
@@ -1953,14 +1950,7 @@ object DocOps {
   def keepersFromEdgesIncremental(docs: DataFrame, labels0: DataFrame,
                                   newEdges: DataFrame,
                                   maxIters: Int = 25): DataFrame = {
-    // eager checkpoint for the same two reasons as keepersFromEdges: the
-    // contracted set is referenced twice (both adjacency directions) and
-    // feeds a fixpoint loop
-    val ce = contractEdges(labels0, newEdges)
-      .localCheckpoint(true)
-    val adj = ce.union(
-      ce.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    val (relabel, _) = componentLabels(adj, maxIters)
+    val relabel = ComponentLabels.labelsOf(contractEdges(labels0, newEdges), maxIters)
     docs.select(col("doc_id"))
       .join(labels0.select(col("doc_id"), col("keeper_doc_id")), Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -1992,11 +1982,7 @@ object DocOps {
   def keepersDeltaIncremental(newDocIds: DataFrame, labels0: DataFrame,
                               newEdges: DataFrame,
                               maxIters: Int = 25): DataFrame = {
-    val ce = contractEdges(labels0, newEdges)
-      .localCheckpoint(true)
-    val adj = ce.union(
-      ce.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    val (relabel, _) = componentLabels(adj, maxIters)
+    val relabel = ComponentLabels.labelsOf(contractEdges(labels0, newEdges), maxIters)
     // appended docs: edge-touched ones are contracted-graph nodes under
     // their own id (they have no labels0 entry), isolated ones label self
     val newLab = newDocIds.select(col("doc_id"))
@@ -2031,6 +2017,12 @@ object DocOps {
     * stagnated to Θ(diameter) there, because a region minimum only extends
     * its reach O(1) hops per round once label chains stop composing).
     * Returns the (doc_id, label) table and the number of rounds.
+    *
+    * This is the route for edge sets that do NOT fit one node: the keeper
+    * paths reach it through [[ComponentLabels.labelsOf]], which solves an
+    * edge set within `spark.sql.autoBroadcastJoinThreshold` on the driver
+    * instead (same labels; ~16 fewer jobs on a one-round graph) and hands
+    * everything larger — or everything, at a threshold ≤ 0 — to this loop.
     *
     * Two structural rules for ANY Spark fixpoint loop, both load-bearing:
     *  - eager checkpoint per round, or the logical plan doubles per round

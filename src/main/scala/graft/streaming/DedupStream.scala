@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.ops.DocOps
 
@@ -11,8 +12,8 @@ import graft.ops.DocOps
   * fingerprints ONLY its own documents, probes the persisted rep-level
   * SimHash band index for collisions (verification is bit_count(xor) on
   * fingerprints already stored in the index — the historical corpus is
-  * never re-read), and maintains the keeper-label table via the
-  * contracted-graph CC fixpoint ([[DocOps.keepersFromEdgesIncremental]]).
+  * never re-read), and maintains the keeper-label table via CC labels of
+  * the contracted graph ([[DocOps.keepersDeltaIncremental]]).
   *
   * State layout under `stateDir` (plain parquet, versioned by batch id —
   * round 8: every version is a DELTA, so per-batch bytes WRITTEN are
@@ -33,13 +34,23 @@ import graft.ops.DocOps
   * same inputs and overwrites the same delta, so the state after "crash
   * between write and offset-commit, then replay" is byte-identical to the
   * clean run (spec-asserted). Versions are never mutated in place, so a
-  * reader never observes a half-written table.
+  * reader never observes a half-written table. Within a batch the index
+  * delta is written BEFORE the label delta: [[nextBatchId]] keys off the
+  * label versions, so a crash between the two writes leaves batch B
+  * unfinished and the replay overwrites both — the other order would
+  * advance past a batch whose reps never reached the index, and every
+  * later batch would silently miss its edges (spec-asserted).
   *
   * 100-TB shape: per-batch COMPUTE is O(batch + collisions) — batch-only
   * fingerprints (one partial agg), an equi-join against the index
   * (doc-count-proportional: maxDist+1 longs per distinct fingerprint), and
-  * a CC fixpoint over the CONTRACTED graph (≤ batch-incident edges) — and
-  * as of round 8 per-batch state I/O is delta-sized too (the pre-r8 layout
+  * CC labels over the CONTRACTED graph (≤ batch-incident edges). While
+  * that graph fits `spark.sql.autoBroadcastJoinThreshold` — the steady
+  * state, whatever the corpus size — its CC is solved on the driver
+  * ([[graft.ops.ComponentLabels.labelsOf]]) and the relabel joins
+  * broadcast, so a batch pays no distributed fixpoint; a batch whose
+  * contracted graph outgrows the threshold runs the star fixpoint. As
+  * of round 8 per-batch state I/O is delta-sized too (the pre-r8 layout
   * rewrote the full index ∪ labels every batch, O(corpus-state) writes —
   * the r7 verdict's top perf weak). Reads of the label chain grow with
   * version count; a long-running deployment folds the chain periodically
@@ -47,6 +58,14 @@ import graft.ops.DocOps
   * compaction discipline the snapshot store applies to manifests.
   */
 object DedupStream {
+
+  // the written schemas of the two deltas: reads pass them instead of
+  // inferring them, which costs one Spark job per version read
+  private val IndexSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("simhash", LongType),
+    StructField("chunk_idx", IntegerType), StructField("chunk_val", LongType)))
+  private val LabelsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("keeper_doc_id", LongType)))
 
   private def versions(spark: SparkSession, stateDir: String,
                        prefix: String, below: Long): Seq[Long] = {
@@ -71,7 +90,7 @@ object DedupStream {
                 below: Long = Long.MaxValue): DataFrame = {
     val vs = versions(spark, stateDir, "index_v", below)
     require(vs.nonEmpty, s"no index_v* below $below under $stateDir")
-    vs.map(v => spark.read.parquet(s"$stateDir/index_v$v")).reduce(_.union(_))
+    spark.read.schema(IndexSchema).parquet(vs.map(v => s"$stateDir/index_v$v"): _*)
   }
 
   /** The live keeper table as of (strictly below) `below`: per doc_id the
@@ -84,8 +103,8 @@ object DedupStream {
     import org.apache.spark.sql.expressions.Window
     val vs = versions(spark, stateDir, "labels_v", below)
     require(vs.nonEmpty, s"no labels_v* below $below under $stateDir")
-    val chain = vs.map(v => spark.read.parquet(s"$stateDir/labels_v$v")
-      .select(col("doc_id"), col("keeper_doc_id"), lit(v).as("_v")))
+    val chain = vs.map(v => spark.read.schema(LabelsSchema)
+        .parquet(s"$stateDir/labels_v$v").withColumn("_v", lit(v)))
       .reduce(_.union(_))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("_v").desc)
     chain.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
@@ -113,24 +132,25 @@ object DedupStream {
       case None =>
         // bootstrap: the full tables ARE the first delta
         val b = batch.localCheckpoint(true)
+        DocOps.simhashIndex(b, maxDist).write.mode("overwrite").parquet(idxOut)
         DocOps.keepersFromEdges(b, DocOps.simhashEdges(b, maxDist))
           .write.mode("overwrite").parquet(labOut)
-        DocOps.simhashIndex(b, maxDist).write.mode("overwrite").parquet(idxOut)
       case Some(_) =>
         val oldIdx = readIndex(spark, stateDir, batchId)
         val labels0 = readLabels(spark, stateDir, batchId)
         val b = batch.localCheckpoint(true)
         val (edges, newIdx) = DocOps.simhashEdgesAppend(oldIdx, b, maxDist)
-        // label delta: the batch's docs + merged-component relabels only —
-        // per-batch bytes written are batch-incident (round 8; the r7
-        // layout rewrote the FULL labels ∪ index per batch)
-        DocOps.keepersDeltaIncremental(b.select(col("doc_id")), labels0, edges)
-          .write.mode("overwrite").parquet(labOut)
         // index delta: the batch's rep band rows alone; reps are per-batch
         // minima, so cross-batch fingerprint collisions keep one rep per
         // (batch, fingerprint) — harmless for correctness (their hamming-0
         // pair is already an edge) and bounded by batch count
         newIdx.write.mode("overwrite").parquet(idxOut)
+        // label delta, written last (see "Replay safety"): the batch's docs
+        // + merged-component relabels only — per-batch bytes written are
+        // batch-incident (round 8; the r7 layout rewrote the FULL
+        // labels ∪ index per batch)
+        DocOps.keepersDeltaIncremental(b.select(col("doc_id")), labels0, edges)
+          .write.mode("overwrite").parquet(labOut)
     }
   }
 

@@ -1,0 +1,197 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ops.{ComponentLabels, DocOps}
+import graft.streaming.DedupStream
+
+/** The size-dispatched CC labels: the driver union-find route (edge set
+  * within `spark.sql.autoBroadcastJoinThreshold`) and the star-fixpoint
+  * route give every keeper path the same labels and the same output
+  * schema, nullability included — on the 10k-node adversarial path, on a
+  * graph whose append merges old components, and with an edge set one
+  * byte over the threshold, where the capped collect overflows.
+  */
+class ComponentLabelsSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private var spark: SparkSession = _
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder()
+      .master("local[4]")
+      .appName("component-labels-spec")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+  }
+
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private def withThreshold[T](bytes: Option[Long])(f: => T): T = {
+    bytes.foreach(b => spark.conf.set(Threshold, b.toString))
+    try f finally spark.conf.unset(Threshold)
+  }
+
+  /** Collected rows, sorted, and the schema of `f` under each threshold:
+    * None = the session default, which the driver route takes here.
+    */
+  private def underThresholds(thresholds: Seq[Option[Long]])(f: => DataFrame)
+      : Seq[(Seq[(Long, Long)], String)] =
+    thresholds.map(t => withThreshold(t) {
+      val df = f
+      (df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted,
+        df.schema.treeString)
+    })
+
+  /** Whether `labelsOf` took the driver route (its result is a local
+    * relation) under `threshold`.
+    */
+  private def driverRoute(edges: DataFrame, threshold: Option[Long]): Boolean =
+    withThreshold(threshold) {
+      ComponentLabels.labelsOf(edges, 25).queryExecution.logical
+        .collectLeaves().exists(_.isInstanceOf[LocalRelation])
+    }
+
+  private def bitrev14(i: Int): Long = {
+    var v = 0L
+    for (b <- 0 until 14) if ((i & (1 << b)) != 0) v |= 1L << (13 - b)
+    v
+  }
+
+  test("driver route is taken exactly while the edges fit the threshold (16 B an edge)") {
+    val s = spark
+    import s.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("doc_a", "doc_b")
+    assert(driverRoute(edges, None))
+    assert(driverRoute(edges, Some(48L)))
+    assert(!driverRoute(edges, Some(47L)))
+    assert(!driverRoute(edges, Some(-1L)))
+    assert(!driverRoute(edges, Some(0L)))
+    // non-long ids keep the fixpoint route, whatever the threshold
+    assert(!driverRoute(edges.select($"doc_a".cast("int").as("doc_a"),
+      $"doc_b".cast("int").as("doc_b")), None))
+  }
+
+  test("keepersFromEdges: both routes agree on the 10k-node bit-reversed path") {
+    val s = spark
+    import s.implicits._
+    val n = 10000
+    val ids = (0 until n).map(bitrev14)
+    val edges = ids.zip(ids.tail).toDF("doc_a", "doc_b").localCheckpoint(true)
+    val docs = (ids ++ Seq(20000L, 20001L)).toDF("doc_id")
+    assert(driverRoute(edges, None))
+    // default (driver) vs one byte short of the edges (the capped collect
+    // overflows and the fixpoint runs)
+    val Seq(driver, fixpoint) = underThresholds(Seq(None, Some(16L * (n - 1) - 1)))(
+      DocOps.keepersFromEdges(docs, edges, maxIters = 30))
+    assert(driver === fixpoint)
+    val labels = driver._1.toMap
+    assert(ids.forall(i => labels(i) === ids.min))
+    assert(labels(20000L) === 20000L && labels(20001L) === 20001L)
+  }
+
+  test("all three keeper paths agree across routes on a graph with old-component merges") {
+    val s = spark
+    import s.implicits._
+    // old graph: two path components (ids decorrelated from path order) +
+    // isolated docs; the append hangs a chain off B, merges A and B with
+    // one edge, adds an edge inside A (collapses under contraction) and an
+    // isolated new doc
+    val n = 500
+    val idsA = (0 until n).map(i => bitrev14(i) + 1)
+    val idsB = (0 until n).map(i => 100000L + bitrev14(i))
+    def path(ids: Seq[Long]) = ids.zip(ids.tail)
+    val oldEdges = (path(idsA) ++ path(idsB)).toDF("doc_a", "doc_b").localCheckpoint(true)
+    val oldDocs = (idsA ++ idsB ++ Seq(900001L, 900002L)).toDF("doc_id")
+    val labels0 = DocOps.keepersFromEdges(oldDocs, oldEdges).localCheckpoint(true)
+    val newIds = Seq(950000L, 950001L, 950002L, 960000L)
+    val newEdges = Seq((idsB(321), 950000L), (950000L, 950001L), (950001L, 950002L),
+      (idsA(123), idsB(77)), (idsA(5), idsA(400))).toDF("doc_a", "doc_b")
+      .localCheckpoint(true)
+    val allDocs = oldDocs.union(newIds.toDF("doc_id")).localCheckpoint(true)
+    val contracted = DocOps.contractEdges(labels0, newEdges).count()
+    assert(contracted === 4L)
+
+    def agree(name: String, edgeCount: Long)(f: => DataFrame): Seq[(Long, Long)] = {
+      val runs = underThresholds(Seq(None, Some(-1L), Some(16L * edgeCount - 1)))(f)
+      runs.tail.foreach(r => assert(r === runs.head, name))
+      runs.head._1
+    }
+    val full = agree("keepersFromEdges", 2L * (n - 1) + 5)(
+      DocOps.keepersFromEdges(allDocs, oldEdges.union(newEdges)))
+    val inc = agree("keepersFromEdgesIncremental", contracted)(
+      DocOps.keepersFromEdgesIncremental(allDocs, labels0, newEdges))
+    assert(inc === full)
+    val delta = agree("keepersDeltaIncremental", contracted)(
+      DocOps.keepersDeltaIncremental(newIds.toDF("doc_id"), labels0, newEdges))
+    // the delta: the appended docs + every old doc of merged component B
+    val minAB = (idsA ++ idsB).min
+    assert(delta.toMap === (newIds.map(d => d -> full.toMap.apply(d)) ++
+      idsB.map(_ -> minAB)).toMap)
+    assert(full.toMap.apply(950002L) === minAB && full.toMap.apply(960000L) === 960000L)
+  }
+
+  test("edges with a null endpoint join nothing on either route") {
+    val s = spark
+    import s.implicits._
+    val edges = Seq[(Option[Long], Option[Long])]((Some(5L), Some(3L)),
+      (Some(3L), None), (None, Some(1L)), (Some(9L), Some(5L)), (None, None))
+      .toDF("doc_a", "doc_b")
+    val docs = Seq(1L, 3L, 5L, 9L, 11L).toDF("doc_id")
+    val Seq(driver, fixpoint) = underThresholds(Seq(None, Some(-1L)))(
+      DocOps.keepersFromEdges(docs, edges))
+    assert(driver === fixpoint)
+    assert(driver._1.toMap === Map(1L -> 1L, 3L -> 3L, 5L -> 3L, 9L -> 3L, 11L -> 11L))
+    // the raw labels agree too, apart from the fixpoint's (null, null) node
+    val Seq(dl, fl) = Seq(None, Some(-1L)).map(t => withThreshold(t) {
+      val l = ComponentLabels.labelsOf(edges, 25)
+      (l.where($"doc_id".isNotNull).collect().map(r => (r.getLong(0), r.getLong(1)))
+        .toSeq.sorted, l.schema)
+    })
+    assert(dl === fl)
+    assert(dl._1 === Seq(1L -> 1L, 3L -> 3L, 5L -> 3L, 9L -> 3L))
+  }
+
+  test("DedupStream writes the same labels and parquet schemas on both routes") {
+    val s = spark
+    import s.implicits._
+    def words(from: Int, to: Int): String = (from to to).map(i => s"tok$i").mkString(" ")
+    val batches = Seq(
+      Seq((1L, words(1, 20)), (2L, words(2, 21)), (3L, words(100, 119))),
+      Seq((10L, words(1, 20)), (11L, words(200, 219))),
+      Seq((20L, words(200, 219)), (21L, words(200, 219)), (22L, words(300, 319))))
+    val work = java.nio.file.Files.createTempDirectory("graft-cc-routes").toFile.getAbsolutePath
+    def footer(dir: String): (String, String) = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val part = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+        .minBy(_.getName)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(part.getAbsolutePath), conf))
+      try {
+        val meta = r.getFooter.getFileMetaData
+        (meta.getSchema.toString,
+          meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      } finally r.close()
+    }
+    val runs = Seq(None, Some(-1L)).zipWithIndex.map { case (t, i) =>
+      val state = s"$work/state$i"
+      withThreshold(t) {
+        batches.zipWithIndex.foreach { case (b, v) =>
+          DedupStream.processBatch(spark, state, b.toDF("doc_id", "text"), v.toLong)
+        }
+      }
+      (DedupStream.readLabels(spark, state).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap,
+        batches.indices.map(v => footer(s"$state/labels_v$v")))
+    }
+    assert(runs(0)._1 === runs(1)._1)
+    assert(runs(0)._2 === runs(1)._2)
+    assert(runs(0)._1(20L) === 11L && runs(0)._1(10L) === 1L)
+  }
+}

@@ -1,0 +1,148 @@
+package graft
+
+import java.io.IOException
+import java.net.URI
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.DedupStream
+
+/** `crashfs:` — the local file system, except that while [[CrashFs.armed]]
+  * it fails the set-up of the SECOND output directory a write commits
+  * into: a process that dies between the two state writes of a batch.
+  */
+class CrashFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("crashfs:///")
+  override def getScheme: String = "crashfs"
+  override def mkdirs(f: Path): Boolean = { CrashFs.check(f); super.mkdirs(f) }
+  override def mkdirs(f: Path, p: FsPermission): Boolean = { CrashFs.check(f); super.mkdirs(f, p) }
+}
+
+object CrashFs {
+  @volatile var armed = false
+  private val outputs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  // the output directory of a write: the parent of its FIRST `_temporary`
+  private val Staging = "(?:.*?/)?([^/]+)/_temporary(?:/.*)?".r
+
+  def arm(): Unit = { outputs.clear(); armed = true }
+
+  private def check(f: Path): Unit = f.toUri.getPath match {
+    case Staging(out) if armed =>
+      outputs.add(out)
+      if (outputs.size > 1) throw new IOException(s"injected crash before writing $out")
+    case _ =>
+  }
+}
+
+/** Per-batch cost and crash safety of [[DedupStream.processBatch]]: the
+  * Spark job budget of a bootstrap and of an appended batch, and that a
+  * crash between a batch's two state writes never lets [[DedupStream.nextBatchId]]
+  * skip the batch.
+  */
+class DedupStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private var spark: SparkSession = _
+  private val jobs = new AtomicInteger
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder()
+      .master("local[4]")
+      .appName("dedup-stream-spec")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    })
+  }
+
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toFile.getAbsolutePath
+
+  private def counted[T](f: => T): (T, Int) = {
+    ListenerBusDrain(spark.sparkContext)
+    jobs.set(0)
+    val v = f
+    ListenerBusDrain(spark.sparkContext)
+    (v, jobs.get)
+  }
+
+  /** Seeded random-word documents (30 words of a 2000-word vocabulary):
+    * batch 0 holds ids 0-149, batch 1 ids 1000-1149; every 10th doc of a
+    * batch copies an earlier text of the same batch, every 7th doc of
+    * batch 1 a text of batch 0 — so both batches have near-dup edges and
+    * batch 1 merges into batch 0's components.
+    */
+  private def fixtureBatches(): Seq[DataFrame] = {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(7)
+    def text(): String = Seq.fill(30)(s"w${rnd.nextInt(2000)}").mkString(" ")
+    val b0 = (0 until 150).map(_ => text()).toArray
+    (10 until 150 by 10).foreach(i => b0(i) = b0(i - 3))
+    val b1 = (0 until 150).map(_ => text()).toArray
+    (10 until 150 by 10).foreach(i => b1(i) = b1(i - 5))
+    (7 until 150 by 7).foreach(i => b1(i) = b0(i))
+    Seq(b0.indices.map(i => (i.toLong, b0(i))).toDF("doc_id", "text"),
+      b1.indices.map(i => (1000L + i, b1(i))).toDF("doc_id", "text"))
+  }
+
+  private def labels(state: String): Map[Long, Long] =
+    DedupStream.readLabels(spark, state).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("job budget per batch: bootstrap <=15, append <=18") {
+    // counts include AQE's one job per shuffle stage. Measured 13 and 16;
+    // 32 and 38 before CC labels were size-dispatched (each batch ran the
+    // star fixpoint) and state reads took fixed schemas (one inference
+    // job per version read)
+    val state = tmp("graft-dedup-jobs")
+    val Seq(b0, b1) = fixtureBatches()
+    val (_, boot) = counted(DedupStream.processBatch(spark, state, b0, 0L))
+    val (_, append) = counted(DedupStream.processBatch(spark, state, b1, 1L))
+    info(s"jobs: bootstrap $boot, append $append")
+    val l = labels(state)
+    assert(l.size === 300 && l(1007L) === l(7L) && l(10L) === 7L)
+    assert(boot <= 15, s"bootstrap ran $boot jobs")
+    assert(append <= 18, s"append ran $append jobs")
+  }
+
+  test("a crash between a batch's two writes is replayed, not skipped") {
+    val s = spark
+    import s.implicits._
+    val words = (from: Int) => (from until from + 20).map(i => s"tok$i").mkString(" ")
+    // doc 20 copies doc 10, which arrives in the batch the crash hits
+    val batches = Seq(
+      Seq((1L, words(0)), (2L, words(100))),
+      Seq((10L, words(200)), (11L, words(300))),
+      Seq((20L, words(200)), (21L, words(400)))).map(_.toDF("doc_id", "text"))
+    val clean = s"crashfs://${tmp("graft-dedup-clean")}/state"
+    batches.indices.foreach(b => DedupStream.processBatch(spark, clean, batches(b), b.toLong))
+    assert(labels(clean)(20L) === 10L)
+
+    val crashed = s"crashfs://${tmp("graft-dedup-crash")}/state"
+    DedupStream.processBatch(spark, crashed, batches(0), 0L)
+    CrashFs.arm()
+    try intercept[Exception](DedupStream.processBatch(spark, crashed, batches(1), 1L))
+    finally CrashFs.armed = false
+    // a direct caller resumes where the state says it stands
+    val next = DedupStream.nextBatchId(spark, crashed)
+    (next until batches.length).foreach(b =>
+      DedupStream.processBatch(spark, crashed, batches(b.toInt), b))
+    assert(labels(crashed) === labels(clean))
+    assert(next === 1L)
+  }
+}

@@ -1452,4 +1452,21 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       copies.map(_._3).sorted.toSeq === (0L until fct)
     })
   }
+
+  test("CacheLedger keeps a runtime-set canChangeCachedPlanOutputPartitioning") {
+    val s = spark
+    import s.implicits._
+    val k = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val d = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z"))
+      .toDF("doc_id", "text")
+    spark.conf.set(k, "false")
+    try {
+      // simhashKeepers persists through CacheLedger.track
+      assert(DocOps.simhashKeepers(d).collect().length === 3)
+      assert(spark.conf.get(k) === "false")
+    } finally {
+      spark.conf.unset(k)
+      graft.ops.CacheLedger.release()
+    }
+  }
 }
