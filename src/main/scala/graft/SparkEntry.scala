@@ -256,9 +256,9 @@ object SparkEntry {
       val isNew = pmod(DocOps.md5Hash60(
         concat(lit("batch:"), col("doc_id").cast("string"))), lit(4L)) === 0L
       val b1 = d.where(!isNew)
-      val labels1 = DocOps.keepersFromEdges(b1, DocOps.nearDupEdges(b1, tau = 0.5))
-      val (eNew, _) = DocOps.nearDupEdgesAppend(
-        d, DocOps.minhashBandIndex(b1), d.where(isNew), tau = 0.5)
+      val (e1, idx1) = DocOps.nearDupEdgesAppend(None, b1, tau = 0.5)
+      val labels1 = DocOps.keepersFromEdges(b1, e1)
+      val (eNew, _) = DocOps.nearDupEdgesAppend(Some((b1, idx1)), d.where(isNew), tau = 0.5)
       DocOps.keepersFromEdgesIncremental(d, labels1, eNew).orderBy("doc_id")
     }),
 
@@ -287,9 +287,9 @@ object SparkEntry {
       val isNew = pmod(DocOps.md5Hash60(
         concat(lit("sbatch:"), col("doc_id").cast("string"))), lit(4L)) === 0L
       val b1 = d.where(!isNew)
-      val labels1 = DocOps.keepersFromEdges(b1, DocOps.simhashEdges(b1, maxDist = 3))
-      val (eNew, _) = DocOps.simhashEdgesAppend(
-        DocOps.simhashIndex(b1), d.where(isNew), maxDist = 3)
+      val (e1, idx1) = DocOps.simhashEdgesAppend(None, b1, maxDist = 3)
+      val labels1 = DocOps.keepersFromEdges(b1, e1)
+      val (eNew, _) = DocOps.simhashEdgesAppend(Some(idx1), d.where(isNew), maxDist = 3)
       DocOps.keepersFromEdgesIncremental(d, labels1, eNew).orderBy("doc_id")
     }),
 

@@ -15,6 +15,20 @@ import org.apache.spark.sql.functions._
   *    agg (128 mins); candidate generation joins on (band, hash) buckets so
   *    the O(n²) pair space never materializes; exact-Jaccard verification
   *    touches only candidate pairs.
+  *
+  * Near-dup dedup has ONE step per family — `minhashTrunk` and
+  * `simhashTrunk` — and batch dedup is that step with no prior state.
+  * The state an append carries is the union of the earlier steps' band
+  * rows at representative level (MinHash: (doc_id, band_idx, band_hash),
+  * 64 rows per distinct text; SimHash: (doc_id, simhash, chunk_idx,
+  * chunk_val), maxDist+1 rows per distinct fingerprint) plus the keeper
+  * labels (doc_id, keeper_doc_id). A step returns the edges incident to its
+  * batch and its own band rows; [[keepersFromEdges]] (no state) or
+  * [[keepersFromEdgesIncremental]] / [[keepersDeltaIncremental]] turn the
+  * edges into labels. The MinHash append also takes the OLD docs — old
+  * only, never old ∪ batch — to verify old candidates by exact Jaccard;
+  * the SimHash append verifies from the fingerprints in the index alone.
+  * [[graft.streaming.DedupStream]] keeps this state as parquet deltas.
   */
 object DocOps {
 
@@ -131,39 +145,128 @@ object DocOps {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** Full MinHash+LSH near-dup pipeline with exact verification.
+  /** What one near-dup step over a batch yields, for both families, with
+    * or without prior state. The batch collapses to ONE representative per
+    * `key` (MinHash: the text's md5 digest `g`; SimHash: the fingerprint
+    * `simhash`), the min doc_id of the key's group, and only
+    * representatives band, join and verify:
+    *  - `members` (key, doc_id) of every batch doc;
+    *  - `starGroups` (key, rep) of the groups that get star edges: ≥2
+    *    members, and for MinHash a text that shingles at all;
+    *  - `repPairs` the verified rep pairs (doc_a < doc_b, plus the family's
+    *    score columns);
+    *  - `bands` the batch reps' band rows: the index delta a caller
+    *    persists for the next append.
+    */
+  private case class DedupStep(key: String, members: DataFrame, starGroups: DataFrame,
+                               repPairs: DataFrame, bands: DataFrame) {
+    /** The LINEAR-SIZE edge feed for connected components: one edge per
+      * verified rep pair plus one (rep, member) STAR edge per
+      * non-representative member of a star group — O(groups + members)
+      * edges, where the pair report expands a duplicate group to k² pairs.
+      * Every member is one hop from its rep, which carries all cross-group
+      * edges, so the transitive closure equals the expanded pair
+      * relation's (spec-asserted, incl. a degenerate 10k-copy group).
+      */
+    def edges: DataFrame = {
+      val star = members.join(starGroups, Seq(key))
+        .where(col("doc_id") =!= col("rep"))
+        .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
+      repPairs.select(col("doc_a"), col("doc_b")).union(star)
+    }
+  }
+
+  /** The one MinHash near-dup step: digest-collapse the batch → shingle its
+    * representatives → signatures → LSH band candidates → exact-Jaccard
+    * verify → star edges. Batch dedup is this step with no prior state;
+    * an append passes `old` = (the OLD docs, their stored band index) —
+    * old docs only, never old ∪ batch: the batch reps' shingles are
+    * already in hand, and the old text the step reads is exactly the old
+    * CANDIDATE docs (one semi-join-pruned shingle pass).
     *
-    * Scale hardening (round 2): identical texts collapse to ONE
-    * representative (min doc_id per md5 digest) BEFORE shingling — a
-    * degenerate cluster of k identical documents would otherwise put k
-    * copies into every one of its LSH buckets (k² candidate pairs through
-    * the shuffle); after collapsing it costs one representative plus a
-    * digest-keyed expansion join. The shingle table persists on DISK_ONLY:
-    * at corpus scale the distinct-shingle explosion is larger than the
-    * corpus itself and an in-memory cache would thrash. Output semantics
-    * are unchanged (verified by the LSH≡brute spec): cross-group pairs
-    * inherit their representatives' exact Jaccard (identical shingle sets),
-    * within-group pairs are J=1.0 by definition — emitted only for groups
-    * whose text shingles at all (≥ k words), like the direct formulation.
+    * The digest collapse keeps a degenerate group of k identical docs from
+    * putting k copies into each of its LSH buckets (k² candidate pairs
+    * through the shuffle): the group costs one representative and its
+    * star edges.
+    *
+    * Without state the candidate join is the band self-join; with state
+    * the batch reps probe old ∪ batch band rows, so (new, new) and
+    * (new, old) collisions both surface and old↔old pairs — already in the
+    * old edge set's closure — never do. The old-state branches are built
+    * only when state exists.
+    *
+    * Persists: the (digest, doc_id) membership table (doc-count-sized,
+    * read by reps and both star sides — unpersisted, each branch re-hashes
+    * the corpus text), the rep table, the rep shingles on DISK_ONLY (at
+    * corpus scale the distinct-shingle explosion outgrows the corpus) and
+    * the signatures, one 128-long row per shingled rep whose key set
+    * doubles as the shingled-rep set of the star gate.
+    */
+  private def minhashTrunk(newDocs: DataFrame, tau: Double,
+                           old: Option[(DataFrame, DataFrame)]): DedupStep = {
+    import org.apache.spark.storage.StorageLevel.{DISK_ONLY, MEMORY_AND_DISK}
+    val members = CacheLedger.track(
+      newDocs.select(md5(col("text")).as("g"), col("doc_id")).persist(MEMORY_AND_DISK))
+    val reps = CacheLedger.track(
+      members.groupBy(col("g"))
+        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_members"))
+        .persist(MEMORY_AND_DISK))
+    val repDocs = newDocs.join(reps.select(col("doc_id")), Seq("doc_id"), "left_semi")
+    val sh = CacheLedger.track(shingles(repDocs).persist(DISK_ONLY))
+    val sigs = CacheLedger.track(minhashSignatures(sh).persist(MEMORY_AND_DISK))
+    val bands = lshBands(sigs)
+
+    def keyed(df: DataFrame, side: String): DataFrame =
+      df.select(col("band_idx"), col("band_hash"), col("doc_id").as(s"doc_$side"))
+    val index = old.fold(keyed(bands, "b"))(o => keyed(o._2, "b").union(keyed(bands, "b")))
+    val (a, b) = (col("doc_a"), col("doc_b"))
+    // without state a < b already orients the pair, and passing the probe's
+    // doc_id through keeps the signature agg's hash partitioning, which the
+    // distinct reuses (a computed least(...) column costs it a shuffle)
+    val oriented =
+      if (old.isEmpty) Seq(a, b) else Seq(least(a, b).as("doc_a"), greatest(a, b).as("doc_b"))
+    val candidates = keyed(bands, "a").join(index, Seq("band_idx", "band_hash"))
+      .where(if (old.isEmpty) a < b else a =!= b)
+      .select(oriented: _*)
+      .distinct()
+    val verifySh = old.fold(sh) { case (oldDocs, _) =>
+      // no distinct: a semi-join probe side tolerates duplicates
+      val candIds = candidates.select(a.as("doc_id")).union(candidates.select(b.as("doc_id")))
+      sh.union(shingles(oldDocs.join(candIds, Seq("doc_id"), "left_semi")))
+    }
+    val repPairs = verifyJaccard(candidates, verifySh, tau)
+
+    val starGroups = reps.where(col("n_members") >= 2)
+      .join(sigs.select(col("doc_id")), Seq("doc_id"), "left_semi")
+      .select(col("g"), col("doc_id").as("rep"))
+    DedupStep("g", members, starGroups, repPairs, bands)
+  }
+
+  /** Full MinHash+LSH near-dup pair REPORT with exact verification: the
+    * `minhashTrunk` step with no state, its rep pairs expanded to every
+    * (member of A, member of B) pair. Cross-group pairs inherit their
+    * representatives' exact Jaccard (identical shingle sets); within-group
+    * pairs are J=1.0 by definition — emitted only for groups whose text
+    * shingles at all (≥ k words), like the direct formulation (LSH ≡ brute
+    * spec). Quadratic in duplicate-group size by contract; the CC feed is
+    * [[nearDupEdges]].
     */
   def nearDups(docs: DataFrame, tau: Double = 0.5): DataFrame = {
-    val (members, reps, shingledReps, _, repPairs) = nearDupCore(docs, tau)
-
-    // expand representative pairs to every (member of A, member of B)
-    val repToG = reps.select(col("g"), col("doc_id").as("rep"))
-    val cross = repPairs
-      .join(repToG.select(col("g").as("ga"), col("rep").as("doc_a")), Seq("doc_a"))
-      .join(repToG.select(col("g").as("gb"), col("rep").as("doc_b")), Seq("doc_b"))
-      .join(members.select(col("g").as("ga"), col("doc_id").as("a")), Seq("ga"))
-      .join(members.select(col("g").as("gb"), col("doc_id").as("b")), Seq("gb"))
+    val t = minhashTrunk(docs, tau, None)
+    val members = t.members
+    def member(g: String, id: String): DataFrame =
+      members.select(col("g").as(g), col("doc_id").as(id))
+    // rep → its group → every member of the group, on both sides
+    val cross = t.repPairs
+      .join(member("ga", "doc_a"), Seq("doc_a"))
+      .join(member("gb", "doc_b"), Seq("doc_b"))
+      .join(member("ga", "a"), Seq("ga"))
+      .join(member("gb", "b"), Seq("gb"))
       .select(least(col("a"), col("b")).as("doc_a"),
         greatest(col("a"), col("b")).as("doc_b"), col("jaccard"))
 
-    // identical-doc pairs (J = 1.0), only where the text produces shingles
-    // (shingledReps = the signature agg's key set — no extra shingle pass)
-    val dupGroups = reps.where(col("n_members") >= 2)
-      .join(shingledReps, Seq("doc_id"), "left_semi")
-      .select(col("g"))
+    // identical-doc pairs (J = 1.0) of the groups that shingle
+    val dupGroups = t.starGroups.select(col("g"))
     val m1 = members.join(dupGroups, Seq("g")).select(col("g"), col("doc_id").as("doc_a"))
     val m2 = members.join(dupGroups, Seq("g")).select(col("g"), col("doc_id").as("doc_b"))
     val within = m1.join(m2, Seq("g"))
@@ -173,181 +276,38 @@ object DocOps {
     cross.union(within).orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** Shared trunk of [[nearDups]] and [[nearDupEdges]]: digest-collapse →
-    * shingle representatives → LSH candidates → exact-Jaccard verify.
-    * Returns (members, reps, shingledRepIds, repShingles, repPairs).
-    *
-    * Round 8: the SIGNATURE table is the persisted intermediate (one
-    * 128-long row per shingled rep) instead of the 64-rows-per-doc band
-    * table — the band rows are a cheap projection over it, and its doc_id
-    * column doubles as the shingled-rep set both callers previously
-    * recomputed with a full extra pass + distinct over the shingle table
-    * (`sh.select(doc_id).distinct()` ≡ the signature agg's key set: both
-    * are exactly the docs with ≥1 shingle row). One less corpus-wide
-    * aggregation per query (guide §2.4 — keyed operations share a pass).
-    */
-  private def nearDupCore(docs: DataFrame, tau: Double)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // the (digest, doc_id) membership table is referenced by several
-    // branches (reps, both expansion/star sides) — without a persist each
-    // branch re-hashes the ENTIRE corpus text; the table itself is
-    // doc-count-proportional (36 B/doc), never corpus-bytes
-    val members = CacheLedger.track(
-      docs.select(md5(col("text")).as("g"), col("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val reps = CacheLedger.track(
-      members.groupBy(col("g"))
-        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_members"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val repDocs = docs.join(reps.select(col("doc_id")), Seq("doc_id"), "left_semi")
-
-    val sh = CacheLedger.track(shingles(repDocs)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    val sigs = CacheLedger.track(minhashSignatures(sh)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val bands = lshBands(sigs)
-    val a = bands.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_a"))
-    val b = bands.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_b"))
-    val candidates = a.join(b, Seq("band_idx", "band_hash"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-    val repPairs = verifyJaccard(candidates, sh, tau)
-    (members, reps, sigs.select(col("doc_id")), sh, repPairs)
-  }
-
   /** LINEAR-SIZE edge feed for connected components — same components as
-    * [[nearDups]]' pair relation, O(groups + members) edges instead of the
-    * pair report's deliberate k² expansion of duplicate groups.
-    *
-    * Emits exactly:
-    *  - one (rep_a, rep_b) edge per verified representative pair — the
-    *    cross-group connectivity;
-    *  - one (rep, member) STAR edge per non-representative member of every
-    *    duplicate group that shingles at all (< k-word texts produce no
-    *    pairs in nearDups, so their groups stay disconnected here too).
-    *
-    * Union-of-stars + rep pairs has the identical transitive closure as
-    * the expanded pair relation (every member is ≤1 hop from its rep,
-    * which carries all cross-group edges), so [[keepersFromEdges]] over
-    * this feed is byte-identical to the expanded feed — spec-asserted,
-    * including a degenerate 10k-copy duplicate group that costs 9,999 star
-    * edges here vs ~5·10⁷ expanded pairs. This is the CC input; the pair
-    * relation keeps its report contract (per-pair Jaccard) in [[nearDups]].
+    * [[nearDups]]' pair relation: the `minhashTrunk` step with no state,
+    * rep pairs + (rep, member) star edges (`DedupStep.edges`); a 10k-copy
+    * group costs 9,999 star edges here vs ~5·10⁷ expanded pairs.
     */
-  def nearDupEdges(docs: DataFrame, tau: Double = 0.5): DataFrame = {
-    val (members, reps, shingledReps, _, repPairs) = nearDupCore(docs, tau)
-    val starGroups = reps.where(col("n_members") >= 2)
-      .join(shingledReps, Seq("doc_id"), "left_semi")
-      .select(col("g"), col("doc_id").as("rep"))
-    val star = members.join(starGroups, Seq("g"))
-      .where(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-    repPairs.select(col("doc_a"), col("doc_b")).union(star)
-  }
+  def nearDupEdges(docs: DataFrame, tau: Double = 0.5): DataFrame =
+    minhashTrunk(docs, tau, None).edges
 
-  /** Persistable LSH band index of a corpus at REPRESENTATIVE level —
-    * the state [[nearDupEdgesAppend]] carries between batches: exactly the
-    * (band_idx, band_hash, doc_id) rows [[nearDupCore]] builds internally
-    * (digest collapse → rep shingles → minhash → bands), 64 longs-rows per
-    * distinct text. Write it to parquet next to the keeper labels after
-    * each run; at 100 TB it is doc-count-proportional (~1.5 KB/rep),
-    * never corpus-bytes.
-    */
-  def minhashBandIndex(docs: DataFrame): DataFrame = {
-    val reps = docs.select(md5(col("text")).as("g"), col("doc_id"))
-      .groupBy(col("g")).agg(min(col("doc_id")).as("doc_id"))
-    val repDocs = docs.join(reps.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    lshBands(minhashSignatures(shingles(repDocs)))
-  }
-
-  /** INCREMENTAL near-dup edge generation across appends (round 7) — the
-    * companion of [[keepersFromEdgesIncremental]], completing the
-    * incremental dedup story: a 100-TB pipeline appends batches and must
-    * not re-signature the whole corpus per batch. Given the old corpus's
-    * persisted [[minhashBandIndex]] and the appended batch, returns
-    * `(edges, newIndexRows)` where `edges` are the near-dup edges INCIDENT
-    * TO THE BATCH (rep pairs with ≥1 new endpoint + star edges of the
-    * batch's duplicate groups) and `newIndexRows` are the batch reps' band
-    * rows (persist `oldIndex ∪ newIndexRows` for the next append).
+  /** One MinHash dedup APPEND — the `minhashTrunk` step over `newDocs`,
+    * returning `(edges, indexRows)`: the near-dup edges INCIDENT TO THE
+    * BATCH (rep pairs with ≥1 batch endpoint + the batch's star edges) and
+    * the batch reps' band rows (64 per distinct text). `old` = (the OLD
+    * docs, the union of the earlier index rows), or None for the first
+    * batch — then the edges are exactly [[nearDupEdges]](newDocs).
     *
-    * Cost is batch-proportional, never corpus-proportional: the expensive
-    * full-corpus passes (shingle explode → 128-hash minhash aggregation →
-    * banding) run ONLY over the batch's representatives; the old corpus
-    * participates through its stored band rows (one equi-join) and
-    * through exact-Jaccard verification restricted to CANDIDATE docs (a
-    * semi-join-pruned shingle pass over candidates only, the same
-    * candidates-only contract as [[verifyJaccard]] in the batch path).
+    * Cost is batch-proportional: shingles, signatures and bands run over
+    * the batch's reps only; the old corpus enters through its stored band
+    * rows (one equi-join) and through the shingles of old CANDIDATE docs.
     *
-    * Closure composition (spec-asserted): signatures are pure functions of
-    * text, so a batch doc identical or near-dup to ANY old doc collides
-    * with that doc's representative in band space exactly as it would have
-    * in a full-batch run — `oldEdges ∪ edges` has the same transitive
-    * closure as a from-scratch [[nearDupEdges]] over the full corpus, and
-    * [[keepersFromEdgesIncremental]](allDocs, labels, edges) equals the
-    * full recompute (the `doc_dedup_keepers_incr` oracle certifies the
-    * whole chain index→edges→contracted-fixpoint against the recursive-CTE
-    * closure). Old↔old pairs are deliberately absent (they are in the old
-    * edge set's closure already); new↔old-member pairs are covered through
-    * the old member's rep + its old star edge.
+    * Closure composition (spec-asserted, incl. chained appends from empty
+    * state ≡ [[dedupKeepers]]): signatures are pure functions of text, so a
+    * batch doc identical or near-dup to ANY old doc collides with that
+    * doc's rep in band space exactly as in a full run — old edges ∪ these
+    * edges have the closure of [[nearDupEdges]] over old ∪ batch, and
+    * [[keepersFromEdgesIncremental]] over them equals the full recompute.
+    * New↔old-member pairs are covered through the old member's rep and
+    * its old star edge.
     */
-  def nearDupEdgesAppend(allDocs: DataFrame, oldIndex: DataFrame,
-                         newDocs: DataFrame, tau: Double = 0.5)
-      : (DataFrame, DataFrame) = {
-    // batch-local digest collapse, same as nearDupCore
-    val members = CacheLedger.track(
-      newDocs.select(md5(col("text")).as("g"), col("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val reps = CacheLedger.track(
-      members.groupBy(col("g"))
-        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_members"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val repDocs = newDocs.join(reps.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    val shNew = CacheLedger.track(shingles(repDocs)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    // the ONLY signature/band computation — batch reps, nobody else.
-    // Round 8: persist the signatures (one row per shingled rep) and band
-    // them by projection — the signature key set doubles as the
-    // shingled-rep set below (was a full extra shNew pass + distinct)
-    val sigsNew = CacheLedger.track(minhashSignatures(shNew)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val newBands = lshBands(sigsNew)
-
-    // batch reps probe the union index: (new,new) and (new,old) collisions
-    val probe = newBands.select(col("band_idx"), col("band_hash"),
-      col("doc_id").as("doc_a"))
-    val index = oldIndex.select(col("band_idx"), col("band_hash"),
-        col("doc_id").as("doc_b"))
-      .union(newBands.select(col("band_idx"), col("band_hash"),
-        col("doc_id").as("doc_b")))
-    val candidates = probe.join(index, Seq("band_idx", "band_hash"))
-      .where(col("doc_a") =!= col("doc_b"))
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .distinct()
-
-    // exact verify over CANDIDATE docs only: semi-join-prune the corpus,
-    // then shingle just those docs (candidate-proportional, the one place
-    // old text is touched)
-    // no distinct: a semi-join probe side tolerates duplicates, and the
-    // dedup shuffle would cost more than the duplicate probe rows
-    val candIds = candidates.select(col("doc_a").as("doc_id"))
-      .union(candidates.select(col("doc_b").as("doc_id")))
-    val shVerify = CacheLedger.track(
-      shingles(allDocs.join(candIds, Seq("doc_id"), "left_semi"))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    val verified = verifyJaccard(candidates, shVerify, tau)
-
-    // star edges for the batch's duplicate groups (shingling gate, as in
-    // nearDupEdges; the signature key set IS the shingled-rep set)
-    val starGroups = reps.where(col("n_members") >= 2)
-      .join(sigsNew.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("g"), col("doc_id").as("rep"))
-    val star = members.join(starGroups, Seq("g"))
-      .where(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-
-    (verified.select(col("doc_a"), col("doc_b")).union(star), newBands)
+  def nearDupEdgesAppend(old: Option[(DataFrame, DataFrame)], newDocs: DataFrame,
+                         tau: Double = 0.5): (DataFrame, DataFrame) = {
+    val t = minhashTrunk(newDocs, tau, old)
+    (t.edges, t.bands)
   }
 
   /** Brute-force n-gram Jaccard over ALL pairs via shingle inverted index —
@@ -406,61 +366,69 @@ object DocOps {
           split(trim(col("text")), "\\s+")).as("simhash"))
       .where(col("simhash").isNotNull)
 
-  /** Shared trunk of [[simhashPairs]] and [[simhashEdges]] (round 7 —
-    * the same duplicate-group hardening [[nearDupCore]] got in round 2,
-    * but keyed one level deeper): docs collapse to ONE representative per
-    * FINGERPRINT VALUE (min doc_id per simhash) before banding. The
-    * fingerprint is a pure function of the text, so a degenerate group of
-    * k byte-identical docs would otherwise put k copies into EVERY one of
-    * its maxDist+1 chunk buckets — ~(maxDist+1)·k² candidate rows through
-    * the self-join shuffle before `.distinct()`; after collapsing it
-    * costs one representative per group plus a fingerprint-keyed
-    * expansion join. Collapsing on the fingerprint (not a text digest)
-    * is strictly stronger — it also merges non-identical texts that
-    * fingerprint alike — and strictly cheaper: no second text hash, no
-    * corpus rescan to select representative DOCS (the fingerprint table
-    * is already computed for every doc, and only (doc_id, long) rows ever
-    * shuffle). Returns
-    * (members(simhash, doc_id), reps(simhash, doc_id, n_members),
-    *  repPairs(doc_a, doc_b, sh_a, sh_b, hamming)) — rep pairs keep both
-    * fingerprints so expansion to members is a direct join, no
-    * rep→group-key hop.
+  /** The one SimHash near-dup step: collapse the batch to ONE
+    * representative per FINGERPRINT VALUE (min doc_id per simhash) → band
+    * the reps → chunk candidates verified by Hamming distance → star edges.
+    * Batch dedup is this step with no prior state; an append passes the
+    * stored band index of the earlier batches. The stored rows carry the
+    * full fingerprint, so verification is `bit_count(xor)` on columns
+    * already in the join — the OLD CORPUS IS NEVER READ, only its index.
+    *
+    * Collapsing on the fingerprint (not a text digest) is strictly
+    * stronger than the MinHash digest collapse — it also merges
+    * non-identical texts that fingerprint alike — and cheaper: no second
+    * text hash, and only (doc_id, long) rows ever shuffle. A degenerate
+    * group of k identical docs costs one rep instead of ~(maxDist+1)·k²
+    * candidate rows.
     *
     * Pigeonhole band trick: the 60-bit fingerprint splits into maxDist+1
     * chunks — any pair within Hamming distance maxDist agrees exactly on
-    * ≥1 chunk, so an equi-join on (chunk_idx, chunk_value) finds every
-    * such pair without an O(n²) scan.
+    * ≥1 chunk, so an equi-join on (chunk_idx, chunk_val) finds every such
+    * pair without an O(n²) scan. Without state the join is the self-join
+    * (doc_a < doc_b); with state the batch reps probe old ∪ batch rows and
+    * `least`/`greatest` orient the pair, fingerprints following their
+    * docs. Rep pairs keep both fingerprints (sh_a, sh_b) so
+    * [[simhashPairs]] expands to members by a direct join. The old-state
+    * branch is built only when state exists.
     */
-  private def simhashCore(docs: DataFrame, maxDist: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    // same persist rationale as nearDupCore: the fingerprint table feeds
-    // reps + both expansion sides; it is doc-count-proportional
-    // (doc_id + one long), never corpus-bytes
-    val members = CacheLedger.track(
-      simhash(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  private def simhashTrunk(newDocs: DataFrame, maxDist: Int,
+                           oldIndex: Option[DataFrame]): DedupStep = {
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // the fingerprint table feeds reps and both star sides; it is
+    // doc-count-proportional (doc_id + one long), never corpus-bytes
+    val members = CacheLedger.track(simhash(newDocs).persist(MEMORY_AND_DISK))
     val reps = CacheLedger.track(
       members.groupBy(col("simhash"))
         .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_members"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // banding is a cheap projection over the persisted (distinct-
-    // fingerprint) rep table — no third persist needed
-    val banded = simhashBandRows(reps, maxDist)
-    val a = banded.select(col("chunk_idx"), col("chunk_val"),
-      col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
-    val b = banded.select(col("chunk_idx"), col("chunk_val"),
-      col("doc_id").as("doc_b"), col("simhash").as("sh_b"))
+        .persist(MEMORY_AND_DISK))
+    // banding is a cheap projection over the persisted rep table
+    val bands = simhashBandRows(reps.select(col("doc_id"), col("simhash")), maxDist)
+
+    def keyed(df: DataFrame, side: String): DataFrame = df.select(col("chunk_idx"),
+      col("chunk_val"), col("doc_id").as(s"doc_$side"), col("simhash").as(s"sh_$side"))
+    val index = oldIndex.fold(keyed(bands, "b"))(o => keyed(o, "b").union(keyed(bands, "b")))
+    val (a, b, lo) = (col("doc_a"), col("doc_b"), col("doc_a") < col("doc_b"))
+    val (shA, shB) = (col("sh_a"), col("sh_b"))
+    // without state a < b already orients the pair, and passing the probe's
+    // columns through keeps the rep agg's hash partitioning on sh_a, which
+    // the distinct reuses (computed columns cost it a shuffle)
+    val oriented =
+      if (oldIndex.isEmpty) Seq(a, b, shA, shB)
+      else Seq(least(a, b).as("doc_a"), greatest(a, b).as("doc_b"),
+        when(lo, shA).otherwise(shB).as("sh_a"), when(lo, shB).otherwise(shA).as("sh_b"))
     // hamming filter BEFORE the dedup shuffle: chunk collisions are mostly
     // far pairs (15 shared bits say little about the other 45), so the
-    // filter drops them map-side and only near pairs reach the distinct —
-    // semantics unchanged (hamming is a pure function of the pair)
-    val repPairs = a.join(b, Seq("chunk_idx", "chunk_val"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("sh_a"), col("sh_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
+    // filter drops them map-side and only near pairs reach the distinct
+    val repPairs = keyed(bands, "a").join(index, Seq("chunk_idx", "chunk_val"))
+      .where(if (oldIndex.isEmpty) lo else a =!= b)
+      .select(oriented :+ bit_count(shA.bitwiseXOR(shB)).cast("long").as("hamming"): _*)
       .where(col("hamming") <= maxDist)
       .distinct()
-    (members, reps, repPairs)
+
+    // every doc fingerprints, so every group of ≥2 stars (no shingle gate)
+    val starGroups = reps.where(col("n_members") >= 2)
+      .select(col("simhash"), col("doc_id").as("rep"))
+    DedupStep("simhash", members, starGroups, repPairs, bands)
   }
 
   /** Pigeonhole band rows (doc_id, simhash, chunk_idx, chunk_val) of a
@@ -477,124 +445,59 @@ object DocOps {
       }: _*)).as(Seq("chunk_idx", "chunk_val")))
   }
 
-  /** Persistable SimHash band index of a corpus at REPRESENTATIVE
-    * (distinct-fingerprint) level — the state [[simhashEdgesAppend]]
-    * carries between batches: exactly the (doc_id, simhash, chunk_idx,
-    * chunk_val) rows [[simhashCore]] bands internally, maxDist+1 rows per
-    * distinct fingerprint. Doc-count-proportional; write next to the
-    * keeper labels after each run.
-    */
-  def simhashIndex(docs: DataFrame, maxDist: Int = 3): DataFrame =
-    simhashBandRows(
-      simhash(docs).groupBy(col("simhash")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), col("simhash")),
-      maxDist)
-
-  /** INCREMENTAL SimHash edge generation across appends (round 7) — the
-    * [[nearDupEdgesAppend]] sibling, and the cheaper of the two: the
-    * stored band rows carry the full fingerprint, so candidate
-    * verification is `bit_count(xor)` on columns already in the join —
-    * the OLD CORPUS IS NEVER READ, only its index. Fingerprints are
-    * computed for the appended batch alone; batch reps probe
-    * oldIndex ∪ newBands for (new,new)/(new,old) chunk collisions.
-    * Returns (edges incident to the batch, the batch's index rows —
-    * persist `oldIndex ∪ newIndexRows` for the next append).
+  /** One SimHash dedup APPEND — the `simhashTrunk` step over `newDocs`,
+    * returning `(edges, indexRows)`: the edges incident to the batch and
+    * the batch reps' band rows (maxDist+1 per distinct fingerprint).
+    * `oldIndex` = the union of the earlier index rows, or None for the
+    * first batch — then the edges are exactly [[simhashEdges]](newDocs).
     *
-    * Closure composition (spec-asserted): fingerprints are pure functions
-    * of text, so `oldEdges ∪ edges` has the same transitive closure as a
-    * from-scratch [[simhashEdges]] over the full corpus, and
-    * [[keepersFromEdgesIncremental]] over it equals the full recompute
-    * (the `doc_simhash_keepers_incr` oracle replays the full recursive
-    * closure over the independently recomputed pair relation).
+    * Closure composition (spec-asserted, incl. chained appends from empty
+    * state ≡ [[simhashKeepers]]): fingerprints are pure functions of text,
+    * so old edges ∪ these edges have the closure of [[simhashEdges]] over
+    * old ∪ batch, and [[keepersFromEdgesIncremental]] over them equals the
+    * full recompute (the `doc_simhash_keepers_incr` oracle).
     */
-  def simhashEdgesAppend(oldIndex: DataFrame, newDocs: DataFrame,
+  def simhashEdgesAppend(oldIndex: Option[DataFrame], newDocs: DataFrame,
                          maxDist: Int = 3): (DataFrame, DataFrame) = {
-    val members = CacheLedger.track(
-      simhash(newDocs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val reps = CacheLedger.track(
-      members.groupBy(col("simhash"))
-        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_members"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val newBands = CacheLedger.track(
-      simhashBandRows(reps.select(col("doc_id"), col("simhash")), maxDist)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-    val probe = newBands.select(col("chunk_idx"), col("chunk_val"),
-      col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
-    val index = oldIndex.select(col("chunk_idx"), col("chunk_val"),
-        col("doc_id").as("doc_b"), col("simhash").as("sh_b"))
-      .union(newBands.select(col("chunk_idx"), col("chunk_val"),
-        col("doc_id").as("doc_b"), col("simhash").as("sh_b")))
-    // same filter-before-distinct ordering as simhashCore: far pairs die
-    // map-side, the dedup shuffle sees only near candidates
-    val pairs = probe.join(index, Seq("chunk_idx", "chunk_val"))
-      .where(col("doc_a") =!= col("doc_b"))
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
-      .where(col("hamming") <= maxDist)
-      .distinct()
-
-    val starGroups = reps.where(col("n_members") >= 2)
-      .select(col("simhash"), col("doc_id").as("rep"))
-    val star = members.join(starGroups, Seq("simhash"))
-      .where(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-
-    (pairs.select(col("doc_a"), col("doc_b")).union(star), newBands)
+    val t = simhashTrunk(newDocs, maxDist, oldIndex)
+    (t.edges, t.bands)
   }
 
   /** Near-dup pairs by SimHash Hamming distance ≤ maxDist. Output is the
-    * full pair REPORT — quadratic on duplicate groups by contract — but as
-    * of round 7 it is GENERATED from O(k) shuffled data: representatives
-    * band and self-join ([[simhashCore]]), verified rep pairs expand to
-    * members through fingerprint-keyed joins, and within-group pairs are
-    * Hamming 0 by definition (groups ARE fingerprint-equality classes), so
-    * every group of ≥2 emits its member pairs without touching the
-    * candidate shuffle. Byte-identical to the direct formulation
-    * ([[simhashPairsDirect]], spec-asserted); use [[simhashEdges]] as the
-    * CC feed when the k² report rows are not themselves the deliverable.
+    * full pair REPORT — quadratic on duplicate groups by contract — but
+    * GENERATED from O(k) shuffled data: the `simhashTrunk` step with no
+    * state, its rep pairs expanded to members through fingerprint-keyed
+    * joins; within-group pairs are Hamming 0 by definition (groups ARE
+    * fingerprint-equality classes). Byte-identical to the direct
+    * formulation ([[simhashPairsDirect]], spec-asserted); use
+    * [[simhashEdges]] as the CC feed when the k² report rows are not
+    * themselves the deliverable.
     */
   def simhashPairs(docs: DataFrame, maxDist: Int = 3): DataFrame = {
-    val (members, reps, repPairs) = simhashCore(docs, maxDist)
-
+    val t = simhashTrunk(docs, maxDist, None)
     // ONE expansion pass for both pair classes: the fingerprint-pair
     // relation is the verified cross pairs PLUS a hamming-0 self-pair per
-    // duplicate fingerprint (within-group — every doc fingerprints, so
-    // unlike the shingle path there is no ≥k-words gate). Members join in
-    // on each side; cross rows produce each unordered doc pair exactly
-    // once (docs have one fingerprint each), self rows produce both
-    // orderings so the a<b guard dedups them — no distinct needed.
-    val fpPairs = repPairs.select(col("sh_a"), col("sh_b"), col("hamming"))
-      .union(reps.where(col("n_members") >= 2)
-        .select(col("simhash").as("sh_a"), col("simhash").as("sh_b"),
-          lit(0L).as("hamming")))
+    // duplicate fingerprint. Members join in on each side; cross rows
+    // produce each unordered doc pair exactly once (docs have one
+    // fingerprint each), self rows produce both orderings so the a<b
+    // guard dedups them — no distinct needed.
+    val fpPairs = t.repPairs.select(col("sh_a"), col("sh_b"), col("hamming"))
+      .union(t.starGroups.select(col("simhash").as("sh_a"), col("simhash").as("sh_b"),
+        lit(0L).as("hamming")))
     fpPairs
-      .join(members.select(col("simhash").as("sh_a"), col("doc_id").as("a")), Seq("sh_a"))
-      .join(members.select(col("simhash").as("sh_b"), col("doc_id").as("b")), Seq("sh_b"))
+      .join(t.members.select(col("simhash").as("sh_a"), col("doc_id").as("a")), Seq("sh_a"))
+      .join(t.members.select(col("simhash").as("sh_b"), col("doc_id").as("b")), Seq("sh_b"))
       .where(col("sh_a") =!= col("sh_b") || col("a") < col("b"))
       .select(least(col("a"), col("b")).as("doc_a"),
         greatest(col("a"), col("b")).as("doc_b"), col("hamming"))
   }
 
   /** The DIRECT (no fingerprint collapse) formulation — the reference
-    * implementation the equivalence spec compares [[simhashPairs]] against,
-    * and the measured-cheaper path for corpora KNOWN to be pre-deduplicated
-    * (the collapse's rep aggregation + expansion joins are pure overhead
-    * when every doc is its own representative — ~0.7–1.0 s of the 2.6 s
-    * sf0.1 row, see BENCH.md round 7). Quadratic through the candidate
-    * shuffle on duplicate groups — NEVER use on raw crawl data.
+    * [[simhashPairs]] is spec-asserted against. Quadratic through the
+    * candidate shuffle on duplicate groups.
     */
-  def simhashPairsDirect(docs: DataFrame, maxDist: Int = 3): DataFrame = {
-    val chunks = maxDist + 1
-    val width = SimhashBits / chunks
-    val fp = simhash(docs)
-    val banded = CacheLedger.track(fp.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until chunks).map { j =>
-        shiftright(col("simhash"), j * width)
-          .bitwiseAND(lit((1L << width) - 1))
-      }: _*)).as(Seq("chunk_idx", "chunk_val")))
+  private[graft] def simhashPairsDirect(docs: DataFrame, maxDist: Int = 3): DataFrame = {
+    val banded = CacheLedger.track(simhashBandRows(simhash(docs), maxDist)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = banded.select(col("chunk_idx"), col("chunk_val"),
       col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
@@ -609,23 +512,14 @@ object DocOps {
   }
 
   /** LINEAR-SIZE edge feed for connected components over the SimHash
-    * near-dup relation — the [[nearDupEdges]] sibling: one (rep_a, rep_b)
-    * edge per verified representative pair plus one (rep, member) STAR
-    * edge per non-representative member of every duplicate group. Every
-    * group of ≥2 stars (no shingling gate — every doc fingerprints), so
-    * the transitive closure is identical to [[simhashPairs]]' pair
-    * relation (spec-asserted incl. a degenerate 10k-copy group costing
-    * O(k) edges); feed to [[keepersFromEdges]] / [[simhashKeepers]].
+    * near-dup relation: the `simhashTrunk` step with no state, rep pairs
+    * + (rep, member) star edges (`DedupStep.edges`). Every group of ≥2
+    * stars, so the closure is identical to [[simhashPairs]]' pair relation
+    * (spec-asserted incl. a degenerate 10k-copy group costing O(k) edges);
+    * feed to [[keepersFromEdges]] / [[simhashKeepers]].
     */
-  def simhashEdges(docs: DataFrame, maxDist: Int = 3): DataFrame = {
-    val (members, reps, repPairs) = simhashCore(docs, maxDist)
-    val starGroups = reps.where(col("n_members") >= 2)
-      .select(col("simhash"), col("doc_id").as("rep"))
-    val star = members.join(starGroups, Seq("simhash"))
-      .where(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-    repPairs.select(col("doc_a"), col("doc_b")).union(star)
-  }
+  def simhashEdges(docs: DataFrame, maxDist: Int = 3): DataFrame =
+    simhashTrunk(docs, maxDist, None).edges
 
   /** Keeper assignment over the SimHash near-dup graph: keeper = MIN
     * doc_id of the connected component, via the same alternating
@@ -1979,9 +1873,9 @@ object DocOps {
     * fixpoint over the contracted graph yields true merged-component
     * minima, and an old doc's label changes iff its old root's does.
     */
-  def keepersDeltaIncremental(newDocIds: DataFrame, labels0: DataFrame,
-                              newEdges: DataFrame,
-                              maxIters: Int = 25): DataFrame = {
+  private[graft] def keepersDeltaIncremental(newDocIds: DataFrame, labels0: DataFrame,
+                                             newEdges: DataFrame,
+                                             maxIters: Int = 25): DataFrame = {
     val relabel = ComponentLabels.labelsOf(contractEdges(labels0, newEdges), maxIters)
     // appended docs: edge-touched ones are contracted-graph nodes under
     // their own id (they have no labels0 entry), isolated ones label self

@@ -13,7 +13,10 @@ import graft.ops.DocOps
   * SimHash band index for collisions (verification is bit_count(xor) on
   * fingerprints already stored in the index — the historical corpus is
   * never re-read), and maintains the keeper-label table via CC labels of
-  * the contracted graph ([[DocOps.keepersDeltaIncremental]]).
+  * the contracted graph ([[DocOps.keepersDeltaIncremental]]). Every batch,
+  * the first included, is one [[DocOps.simhashEdgesAppend]] step: the
+  * bootstrap is the step with no prior state, so its deltas are the
+  * batch's rep band rows and its [[DocOps.keepersFromEdges]] labels.
   *
   * State layout under `stateDir` (plain parquet, versioned by batch id —
   * round 8: every version is a DELTA, so per-batch bytes WRITTEN are
@@ -122,36 +125,28 @@ object DedupStream {
   /** Process one micro-batch of documents(doc_id, text, …) against the
     * state under `stateDir`, writing the `index_v<batchId>` and
     * `labels_v<batchId>` DELTAS. Exposed for direct (non-streaming) use
-    * and for replay-idempotence testing.
+    * and for replay-idempotence testing. The state is read only when a
+    * prior version exists.
     */
   def processBatch(spark: SparkSession, stateDir: String, batch: DataFrame,
                    batchId: Long, maxDist: Int = 3): Unit = {
-    val idxOut = s"$stateDir/index_v$batchId"
-    val labOut = s"$stateDir/labels_v$batchId"
-    latestVersion(spark, stateDir, "labels_v", batchId) match {
-      case None =>
-        // bootstrap: the full tables ARE the first delta
-        val b = batch.localCheckpoint(true)
-        DocOps.simhashIndex(b, maxDist).write.mode("overwrite").parquet(idxOut)
-        DocOps.keepersFromEdges(b, DocOps.simhashEdges(b, maxDist))
-          .write.mode("overwrite").parquet(labOut)
-      case Some(_) =>
-        val oldIdx = readIndex(spark, stateDir, batchId)
-        val labels0 = readLabels(spark, stateDir, batchId)
-        val b = batch.localCheckpoint(true)
-        val (edges, newIdx) = DocOps.simhashEdgesAppend(oldIdx, b, maxDist)
-        // index delta: the batch's rep band rows alone; reps are per-batch
-        // minima, so cross-batch fingerprint collisions keep one rep per
-        // (batch, fingerprint) — harmless for correctness (their hamming-0
-        // pair is already an edge) and bounded by batch count
-        newIdx.write.mode("overwrite").parquet(idxOut)
-        // label delta, written last (see "Replay safety"): the batch's docs
-        // + merged-component relabels only — per-batch bytes written are
-        // batch-incident (round 8; the r7 layout rewrote the FULL
-        // labels ∪ index per batch)
-        DocOps.keepersDeltaIncremental(b.select(col("doc_id")), labels0, edges)
-          .write.mode("overwrite").parquet(labOut)
+    val prior = latestVersion(spark, stateDir, "labels_v", batchId)
+    val oldIdx = prior.map(_ => readIndex(spark, stateDir, batchId))
+    val b = batch.localCheckpoint(true)
+    val (edges, newIdx) = DocOps.simhashEdgesAppend(oldIdx, b, maxDist)
+    // index delta: the batch's rep band rows alone; reps are per-batch
+    // minima, so cross-batch fingerprint collisions keep one rep per
+    // (batch, fingerprint) — harmless for correctness (their hamming-0
+    // pair is already an edge) and bounded by batch count
+    newIdx.write.mode("overwrite").parquet(s"$stateDir/index_v$batchId")
+    // label delta, written last (see "Replay safety"): the batch's docs +
+    // merged-component relabels only, batch-incident bytes
+    val labels = prior match {
+      case None => DocOps.keepersFromEdges(b, edges)
+      case Some(_) => DocOps.keepersDeltaIncremental(
+        b.select(col("doc_id")), readLabels(spark, stateDir, batchId), edges)
     }
+    labels.write.mode("overwrite").parquet(s"$stateDir/labels_v$batchId")
   }
 
   /** foreachBatch sink maintaining the dedup state. Attach with

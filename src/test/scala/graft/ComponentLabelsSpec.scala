@@ -166,19 +166,7 @@ class ComponentLabelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((10L, words(1, 20)), (11L, words(200, 219))),
       Seq((20L, words(200, 219)), (21L, words(200, 219)), (22L, words(300, 319))))
     val work = java.nio.file.Files.createTempDirectory("graft-cc-routes").toFile.getAbsolutePath
-    def footer(dir: String): (String, String) = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val part = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
-        .minBy(_.getName)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(part.getAbsolutePath), conf))
-      try {
-        val meta = r.getFooter.getFileMetaData
-        (meta.getSchema.toString,
-          meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-      } finally r.close()
-    }
+    def footer(dir: String) = ParquetFooter(spark.sparkContext.hadoopConfiguration, dir)
     val runs = Seq(None, Some(-1L)).zipWithIndex.map { case (t, i) =>
       val state = s"$work/state$i"
       withThreshold(t) {

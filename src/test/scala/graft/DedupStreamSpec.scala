@@ -12,6 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ops.DocOps
 import graft.streaming.DedupStream
 
 /** `crashfs:` — the local file system, except that while [[CrashFs.armed]]
@@ -104,11 +105,8 @@ class DedupStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     DedupStream.readLabels(spark, state).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("job budget per batch: bootstrap <=15, append <=18") {
-    // counts include AQE's one job per shuffle stage. Measured 13 and 16;
-    // 32 and 38 before CC labels were size-dispatched (each batch ran the
-    // star fixpoint) and state reads took fixed schemas (one inference
-    // job per version read)
+  test("job budget per batch: bootstrap <=10, append <=18") {
+    // counts include AQE's one job per shuffle stage; measured 10 and 15
     val state = tmp("graft-dedup-jobs")
     val Seq(b0, b1) = fixtureBatches()
     val (_, boot) = counted(DedupStream.processBatch(spark, state, b0, 0L))
@@ -116,8 +114,40 @@ class DedupStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     info(s"jobs: bootstrap $boot, append $append")
     val l = labels(state)
     assert(l.size === 300 && l(1007L) === l(7L) && l(10L) === 7L)
-    assert(boot <= 15, s"bootstrap ran $boot jobs")
+    assert(boot <= 10, s"bootstrap ran $boot jobs")
     assert(append <= 18, s"append ran $append jobs")
+  }
+
+  test("bootstrap writes the batch's rep band rows and its batch keepers, schemas included") {
+    val state = tmp("graft-dedup-boot")
+    val b0 = fixtureBatches().head.localCheckpoint(true)
+    DedupStream.processBatch(spark, state, b0, 0L)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def written(df: DataFrame, name: String): String = {
+      val dir = s"${tmp("graft-dedup-want")}/$name"
+      df.write.parquet(dir)
+      dir
+    }
+    def rows(dir: String) = spark.read.parquet(dir).collect().map(_.toSeq).toSet
+
+    // rep band rows: one rep (min doc_id) per distinct fingerprint, and
+    // maxDist+1 = 4 chunks of 15 bits of that fingerprint
+    val width = DocOps.SimhashBits / 4
+    val reps = DocOps.simhash(b0).collect().map(r => r.getLong(0) -> r.getLong(1))
+      .groupBy(_._2).map { case (fp, ids) => ids.map(_._1).min -> fp }
+    val bandRows = reps.flatMap { case (id, fp) =>
+      (0 until 4).map(j => Seq[Any](id, fp, j, (fp >>> (j * width)) & ((1L << width) - 1)))
+    }.toSet
+    val idx = s"$state/index_v0"
+    assert(rows(idx) === bandRows)
+    val (_, wantIdx) = DocOps.simhashEdgesAppend(None, b0)
+    assert(ParquetFooter(conf, idx) === ParquetFooter(conf, written(wantIdx, "index")))
+
+    val lab = s"$state/labels_v0"
+    val wantLab = written(DocOps.keepersFromEdges(b0, DocOps.simhashEdges(b0)), "labels")
+    assert(rows(lab) === rows(wantLab))
+    assert(ParquetFooter(conf, lab) === ParquetFooter(conf, wantLab))
+    info(s"index footer: ${ParquetFooter(conf, idx)._1.replaceAll("\\s+", " ")}")
   }
 
   test("a crash between a batch's two writes is replayed, not skipped") {

@@ -1006,11 +1006,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the index is PERSISTED STATE: round-trip through parquet, so the
     // append structurally cannot re-signature old text
     val idxDir = java.nio.file.Files.createTempDirectory("graft-bandidx").toString
-    DocOps.minhashBandIndex(old).write.mode("overwrite").parquet(idxDir)
+    val (oldE0, oldIdx0) = DocOps.nearDupEdgesAppend(None, old, 0.5)
+    oldIdx0.write.mode("overwrite").parquet(idxDir)
     val oldIdx = s.read.parquet(idxDir)
 
-    val oldE = DocOps.nearDupEdges(old, 0.5).localCheckpoint(true)
-    val (newE0, newIdx) = DocOps.nearDupEdgesAppend(all, oldIdx, fresh, 0.5)
+    val oldE = oldE0.localCheckpoint(true)
+    val (newE0, newIdx) = DocOps.nearDupEdgesAppend(Some((old, oldIdx)), fresh, 0.5)
     val newE = newE0.localCheckpoint(true)
 
     def lab(df: org.apache.spark.sql.DataFrame) =
@@ -1041,7 +1042,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dNew = (0 until k).map(i => (1000L + i, words(400, 419)))
       .toDF("doc_id", "text")
     val (dE, _) = DocOps.nearDupEdgesAppend(
-      dOld.union(dNew), DocOps.minhashBandIndex(dOld), dNew, 0.5)
+      Some((dOld, DocOps.nearDupEdgesAppend(None, dOld, 0.5)._2)), dNew, 0.5)
     val dEdges = dE.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(dEdges.length === k)
     assert(dEdges.count(p => p._1 == 0L || p._2 == 0L) === 1)
@@ -1069,9 +1070,10 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // structurally unreadable from inside simhashEdgesAppend; round-trip
     // the index through parquet as persisted state
     val idxDir = java.nio.file.Files.createTempDirectory("graft-shidx").toString
-    DocOps.simhashIndex(old).write.mode("overwrite").parquet(idxDir)
-    val oldE = DocOps.simhashEdges(old).localCheckpoint(true)
-    val (newE0, newIdx) = DocOps.simhashEdgesAppend(s.read.parquet(idxDir), fresh)
+    val (oldE0, oldIdx) = DocOps.simhashEdgesAppend(None, old)
+    oldIdx.write.mode("overwrite").parquet(idxDir)
+    val oldE = oldE0.localCheckpoint(true)
+    val (newE0, newIdx) = DocOps.simhashEdgesAppend(Some(s.read.parquet(idxDir)), fresh)
     val newE = newE0.localCheckpoint(true)
 
     def lab(df: org.apache.spark.sql.DataFrame) =
@@ -1098,7 +1100,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("doc_id", "text")
     val dNew = (0 until k).map(i => (1000L + i, words(400, 419)))
       .toDF("doc_id", "text")
-    val (dE, _) = DocOps.simhashEdgesAppend(DocOps.simhashIndex(dOld), dNew)
+    val (dE, _) = DocOps.simhashEdgesAppend(
+      Some(DocOps.simhashEdgesAppend(None, dOld)._2), dNew)
     val dEdges = dE.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(dEdges.length === k)
     assert(dEdges.count(p => p._1 == 0L || p._2 == 0L) === 1)

@@ -172,7 +172,8 @@ class OptimizationEquivalenceSpec extends AnyFunSuite {
     val app = Seq((5L, words(1, 20)), (50L, words(100, 119)),
       (60L, words(500, 519))).toDF("doc_id", "text")
     val all = old.union(app)
-    val (edges, _) = DocOps.simhashEdgesAppend(DocOps.simhashIndex(old), app)
+    val (edges, _) = DocOps.simhashEdgesAppend(
+      Some(DocOps.simhashEdgesAppend(None, old)._2), app)
     def lab(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val full = lab(DocOps.keepersFromEdgesIncremental(
@@ -192,6 +193,75 @@ class OptimizationEquivalenceSpec extends AnyFunSuite {
     assert(full(10L) === 5L && full(50L) === 21L && full(60L) === 60L)
     // appended docs are always present in the delta
     assert(Set(5L, 50L, 60L).subsetOf(delta.keySet))
+    graft.ops.CacheLedger.release()
+  }
+
+  /** The sf0.001 corpus plus adversarial rows: a 5k-copy group of a corpus
+    * text (so it also merges with the corpus doc), identical texts under
+    * k words (no shingles, one fingerprint), an empty text and a null text.
+    */
+  private def adversarialCorpus(): DataFrame = {
+    val base = docs.select(col("doc_id"), col("text"))
+    val copied = base.where(col("doc_id") === 7L).first().getString(1)
+    val schema = StructType(Seq(StructField("doc_id", LongType, nullable = true),
+      StructField("text", StringType, nullable = true)))
+    val rows = (0 until 5000).map(i => Row(10000L + i, copied)) ++ Seq(
+      Row(20000L, "two words"), Row(20001L, "two words"), Row(20002L, "one"),
+      Row(20003L, ""), Row(20004L, null))
+    base.union(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+  }
+
+  private def keeperMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Appends `batches` one after another from EMPTY state — each batch's
+    * edges and index rows from `step(state, batch)`, its label delta from
+    * keepersDeltaIncremental against the labels resolved so far — and
+    * returns the labels resolved newest-row-wins.
+    */
+  private def chained(batches: Seq[DataFrame],
+                      step: (Option[(DataFrame, DataFrame)], DataFrame) => (DataFrame, DataFrame))
+      : Map[Long, Long] = {
+    val s = spark
+    import s.implicits._
+    batches.foldLeft((Option.empty[(DataFrame, DataFrame)], Map.empty[Long, Long])) {
+      case ((state, resolved), batch) =>
+        val (edges, idx) = step(state, batch)
+        val labels0 = resolved.toSeq.toDF("doc_id", "keeper_doc_id")
+        val delta = keeperMap(
+          DocOps.keepersDeltaIncremental(batch.select(col("doc_id")), labels0, edges))
+        val next = state match {
+          case None => (batch, idx)
+          case Some((d, i)) => (d.union(batch), i.union(idx))
+        }
+        (Some((next._1.localCheckpoint(true), next._2.localCheckpoint(true))), resolved ++ delta)
+    }._2
+  }
+
+  private def splits(d: DataFrame): Seq[Seq[DataFrame]] = (1 to 3).map { n =>
+    val part = pmod(xxhash64(lit(20260417L), col("doc_id")), lit(n.toLong))
+    (0 until n).map(i => d.where(part === i.toLong))
+  }
+
+  test("MinHash: chained appends from empty state ≡ dedupKeepers (1, 2, 3 batches)") {
+    val d = adversarialCorpus().localCheckpoint(true)
+    val full = keeperMap(DocOps.dedupKeepers(d, 0.5))
+    assert(full(10000L) === full(7L) && full(20000L) === 20000L && full(20004L) === 20004L)
+    for (batches <- splits(d)) {
+      val got = chained(batches, DocOps.nearDupEdgesAppend(_, _, 0.5))
+      assert(got === full, s"${batches.size} batches")
+    }
+    graft.ops.CacheLedger.release()
+  }
+
+  test("SimHash: chained appends from empty state ≡ simhashKeepers (1, 2, 3 batches)") {
+    val d = adversarialCorpus().localCheckpoint(true)
+    val full = keeperMap(DocOps.simhashKeepers(d))
+    assert(full(10000L) === full(7L) && full(20001L) === 20000L && full(20004L) === 20004L)
+    for (batches <- splits(d)) {
+      val got = chained(batches, (state, b) => DocOps.simhashEdgesAppend(state.map(_._2), b))
+      assert(got === full, s"${batches.size} batches")
+    }
     graft.ops.CacheLedger.release()
   }
 }

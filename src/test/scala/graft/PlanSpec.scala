@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Plan-shape assertions for the driver queries: the plans we WANT at scale,
-  * enforced — not just eyeballed via graft.Explain.
+/** Plan-shape assertions for the SparkEntry queries: the plans we WANT at scale
+  * (pushed filters, join strategies, shuffle counts), enforced.
   */
 class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
