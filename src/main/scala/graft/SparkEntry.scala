@@ -547,14 +547,12 @@ object SparkEntry {
       // through Hadoop FS inside runCheckpointed/reparseErrors)
       val out = java.nio.file.Files.createTempDirectory("graft-reparse")
         .toFile.getAbsolutePath
-      // the bucket-partitioned layout: reparse overwrites ONLY the buckets
-      // holding error keys (partition-granular, the Iceberg-MERGE stand-in)
-      Extract.runCheckpointed(s, TranscriptsT2, out, bucketPartitioned = true)
+      Extract.runCheckpointed(s, TranscriptsT2, out)
       val n = Extract.injectTransientErrors(s, out,
         pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(9)) === 0)
       require(n > 0L, "error injection selected no rows")
       Extract.reparseErrors(s, TranscriptsT2, out)
-      Extract.readResults(s, out).drop("bucket").as[pipeline.TurnResult]
+      Extract.readResults(s, out).as[pipeline.TurnResult]
         .map(r => (r.conv_id, r.turn_idx, r.input_width, r.input_height,
           r.cells_json, r.md, r.md_nohf, r.filtered, ResultJson.spansJson(r.spans)))
         .toDF("conv_id", "turn_idx", "input_width", "input_height",

@@ -47,9 +47,6 @@ object CacheLedger {
     df
   }
 
-  /** Number of currently-tracked (not yet released) intermediates. */
-  def trackedCount: Int = tracked.size()
-
   /** Unpersist every tracked intermediate (non-blocking). Safe to call at
     * any time: Spark recomputes dropped blocks if a plan still needs them,
     * so releasing "too early" costs recompute, never correctness. Frames

@@ -303,13 +303,4 @@ object VectorOps {
         round(col("cosine"), 6).as("cosine"))
       .orderBy(col("query_id"), col("rank"))
   }
-
-  /** SQL DOUBLE literals of the trained centroids (shortest round-trip
-    * digits, the planeSqlLiterals technique) — exposed for external
-    * verification tooling.
-    */
-  private[graft] def centroidSqlLiterals(cs: Seq[Centroid]): Seq[(Int, String, String)] =
-    cs.map(c => (c.cell,
-      c.ce.map(d => java.lang.Double.toString(d)).mkString("[", ", ", "]"),
-      java.lang.Double.toString(c.cn)))
 }

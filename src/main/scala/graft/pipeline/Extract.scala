@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** The flagship pipeline: transcripts table → per-turn extraction results.
   *
@@ -122,22 +122,6 @@ object Extract {
     }.toDF("conv_id", "doc_md", "n_pages")
   }
 
-  /** Corpus report aggregates (A2, output_cleaner.py:528-597) as one
-    * hash-aggregation pass; partial aggregation keeps the shuffle tiny.
-    */
-  def corpusReport(results: DataFrame): DataFrame = {
-    results.agg(
-      count(lit(1)).as("total_cases"),
-      sum(when(col("status") === "ok" && !col("filtered"), 1L).otherwise(0L)).as("strict_ok"),
-      sum(when(col("filtered"), 1L).otherwise(0L)).as("filtered_cases"),
-      sum(when(col("status") === "error", 1L).otherwise(0L)).as("error_cases"),
-      sum(length(coalesce(col("md"), lit("")))).as("total_md_chars"),
-      sum(col("clean_ops.delimiter_fixes").cast("long")).as("delimiter_fixes"),
-      sum(col("clean_ops.duplicate_dicts_removed").cast("long")).as("duplicate_dicts_removed"),
-      sum(col("clean_ops.bbox_fixes").cast("long")).as("bbox_fixes"),
-      sum(when(col("clean_ops.tail_truncated"), 1L).otherwise(0L)).as("tail_truncations"))
-  }
-
   /** Observed metrics (A2 via df.observe): corpus counters collected as a
     * side effect of the write, no extra pass. Read them after the action via
     * the returned Observation (see [[observed]]). `extra` adds more named
@@ -170,38 +154,29 @@ object Extract {
       .toOption.filter(_.length > 0)
       .map(r => r.getValuesMap[Any](r.schema.fieldNames.toSeq))
 
-  /** The deterministic conv_id-hash bucket (portable md5-prefix family) —
-    * the content key shared by bucket lineage and the optional
-    * bucket-partitioned results layout.
+  /** The deterministic conv_id-hash bucket of bucket lineage (portable
+    * md5-prefix family), as the long the lineage tables store.
     */
-  def bucketCol(c: Column, nBuckets: Int = 32): Column =
-    bucketHash(c, nBuckets).cast("int")
-
-  /** [[bucketCol]] as the long the lineage tables store. */
   private def bucketHash(c: Column, nBuckets: Int = 32): Column =
     pmod(conv(substring(md5(c), 1, 15), 16, 10).cast("long"),
       lit(nBuckets.toLong))
 
-  /** The results table's schema: the [[TurnResult]] encoder's, plus the
-    * `bucket` partition column in the bucket-partitioned layout. Internal
+  /** The results table's schema, the [[TurnResult]] encoder's. Internal
     * tables are read with fixed schemas, which skips Spark's schema
     * inference job (one per read).
     */
-  private def resultsSchema(partitioned: Boolean): StructType = {
-    val s = Encoders.product[TurnResult].schema
-    if (partitioned) s.add("bucket", IntegerType) else s
-  }
+  private lazy val resultsSchema: StructType = Encoders.product[TurnResult].schema
 
   /** Fixed schemas of the two lineage tables: the output schemas of the
     * functions that define them (analysis of an empty plan; no job).
     */
   private def bucketLineageSchema(spark: SparkSession): StructType =
     bucketLineage(spark.createDataFrame(
-      java.util.List.of[Row](), resultsSchema(false))).schema
+      java.util.List.of[Row](), resultsSchema)).schema
 
   private def runLineageSchema(spark: SparkSession): StructType =
     partitionLineage(spark.createDataFrame(
-      java.util.List.of[Row](), resultsSchema(false)))
+      java.util.List.of[Row](), resultsSchema))
       .withColumn("run_id", lit(0L)).schema
 
   /** Manifest-aware read of a results table (plain dir when no manifest —
@@ -209,21 +184,14 @@ object Extract {
     * maintenance ops' pre-commit file movements are never observed.
     */
   def readResults(spark: SparkSession, outDir: String): DataFrame =
-    SnapshotStore.read(spark, s"$outDir/results", resultsSchemaAt(spark, outDir))
-
-  private def resultsSchemaAt(spark: SparkSession, outDir: String): StructType = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/results")
-    resultsSchema(isBucketPartitioned(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
-  }
+    SnapshotStore.read(spark, s"$outDir/results", resultsSchema)
 
   /** Time-travel read: the results table as of snapshot `id` (the
     * VERSION-AS-OF analog; see [[SnapshotStore.readAt]] for the expiry
     * contract). Available once the table carries a manifest.
     */
   def readResultsAt(spark: SparkSession, outDir: String, id: Long): DataFrame =
-    SnapshotStore.readAt(spark, s"$outDir/results", id,
-      resultsSchemaAt(spark, outDir))
+    SnapshotStore.readAt(spark, s"$outDir/results", id, resultsSchema)
 
   /** Retention maintenance (Iceberg `expire_snapshots` analog): keep the
     * newest `retainLast` snapshots of the results table, delete the rest's
@@ -331,20 +299,6 @@ object Extract {
       }
   }
 
-  /** Move a staged rewrite (flat part-files, or bucket=N subdirs) into the
-    * results dir, preserving layout; returns the moved files' paths.
-    */
-  private def moveStaged(fs: org.apache.hadoop.fs.FileSystem,
-                         tmpPath: org.apache.hadoop.fs.Path,
-                         resultsPath: org.apache.hadoop.fs.Path,
-                         partitioned: Boolean): Seq[String] =
-    if (partitioned)
-      fs.listStatus(tmpPath)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-        .toSeq.flatMap(d => movePartsCollect(fs, d.getPath,
-          new org.apache.hadoop.fs.Path(resultsPath, d.getPath.getName)))
-    else movePartsCollect(fs, tmpPath, resultsPath)
-
   /** Whole-table rewrite through the snapshot protocol: stage in `tmpPath`
     * (already written), bootstrap a manifest over the CURRENT physical
     * files if none exists (so a crash mid-move leaves readers on the old
@@ -355,8 +309,7 @@ object Extract {
     */
   private def commitRewrite(fs: org.apache.hadoop.fs.FileSystem,
                             tmpPath: org.apache.hadoop.fs.Path,
-                            resultsPath: org.apache.hadoop.fs.Path,
-                            partitioned: Boolean): Unit = {
+                            resultsPath: org.apache.hadoop.fs.Path): Unit = {
     val live = SnapshotStore.bootstrap(fs, resultsPath,
       listDataFiles(fs, resultsPath).toSeq.sorted)
     // physical listing taken BEFORE this writer's staged files move in:
@@ -369,7 +322,7 @@ object Extract {
     // such writer exists. (Round 7: the previous post-commit full listing
     // could sweep any append that moved in anywhere in the window.)
     val preList = listDataFiles(fs, resultsPath)
-    val moved = moveStaged(fs, tmpPath, resultsPath, partitioned)
+    val moved = movePartsCollect(fs, tmpPath, resultsPath)
     // whole-table rewrite = replace the pre-rewrite live set with the
     // staged one; through the rebase loop a concurrent APPEND landing in
     // the window survives (its files are neither in `removes` nor
@@ -393,27 +346,24 @@ object Extract {
     }
   }
 
-  /** Does a results dir use the bucket-partitioned layout? */
-  private def isBucketPartitioned(fs: org.apache.hadoop.fs.FileSystem,
-                                  path: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(path) && fs.listStatus(path)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-
-  /** Recursive part-file listing of a results dir (works for both the flat
-    * and the bucket-partitioned layout).
+  /** Fail fast on a results dir in the bucket-partitioned layout an older
+    * build wrote (`bucket=N` subdirs): this build reads and writes the flat
+    * layout only. Every writer checks before it touches anything.
     */
+  private def requireFlat(fs: org.apache.hadoop.fs.FileSystem,
+                          path: org.apache.hadoop.fs.Path): Unit =
+    require(!fs.exists(path) || !fs.listStatus(path)
+      .exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket=")),
+      s"$path is in the bucket-partitioned layout (bucket=N subdirs), which " +
+        "this build neither reads nor writes")
+
+  /** The part-files of a results dir. */
   private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                            path: org.apache.hadoop.fs.Path): Set[String] = {
-    if (!fs.exists(path)) return Set.empty
-    val out = Set.newBuilder[String]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.startsWith("part-"))
-        out += s.getPath.toString
-    }
-    out.result()
-  }
+                            path: org.apache.hadoop.fs.Path): Set[String] =
+    if (!fs.exists(path)) Set.empty
+    else fs.listStatus(path).iterator
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+      .map(_.getPath.toString).toSet
 
   /** Checkpointed production run (Q3-Q5 semantics, SURVEY §7.3): skip keys
     * already present in `outDir`, extract only the remainder, append results
@@ -453,21 +403,16 @@ object Extract {
     * unknown counts as stale, never as a wait.
     */
   def runCheckpointed(spark: SparkSession, transcriptsPath: String,
-                      outDir: String, bucketPartitioned: Boolean = false): Map[String, Any] = {
+                      outDir: String): Map[String, Any] = {
     val turns = readTranscripts(spark, transcriptsPath)
     // Resolve through Hadoop's FileSystem, not java.io.File: outDir may be
     // HDFS/S3 under spark-submit, where a local-File check is always false
     // and a resumed run would silently re-append already-processed keys.
     val resultsPath = new org.apache.hadoop.fs.Path(s"$outDir/results")
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireFlat(fs, resultsPath)
     def dataFiles(): Set[String] = listDataFiles(fs, resultsPath)
     val existed = fs.exists(resultsPath)
-    // the bucketPartitioned flag governs INITIAL creation only: a resume
-    // always follows the layout it finds on disk, so a caller passing the
-    // wrong flag cannot append mixed-layout files that break partition
-    // discovery
-    val usePartitioned =
-      if (existed) isBucketPartitioned(fs, resultsPath) else bucketPartitioned
     val markerSet = fs.exists(lineageMarker(outDir))
     // the lineage state is read alongside the write (it touches neither
     // lineage table), on a second driver thread
@@ -494,16 +439,7 @@ object Extract {
     // the live set per the manifest, when the table carries one: crash
     // orphans may exist physically but must not enter the next snapshot
     val liveBefore = SnapshotStore.liveFiles(fs, resultsPath)
-    // bucket-partitioned layout (opt-in): conv_id-hash dirs let the error
-    // re-parse pass overwrite only AFFECTED buckets (partition-granular —
-    // the plain-parquet stand-in for Iceberg's row-level MERGE). Tradeoff:
-    // each task writes up to nBuckets files; a production deployment that
-    // cares more about file counts than the extra shuffle can repartition
-    // on the bucket column first.
-    if (usePartitioned)
-      df.withColumn("bucket", bucketCol(col("conv_id")))
-        .write.partitionBy("bucket").mode("append").parquet(s"$outDir/results")
-    else df.write.mode("append").parquet(s"$outDir/results")
+    df.write.mode("append").parquet(s"$outDir/results")
     val (oldBuckets, runLog) = lineageState()
     val written = observed(obs)
     val metrics = written.getOrElse(Map.empty) - "lineage"
@@ -552,12 +488,11 @@ object Extract {
     * invariant because the key set is unchanged), and the re-parse batch
     * appends its own `run_id` to the partition lineage.
     *
-    * Scale note: the rewrite is FILE-granular in BOTH layouts — only the
-    * part-files that contain error rows (identified by input_file_name()
-    * during the same pruned scan that finds the error keys) are retired
-    * and replaced; every other file survives byte-identical
-    * (spec-asserted). This matches Iceberg MERGE's I/O granularity.
-    * Transactionality (round 5): the swap commits through the
+    * Scale note: the rewrite is FILE-granular — only the part-files that
+    * contain error rows (identified by input_file_name() during the same
+    * pruned scan that finds the error keys) are retired and replaced; every
+    * other file survives byte-identical (spec-asserted). This matches
+    * Iceberg MERGE's I/O granularity. Transactionality (round 5): the swap commits through the
     * [[SnapshotStore]] manifest — replacements move in under fresh names,
     * ONE manifest rename publishes the new file set, and replaced files
     * stay on disk backing the pre-reparse snapshot (round 7 retention
@@ -566,8 +501,9 @@ object Extract {
     * never a mix (COVERAGE.md divergence #2 is thereby narrowed to
     * concurrent-writer arbitration). Replacement files accumulate per
     * pass; compaction and expiry are separate concerns, as for Iceberg —
-    * [[compactResults]] also sweeps any orphans a crashed pass left. Assumes every error key still exists in the transcripts
-    * table (true here by construction: error rows originate from it).
+    * [[compactResults]] also sweeps any orphans a crashed pass left.
+    * Assumes every error key still exists in the transcripts table (true
+    * here by construction: error rows originate from it).
     *
     * Driver-list guard (round 5): the error-file list is collected on the
     * driver — control-plane-sized at realistic error rates, but a SYSTEMIC
@@ -580,9 +516,9 @@ object Extract {
     */
   def reparseErrors(spark: SparkSession, transcriptsPath: String,
                     outDir: String): Map[String, Any] = {
-    val resultsDir = s"$outDir/results"
-    val resultsPath = new org.apache.hadoop.fs.Path(resultsDir)
+    val resultsPath = new org.apache.hadoop.fs.Path(s"$outDir/results")
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireFlat(fs, resultsPath)
     val marker = lineageMarker(outDir)
     // a crashed previous pass (marker present) or a pre-run_id lineage
     // table: heal BEFORE taking deltas against it (a healed run log holds
@@ -601,9 +537,6 @@ object Extract {
       .select("conv_id", "turn_idx")
     if (errKeys.limit(1).count() == 0L)
       return Map("rows" -> 0L, "rewrite_mode" -> "none")
-
-    // layout detection: bucket=N partition dirs present?
-    val partitioned = isBucketPartitioned(fs, resultsPath)
 
     // aggregates of the rows being replaced — materialized (≤ nBuckets
     // rows) BEFORE the results dir is swapped out from under the plan
@@ -631,7 +564,7 @@ object Extract {
         extract(turnsErr).sortWithinPartitions("conv_id", "turn_idx"))
       incDf.write.mode("overwrite").parquet(incDir)
       val metrics = observed(obs).getOrElse(Map.empty[String, Any])
-      val inc = spark.read.schema(resultsSchema(false)).parquet(incDir)
+      val inc = spark.read.schema(resultsSchema).parquet(incDir)
 
       // manifest bootstrap BEFORE any file moves: from here on, readers
       // resolve through a committed snapshot, so nothing below is visible
@@ -655,23 +588,17 @@ object Extract {
           "file-granular to whole-table rewrite")
 
       // the survivors: non-error rows of the affected files (file-granular)
-      // or of the whole table (fallback); partition columns are path-
-      // carried, so the bucket is recomputed for routing either way
+      // or of the whole table (fallback)
       val keptSrc =
-        if (fullRewrite) results.drop("bucket")
-        else spark.read.schema(resultsSchema(false))
-          .parquet(errFiles.toSeq.sorted: _*)
-      val kept = keptSrc.where(col("status") =!= "error")
-      if (partitioned)
-        kept.withColumn("bucket", bucketCol(col("conv_id")))
-          .unionByName(inc.withColumn("bucket", bucketCol(col("conv_id"))))
-          .write.partitionBy("bucket").mode("overwrite").parquet(tmpDir)
-      else kept.unionByName(inc).write.mode("overwrite").parquet(tmpDir)
+        if (fullRewrite) results
+        else spark.read.schema(resultsSchema).parquet(errFiles.toSeq.sorted: _*)
+      keptSrc.where(col("status") =!= "error").unionByName(inc)
+        .write.mode("overwrite").parquet(tmpDir)
 
       // tmp fully materialized: move replacements in (fresh UUID names),
       // then COMMIT — the one atomic step. The marker goes down first so a
       // crash after the commit but before the lineage patch forces a heal.
-      val moved = moveStaged(fs, tmpPath, resultsPath, partitioned)
+      val moved = movePartsCollect(fs, tmpPath, resultsPath)
       fs.create(marker, true).close()
       // reparse = replace the error-holding files (or the whole live set
       // in fallback) with the rewritten ones — an (adds, removes) delta,
@@ -719,16 +646,13 @@ object Extract {
     }
   }
 
-  /** Table maintenance: compact a results dir (flat or bucket-partitioned)
-    * whose file count has grown through appends and re-parse passes — the
-    * plain-parquet analog of Iceberg's rewrite_data_files. Row content is
-    * preserved exactly and re-sorted to the (conv_id, turn_idx) run order
-    * (O1); lineage is untouched — the row set does not change, so the
-    * bucket invariant keeps holding (spec-asserted).
-    *
-    * Partitioned layout: one shuffle keyed on the bucket column leaves
-    * each bucket in exactly one task → one file per bucket dir. Flat
-    * layout: coalesce (no shuffle) down to `flatFiles` files.
+  /** Table maintenance: compact a results dir whose file count has grown
+    * through appends and re-parse passes — the plain-parquet analog of
+    * Iceberg's rewrite_data_files. Row content is preserved exactly and
+    * re-sorted to the (conv_id, turn_idx) run order (O1) within each of at
+    * most `flatFiles` files (a coalesce, no shuffle); lineage is untouched —
+    * the row set does not change, so the bucket invariant keeps holding
+    * (spec-asserted).
     *
     * Commits through the [[SnapshotStore]] manifest (round 5): the rewrite
     * is staged, moved in under fresh names, published by one manifest
@@ -738,25 +662,18 @@ object Extract {
     * No step deletes live or snapshot-referenced data.
     */
   def compactResults(spark: SparkSession, outDir: String,
-                     flatFiles: Int = 32, nBuckets: Int = 32): Unit = {
-    val resultsDir = s"$outDir/results"
-    val resultsPath = new org.apache.hadoop.fs.Path(resultsDir)
+                     flatFiles: Int = 32): Unit = {
+    val resultsPath = new org.apache.hadoop.fs.Path(s"$outDir/results")
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partitioned = isBucketPartitioned(fs, resultsPath)
+    requireFlat(fs, resultsPath)
     val tmpDir = s"$outDir/results_compact_tmp"
     val tmpPath = new org.apache.hadoop.fs.Path(tmpDir)
     try {
       fs.delete(tmpPath, true) // leftover from a crashed pass: re-derivable
-      val src = readResults(spark, outDir)
-      if (partitioned)
-        src.repartition(nBuckets, col("bucket"))
-          .sortWithinPartitions("conv_id", "turn_idx")
-          .write.partitionBy("bucket").mode("overwrite").parquet(tmpDir)
-      else
-        src.coalesce(flatFiles)
-          .sortWithinPartitions("conv_id", "turn_idx")
-          .write.mode("overwrite").parquet(tmpDir)
-      commitRewrite(fs, tmpPath, resultsPath, partitioned)
+      readResults(spark, outDir).coalesce(flatFiles)
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .write.mode("overwrite").parquet(tmpDir)
+      commitRewrite(fs, tmpPath, resultsPath)
     } finally fs.delete(tmpPath, true)
   }
 
@@ -769,9 +686,9 @@ object Extract {
     */
   def injectTransientErrors(spark: SparkSession, outDir: String,
                             pred: org.apache.spark.sql.Column): Long = {
-    val resultsDir = s"$outDir/results"
-    val resultsPath = new org.apache.hadoop.fs.Path(resultsDir)
+    val resultsPath = new org.apache.hadoop.fs.Path(s"$outDir/results")
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireFlat(fs, resultsPath)
     val results = readResults(spark, outDir)
     val degraded = results.select(
       col("conv_id"), col("turn_idx"), col("role"), col("tool"),
@@ -791,15 +708,10 @@ object Extract {
     val nInjected = results.where(pred).count()
     val tmpDir = s"$outDir/results_inject_tmp"
     val tmpPath = new org.apache.hadoop.fs.Path(tmpDir)
-    val partitioned = results.columns.contains("bucket")
     try {
       fs.delete(tmpPath, true)
-      // preserve the table layout (flat or bucket-partitioned)
-      if (partitioned)
-        degraded.withColumn("bucket", bucketCol(col("conv_id")))
-          .write.partitionBy("bucket").mode("overwrite").parquet(tmpDir)
-      else degraded.write.mode("overwrite").parquet(tmpDir)
-      commitRewrite(fs, tmpPath, resultsPath, partitioned)
+      degraded.write.mode("overwrite").parquet(tmpDir)
+      commitRewrite(fs, tmpPath, resultsPath)
     } finally fs.delete(tmpPath, true)
     healLineage(spark, outDir)
     nInjected

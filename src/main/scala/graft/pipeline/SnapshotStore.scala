@@ -27,8 +27,7 @@ import org.apache.spark.sql.types.StructType
   *    delete leaves ORPHANS, which manifest-resolving readers never see
   *    and which the next [[Extract.compactResults]] sweeps).
   *  - Readers resolve through [[read]]: manifest present → exactly the
-  *    listed files (with basePath so a bucket-partitioned layout keeps its
-  *    partition column); absent → plain directory read. A reader therefore
+  *    listed files; absent → plain directory read. A reader therefore
   *    observes either the pre-commit or the post-commit table, never a
   *    half-swapped one (spec-asserted in SnapshotSpec).
   */
@@ -285,15 +284,14 @@ object SnapshotStore {
 
   /** Read a results table through its manifest when present, else as a
     * plain parquet dir, with the caller's fixed `schema` (no inference
-    * job). basePath keeps partition-dir columns (bucket=N) alive under an
-    * explicit file list.
+    * job).
     */
   def read(spark: SparkSession, resultsDir: String, schema: StructType): DataFrame = {
     val p = new Path(resultsDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     liveFiles(fs, p) match {
       case Some(files) if files.nonEmpty =>
-        spark.read.schema(schema).option("basePath", resultsDir).parquet(files: _*)
+        spark.read.schema(schema).parquet(files: _*)
       case Some(_) =>
         throw new IllegalStateException(s"snapshot of $resultsDir lists no files")
       case None => spark.read.schema(schema).parquet(resultsDir)
@@ -317,6 +315,6 @@ object SnapshotStore {
       throw new IllegalStateException(
         s"snapshot $id references retired file $missing (expired by compaction)")
     }
-    spark.read.schema(schema).option("basePath", resultsDir).parquet(files: _*)
+    spark.read.schema(schema).parquet(files: _*)
   }
 }

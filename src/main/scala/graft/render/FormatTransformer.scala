@@ -138,16 +138,10 @@ object FormatTransformer {
 
   /** format_transformer.py:145-180 `layoutjson2md` + the span-offset
     * accumulation (SURVEY §2.5 R3). Cells render IN ARRAY ORDER (reading
-    * order); pieces join with "\n\n". Spans are recorded only for rendered
-    * cells (header/footer cells skipped under `noPageHf` get no span).
+    * order); pieces join with "\n\n". Cells are the post-rescale JObj
+    * cells: bbox is a 4-int JSON array (int(coord) at :163 is a no-op).
     *
-    * Cells here are the post-rescale JObj cells: bbox is a 4-int JSON array
-    * (int(coord) cast at :163 is a no-op for them).
-    */
-  def layoutJsonToMd(cells: Vector[JValue], noPageHf: Boolean): (String, Vector[Span]) =
-    assemble(renderPieces(cells), noPageHf)
-
-  /** Both variants from ONE render pass (the hot-path form). Returns
+    * Both variants from ONE render pass (the hot-path form). Returns
     * (md, spans-of-md, mdNohf). When the page has no header/footer cells the
     * two markdowns are the same string — share the instance instead of
     * assembling it twice (most pages).

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, sum => fsum}
+import org.apache.spark.sql.functions.{col, conv, lit, md5, pmod, substring, sum => fsum}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,10 +59,9 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** A checkpointed run that fails the spec instead of hanging it. */
-  private def run(transcripts: String, out: String,
-                  partitioned: Boolean = false): Map[String, Any] =
-    Await.result(Future(Extract.runCheckpointed(spark, transcripts, out,
-      bucketPartitioned = partitioned)), 5.minutes)
+  private def run(transcripts: String, out: String): Map[String, Any] =
+    Await.result(Future(Extract.runCheckpointed(spark, transcripts, out)),
+      5.minutes)
 
   private def rowsOf(m: Map[String, Any]): Long = m("rows").asInstanceOf[Long]
 
@@ -118,8 +117,11 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
       "prompt_ocr"))).toDF()
   }
 
-  for (partitioned <- Seq(false, true))
-    test(s"write-pass tally equals a full bucketLineage recompute (partitioned=$partitioned)") {
+  // the second case compacts between the appends, so the second append
+  // lands on a manifest-carrying table through the snapshot commit
+  for (compacted <- Seq(false, true))
+    test("write-pass tally equals a full bucketLineage recompute" +
+        (if (compacted) " across a compaction" else "")) {
       val base = tmp("graft-ckpt-tally")
       val (halfDir, halfRows) = firstHalf(base)
       val second = s"$base/second"
@@ -127,11 +129,12 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
       Extract.readTranscripts(spark, "data/transcripts_t1").toDF()
         .unionByName(uni).write.parquet(second)
       val out = s"$base/out"
-      assert(rowsOf(run(halfDir, out, partitioned)) === halfRows)
+      assert(rowsOf(run(halfDir, out)) === halfRows)
+      if (compacted) Extract.compactResults(spark, out)
       val secondRows = 1163L - halfRows + uni.count()
-      assert(rowsOf(run(second, out, partitioned)) === secondRows)
+      assert(rowsOf(run(second, out)) === secondRows)
 
-      val results = Extract.readResults(spark, out).drop("bucket")
+      val results = Extract.readResults(spark, out)
       assert(buckets(out) ===
         Extract.bucketLineage(results).orderBy("bucket").collect().toSeq)
 
@@ -140,8 +143,11 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
       // code points differ from their UTF-16 lengths
       val uniRows = results.where(
         col("conv_id").startsWith("Ａ") || col("conv_id").startsWith("😀"))
-      val utf16Max = uniRows.select(Extract.bucketCol(col("conv_id")), col("conv_id"))
-        .collect().groupMapReduce(_.getInt(0).toLong)(_.getString(1))(
+      // the lineage bucket, restated: md5-prefix hash mod 32
+      val bucket = pmod(conv(substring(md5(col("conv_id")), 1, 15), 16, 10)
+        .cast("long"), lit(32L))
+      val utf16Max = uniRows.select(bucket, col("conv_id"))
+        .collect().groupMapReduce(_.getLong(0))(_.getString(1))(
           (a, b) => if (a > b) a else b)
       val utf8Max = buckets(out).map(r => r.getLong(0) -> r.getString(6)).toMap
       assert(utf16Max.exists { case (b, m) => utf8Max(b) != m },

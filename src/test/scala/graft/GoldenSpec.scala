@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -190,106 +192,95 @@ class GoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("bucket").collect().toSeq === cleanBuckets)
   }
 
-  test("resume follows the on-disk layout regardless of the flag") {
-    import org.apache.spark.sql.functions.col
-    val base = java.nio.file.Files.createTempDirectory("graft-layout")
-    val splitDir = s"$base/first_half"
-    val out = s"$base/out"
-    val turns = Extract.readTranscripts(spark, "data/transcripts_t1")
-    turns.toDF().where(col("conv_id") < "t1-conv-00060").write.parquet(splitDir)
-    // created partitioned; resumed WITHOUT the flag — the increment must
-    // still land under bucket= dirs, not as mixed flat files
-    Extract.runCheckpointed(spark, splitDir, out, bucketPartitioned = true)
-    Extract.runCheckpointed(spark, "data/transcripts_t1", out)
-    val root = new java.io.File(s"$out/results")
-    assert(root.listFiles().filter(_.isFile).forall(!_.getName.startsWith("part-")),
-      "flat part-files appended into a bucket-partitioned table")
-    val all = spark.read.parquet(s"$out/results")
-    assert(all.count() === 1163L)
-    assert(all.columns.contains("bucket"))
+  test("writers refuse a legacy bucket-partitioned results dir untouched") {
+    val out = java.nio.file.Files.createTempDirectory("graft-legacy")
+    // the layout an older build could write: part-files under bucket=N
+    Extract.run(spark, "data/transcripts_t1").limit(20).coalesce(1)
+      .write.parquet(s"$out/results/bucket=0")
+    def tree(): Seq[(String, Long, Long, Int)] = {
+      val ps = java.nio.file.Files.walk(out)
+      try ps.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => (out.relativize(p).toString, java.nio.file.Files.size(p),
+          java.nio.file.Files.getLastModifiedTime(p).toMillis,
+          java.util.Arrays.hashCode(java.nio.file.Files.readAllBytes(p))))
+        .toSeq.sorted
+      finally ps.close()
+    }
+    val before = tree()
+    assert(before.exists(_._1.matches("results/bucket=0/part-.*\\.parquet")))
+    val writers = Seq[(String, () => Any)](
+      "runCheckpointed" -> (() =>
+        Extract.runCheckpointed(spark, "data/transcripts_t1", out.toString)),
+      "reparseErrors" -> (() =>
+        Extract.reparseErrors(spark, "data/transcripts_t1", out.toString)),
+      "compactResults" -> (() => Extract.compactResults(spark, out.toString)))
+    for ((name, call) <- writers) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("bucket-partitioned layout"), s"$name: $e")
+      assert(tree() === before, s"$name touched the legacy dir")
+    }
   }
 
-  test("bucket-partitioned reparse rewrites only the buckets holding errors") {
-    import org.apache.spark.sql.functions.{col, lit}
-    val out = java.nio.file.Files.createTempDirectory("graft-reparse-part")
-      .toFile.getAbsolutePath
-    Extract.runCheckpointed(spark, "data/transcripts_t1", out,
-      bucketPartitioned = true)
-    def rows() = spark.read.parquet(s"$out/results").drop("bucket")
+  test("reparse retires only the part-files holding errors") {
+    import org.apache.spark.sql.functions.{col, input_file_name}
+    val base = java.nio.file.Files.createTempDirectory("graft-reparse-files")
+    // t1 split into 8 conv_id ranges: one results part-file per range
+    val split = s"$base/t1_split"
+    Extract.readTranscripts(spark, "data/transcripts_t1").toDF()
+      .repartitionByRange(8, col("conv_id")).write.parquet(split)
+    val out = s"$base/out"
+    Extract.runCheckpointed(spark, split, out)
+    def rows() = Extract.readResults(spark, out)
       .orderBy("conv_id", "turn_idx").collect().toSeq
     val clean = rows()
     assert(clean.size === 1163)
-
-    // corrupt one conversation → its bucket joins the error-bucket set.
     // This spec audits FILE-granularity through plain directory listings,
     // so after each maintenance op expire history down to the current
     // snapshot (retention would otherwise keep the replaced files on disk
     // for time travel — SnapshotSpec covers that contract).
+    def files(): Map[String, (Long, Long)] =
+      new java.io.File(s"$out/results").listFiles()
+        .filter(_.getName.startsWith("part-"))
+        .map(f => f.getName -> (f.length(), f.lastModified())).toMap
+
+    // corrupt one conversation: only the file holding it has error rows
     val n = Extract.injectTransientErrors(spark, out,
       col("conv_id") === "t1-conv-00007")
     assert(n > 0L)
     Extract.expireResultSnapshots(spark, out, retainLast = 1)
-    // every bucket that holds ANY error row (injected or genuine) will be
-    // rewritten; every other bucket dir must stay byte-identical
-    val errorBuckets = spark.read.parquet(s"$out/results")
-      .where(col("status") === "error")
-      .select("bucket").distinct().collect()
-      .map(_.getAs[Number]("bucket").intValue()).toSet
-    val injBucket = spark.range(1)
-      .select(Extract.bucketCol(lit("t1-conv-00007"))).collect()(0).getInt(0)
-    assert(errorBuckets.contains(injBucket))
-    def bucketState(): Map[String, Seq[(String, Long, Long)]] = {
-      val d = new java.io.File(s"$out/results")
-      d.listFiles().filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .map(b => b.getName -> b.listFiles().toSeq
-          .filter(_.getName.startsWith("part-"))
-          .map(f => (f.getName, f.length(), f.lastModified())).sortBy(_._1))
-        .toMap
-    }
-    val degradedState = bucketState()
+    val degraded = files()
     // the exact files holding error rows — the ONLY files reparse may touch
-    val errFiles = spark.read.parquet(s"$out/results")
-      .withColumn("__f", org.apache.spark.sql.functions.input_file_name())
+    val errFiles = Extract.readResults(spark, out)
+      .withColumn("__f", input_file_name())
       .where(col("status") === "error")
       .select("__f").distinct().collect()
       .map(r => new java.io.File(new java.net.URI(r.getString(0))).getName).toSet
-    assert(errFiles.nonEmpty)
+    assert(errFiles.nonEmpty && errFiles.size * 2 <= degraded.size,
+      s"${errFiles.size} of ${degraded.size} files hold errors")
 
     val m = Extract.reparseErrors(spark, "data/transcripts_t1", out)
-    assert(m("rows").asInstanceOf[Long] > 0L)
+    assert(m("rows").asInstanceOf[Long] === n)
+    assert(m("rewrite_mode") === "file_granular")
     Extract.expireResultSnapshots(spark, out, retainLast = 1)
-    assert(rows() === clean) // byte-equal restore, genuine errors included
-    val after = bucketState()
-    val touched = after.keySet.filter(k => degradedState.get(k) != after.get(k))
-    assert(touched === errorBuckets.map(b => s"bucket=$b"),
-      s"rewrote $touched, expected exactly the error buckets $errorBuckets")
-    // FILE-granular: within the affected buckets, every pre-existing file
-    // that held no error rows survives byte-identical; the error files are
-    // gone (replaced by fresh UUID-named parts)
-    for (b <- touched) {
-      val beforeFiles = degradedState(b).map(f => f._1 -> f).toMap
-      val afterFiles = after(b).map(f => f._1 -> f).toMap
-      val survivors = beforeFiles.keySet.filterNot(errFiles)
-      assert(survivors.forall(s => afterFiles.get(s) == beforeFiles.get(s)),
-        s"non-error file changed in $b")
-      assert(beforeFiles.keySet.filter(errFiles).forall(!afterFiles.contains(_)),
-        s"error file not retired in $b")
-    }
+    assert(rows() === clean)
+    // FILE-granular: the error files are gone (replaced by fresh UUID-named
+    // parts); every other file survives byte-identical
+    val after = files()
+    assert(errFiles.forall(!after.contains(_)), "error file not retired")
+    for (f <- degraded.keySet -- errFiles)
+      assert(after.get(f) === degraded.get(f), s"non-error file $f changed")
     // lineage reconciles with a full recompute over the restored table
     val buckets = spark.read.parquet(s"$out/lineage_buckets")
       .orderBy("bucket").collect().toSeq
-    assert(buckets === Extract.bucketLineage(
-        spark.read.parquet(s"$out/results").drop("bucket"))
+    assert(buckets === Extract.bucketLineage(Extract.readResults(spark, out))
       .orderBy("bucket").collect().toSeq)
 
-    // maintenance: compaction preserves rows + layout + lineage, one file
-    // per bucket afterwards (reparse replacements had grown the file count)
-    Extract.compactResults(spark, out)
+    // maintenance: compaction preserves rows + lineage and brings the file
+    // count (grown by the reparse replacements) down to flatFiles
+    Extract.compactResults(spark, out, flatFiles = 4)
     Extract.expireResultSnapshots(spark, out, retainLast = 1)
     assert(rows() === clean)
-    val compacted = bucketState()
-    assert(compacted.nonEmpty && compacted.values.forall(_.size === 1),
-      s"expected 1 file per bucket, got ${compacted.view.mapValues(_.size).toMap}")
+    assert(files().size <= 4, s"expected <= 4 files, got ${files().size}")
     assert(spark.read.parquet(s"$out/lineage_buckets")
       .orderBy("bucket").collect().toSeq === buckets)
     // and a subsequent resume still sees a consistent table (no heal, no

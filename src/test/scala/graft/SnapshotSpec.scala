@@ -36,16 +36,26 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def fsOf(dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def freshTable(prefix: String, partitioned: Boolean = false): String = {
-    val out = java.nio.file.Files.createTempDirectory(prefix)
+  /** A checkpointed t1 results table. With `files` > 1 the transcripts are
+    * first split into that many conv_id ranges, one results part-file each.
+    */
+  private def freshTable(prefix: String, files: Int = 1): String = {
+    val base = java.nio.file.Files.createTempDirectory(prefix)
       .toFile.getAbsolutePath
-    Extract.runCheckpointed(spark, "data/transcripts_t1", out,
-      bucketPartitioned = partitioned)
+    val transcripts =
+      if (files == 1) "data/transcripts_t1"
+      else {
+        Extract.readTranscripts(spark, "data/transcripts_t1").toDF()
+          .repartitionByRange(files, col("conv_id")).write.parquet(s"$base/t1_split")
+        s"$base/t1_split"
+      }
+    val out = s"$base/out"
+    Extract.runCheckpointed(spark, transcripts, out)
     out
   }
 
   private def rows(out: String) =
-    Extract.readResults(spark, out).drop("bucket")
+    Extract.readResults(spark, out)
       .orderBy("conv_id", "turn_idx").collect().toSeq
 
   test("manifest readers never observe a half-swapped table") {
@@ -91,13 +101,13 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("reparse on a manifest-carrying table restores the clean state") {
-    val out = freshTable("graft-snap-reparse", partitioned = true)
+    val out = freshTable("graft-snap-reparse", files = 8)
     val clean = rows(out)
     Extract.compactResults(spark, out) // table now carries a manifest
     val fs = fsOf(out)
     assert(SnapshotStore.currentSnapshot(fs, new Path(s"$out/results")).nonEmpty)
 
-    // a single conversation's errors touch only its bucket's file — well
+    // a single conversation's errors touch only its range's file — well
     // under the smeared-error threshold, so the file-granular path runs
     val n = Extract.injectTransientErrors(spark, out,
       col("conv_id") === "t1-conv-00007")
@@ -108,7 +118,7 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
     // lineage reconciles with a full recompute over the restored table
     assert(spark.read.parquet(s"$out/lineage_buckets")
       .orderBy("bucket").collect().toSeq ===
-      Extract.bucketLineage(Extract.readResults(spark, out).drop("bucket"))
+      Extract.bucketLineage(Extract.readResults(spark, out))
         .orderBy("bucket").collect().toSeq)
   }
 
@@ -188,13 +198,13 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
     Extract.runCheckpointed(spark, splitDir, out)
     val halfRows = Extract.readResults(spark, out).count()
     assert(halfRows > 0 && halfRows < 1163)
-    val pre = Extract.readResults(spark, out).drop("bucket")
+    val pre = Extract.readResults(spark, out)
       .orderBy("conv_id", "turn_idx").collect().toSeq
     // compaction creates the manifest: snap 0 = bootstrap (pre-compaction
     // files), snap 1 = the compacted set; snap 0's files SURVIVE the
     // rewrite (round 7 retention contract) so snap 0 stays readable
     Extract.compactResults(spark, out)
-    assert(Extract.readResultsAt(spark, out, 0L).drop("bucket")
+    assert(Extract.readResultsAt(spark, out, 0L)
       .orderBy("conv_id", "turn_idx").collect().toSeq === pre,
       "pre-compaction snapshot not byte-equal after the rewrite")
     // an appending resume commits snap 2 = snap 1's files + the increment
