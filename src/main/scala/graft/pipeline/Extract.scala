@@ -154,12 +154,14 @@ object Extract {
       .toOption.filter(_.length > 0)
       .map(r => r.getValuesMap[Any](r.schema.fieldNames.toSeq))
 
+  /** The number of conv_id-hash buckets of bucket lineage. */
+  private val NBuckets = 32L
+
   /** The deterministic conv_id-hash bucket of bucket lineage (portable
     * md5-prefix family), as the long the lineage tables store.
     */
-  private def bucketHash(c: Column, nBuckets: Int = 32): Column =
-    pmod(conv(substring(md5(c), 1, 15), 16, 10).cast("long"),
-      lit(nBuckets.toLong))
+  private def bucketHash(c: Column): Column =
+    pmod(conv(substring(md5(c), 1, 15), 16, 10).cast("long"), lit(NBuckets))
 
   /** The results table's schema, the [[TurnResult]] encoder's. Internal
     * tables are read with fixed schemas, which skips Spark's schema
@@ -231,7 +233,7 @@ object Extract {
     healedParts.unpersist(blocking = false)
   }
 
-  /** The `lineage_buckets` rows (≤ nBuckets), read with a fixed schema. */
+  /** The `lineage_buckets` rows (≤ [[NBuckets]]), read with a fixed schema. */
   private def readBucketLineage(spark: SparkSession, outDir: String): Seq[LineageTally] =
     spark.read.schema(bucketLineageSchema(spark))
       .parquet(s"$outDir/lineage_buckets").collect().toSeq.map(LineageTally.fromRow)
@@ -263,21 +265,71 @@ object Extract {
     }
   }
 
-  /** Overwrite `lineage_buckets` with driver-held rows (one file). */
-  private def writeBucketLineage(spark: SparkSession, outDir: String,
-                                 buckets: Seq[LineageTally]): Unit =
-    spark.createDataFrame(buckets.sortBy(_.key).map(t => Row(t.key.map(Long.box).orNull,
-        t.rows_out, t.filtered_rows, t.error_rows, t.md_chars, t.min_conv_id,
-        t.max_conv_id)).asJava, bucketLineageSchema(spark))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/lineage_buckets")
+  /** Start reading the lineage state on a second driver thread: the
+    * `lineage_buckets` rows and the run log's (max `run_id`, null
+    * `run_id`s), each None when its table is missing. The writers read it
+    * alongside their own scans and writes, which touch neither table.
+    */
+  private def lineageState(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                           outDir: String)
+      : () => (Option[Seq[LineageTally]], Option[(Long, Long)]) = fork {
+    def exists(dir: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/$dir"))
+    (if (exists("lineage_buckets")) Some(readBucketLineage(spark, outDir)) else None,
+      if (exists("lineage")) Some(runIdStats(spark, outDir)) else None)
+  }
 
-  /** Append one run's partition lineage from driver-held rows (one file). */
-  private def appendRunLineage(spark: SparkSession, outDir: String,
-                               parts: Seq[LineageTally], runId: Long): Unit =
+  /** Whether the lineage state cannot take a delta and must be recomputed:
+    * the reparse marker is set (reparse keeps the key set, so the count
+    * invariant cannot see its half-patched lineage), a lineage table is
+    * missing, a `run_id` is null (a table from before run ids), or the
+    * bucket `rows_out` sum differs from the observed results count — None
+    * (an observation that came back empty) counts as a difference.
+    */
+  private def lineageStale(markerSet: Boolean, buckets: Option[Seq[LineageTally]],
+                           runLog: Option[(Long, Long)], rows: Option[Long]): Boolean =
+    markerSet || runLog.forall { case (_, nullRunIds) => nullRunIds > 0L } ||
+      buckets.isEmpty || rows != buckets.map(_.map(_.rows_out).sum)
+
+  /** Overwrite `lineage_buckets` and append the run `runId` to the
+    * partition lineage, both from driver-held rows (one file each), the two
+    * writes running concurrently.
+    */
+  private def writeLineage(spark: SparkSession, outDir: String,
+                           buckets: Seq[LineageTally], parts: Seq[LineageTally],
+                           runId: Long): Unit = {
+    val bucketsWritten = fork(spark.createDataFrame(buckets.sortBy(_.key)
+        .map(t => Row(t.key.map(Long.box).orNull, t.rows_out, t.filtered_rows,
+          t.error_rows, t.md_chars, t.min_conv_id, t.max_conv_id)).asJava,
+        bucketLineageSchema(spark))
+      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/lineage_buckets"))
     spark.createDataFrame(parts.sortBy(_.key).map(t => Row(t.key.get.toInt,
         t.rows_out, t.filtered_rows, t.error_rows, t.min_conv_id,
         t.max_conv_id, runId)).asJava, runLineageSchema(spark))
       .coalesce(1).write.mode("append").parquet(s"$outDir/lineage")
+    bucketsWritten()
+  }
+
+  /** `buckets` with the rows of the tally `replaced` swapped for those of
+    * `added`: per bucket the three content sums become old − replaced +
+    * new, while `rows_out` and the conv_id range stay, which holds only
+    * when every touched bucket is known and keeps its row count (the key
+    * set is unchanged). None otherwise: the caller recomputes.
+    */
+  private def patchBuckets(buckets: Seq[LineageTally], replaced: Seq[LineageTally],
+                           added: Seq[LineageTally]): Option[Seq[LineageTally]] = {
+    val out = replaced.map(t => t.key -> t).toMap
+    val in = added.map(t => t.key -> t).toMap
+    val sameKeys = out.keySet == in.keySet &&
+      out.keySet.subsetOf(buckets.map(_.key).toSet) &&
+      out.forall { case (k, t) => in(k).rows_out == t.rows_out }
+    Option.when(sameKeys)(buckets.map(b => (out.get(b.key), in.get(b.key)) match {
+      case (Some(o), Some(n)) => b.copy(
+        filtered_rows = b.filtered_rows - o.filtered_rows + n.filtered_rows,
+        error_rows = b.error_rows - o.error_rows + n.error_rows,
+        md_chars = b.md_chars - o.md_chars + n.md_chars)
+      case _ => b
+    }))
+  }
 
   /** Move every part-file from `srcDir` into `dstDir` (fresh UUID names —
     * collisions impossible), returning the qualified destination paths for
@@ -414,19 +466,7 @@ object Extract {
     def dataFiles(): Set[String] = listDataFiles(fs, resultsPath)
     val existed = fs.exists(resultsPath)
     val markerSet = fs.exists(lineageMarker(outDir))
-    // the lineage state is read alongside the write (it touches neither
-    // lineage table), on a second driver thread
-    val lineageState = fork {
-      val buckets =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/lineage_buckets")))
-          Some(readBucketLineage(spark, outDir))
-        else None
-      val runLog =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/lineage")))
-          Some(runIdStats(spark, outDir))
-        else None
-      (buckets, runLog)
-    }
+    val state = lineageState(spark, fs, outDir)
     val scanned = Observation("resumed_results")
     val remaining =
       if (existed) resumeFrom(turns, readResults(spark, outDir)
@@ -440,7 +480,7 @@ object Extract {
     // orphans may exist physically but must not enter the next snapshot
     val liveBefore = SnapshotStore.liveFiles(fs, resultsPath)
     df.write.mode("append").parquet(s"$outDir/results")
-    val (oldBuckets, runLog) = lineageState()
+    val (oldBuckets, runLog) = state()
     val written = observed(obs)
     val metrics = written.getOrElse(Map.empty) - "lineage"
     val incRows = metrics.getOrElse("rows", 0L).asInstanceOf[Long]
@@ -460,139 +500,142 @@ object Extract {
     // the partition-lineage table is an append-only run log whose sums
     // legitimately exceed the row count once reparseErrors has appended a
     // re-parse batch)
-    val healNeeded = written.isEmpty || existed && (markerSet ||
-      oldBuckets.isEmpty ||
-      runLog.forall { case (_, nullRunIds) => nullRunIds > 0L } ||
-      observed(scanned).map(_("rows").asInstanceOf[Long]) !=
-        Some(oldBuckets.get.map(_.rows_out).sum))
+    val healNeeded = written.isEmpty || existed && lineageStale(markerSet,
+      oldBuckets, runLog, observed(scanned).map(_("rows").asInstanceOf[Long]))
     if (healNeeded) {
       healLineage(spark, outDir)
       fs.delete(lineageMarker(outDir), false) // cleared only after the heal
     } else if (incRows > 0L) {
       val inc = LineageTally.tallies(written.get("lineage").asInstanceOf[Row])
-      val bucketsWritten = fork(writeBucketLineage(spark, outDir,
-        LineageTally.merge(oldBuckets.getOrElse(Seq.empty) ++ inc.buckets)))
-      appendRunLineage(spark, outDir, inc.parts,
-        runLog.fold(0L)(_._1 + 1L))
-      bucketsWritten()
+      writeLineage(spark, outDir,
+        LineageTally.merge(oldBuckets.getOrElse(Seq.empty) ++ inc.buckets),
+        inc.parts, runLog.fold(0L)(_._1 + 1L))
     }
     metrics
   }
 
   /** Error-row re-parse pass (Q4's loop closed; the
-    * demo_gradio_batch.py:1254-1341 resume flow): select the keys of rows
-    * that previously errored, re-drive exactly those turns through
-    * extraction, and overwrite them in place by key. Lineage stays
-    * INCREMENTAL: bucket aggregates are patched with a per-bucket delta
-    * (new-row minus old-error-row sums; rows_out and the conv_id range are
-    * invariant because the key set is unchanged), and the re-parse batch
-    * appends its own `run_id` to the partition lineage.
+    * demo_gradio_batch.py:1254-1341 resume flow): re-drive the turns whose
+    * rows errored through extraction and replace those rows in place by
+    * key, in one pass over the table and one write, keeping lineage from
+    * what the pass itself observed:
+    *  - on a second driver thread, the lineage state is read as
+    *    [[runCheckpointed]] reads it;
+    *  - ONE scan, with no shuffle, collects the names of the part-files
+    *    holding error rows (`input_file_name()`, made distinct per
+    *    partition); the same scan observes the table's row count and tallies
+    *    the error rows about to be replaced per conv_id-hash bucket
+    *    ([[LineageTally]]). No error file means nothing to do;
+    *  - ONE write stages the replacement — the affected files' non-error
+    *    rows plus the re-extracted error turns, whose tally rides the
+    *    write's observation — straight into `results_reparse_tmp`;
+    *  - the staged files move in and the swap commits (below); then the
+    *    driver patches `lineage_buckets` from the three tallies (per bucket
+    *    filtered/error/md sums become old − replaced + new; `rows_out` and
+    *    the conv_id range are invariant because the key set is unchanged)
+    *    and appends the pass to the partition lineage under a fresh
+    *    `run_id`, the two lineage writes running concurrently.
+    * `lineage.part_id` of a reparse run is therefore the task partition of
+    * the write that re-extracted the rows.
+    *
+    * Self-healing: the pass never takes a delta against lineage it cannot
+    * trust. On the conditions [[runCheckpointed]] heals on — the reparse
+    * marker, a missing lineage table, a null `run_id`, a bucket `rows_out`
+    * sum other than the observed row count, an observation that came back
+    * empty — or when a bucket's row count moved (an error key missing from,
+    * or duplicated in, the transcripts), it recomputes both lineage tables
+    * from the committed results instead of patching them; a table with no
+    * error rows is healed all the same.
     *
     * Scale note: the rewrite is FILE-granular — only the part-files that
-    * contain error rows (identified by input_file_name() during the same
-    * pruned scan that finds the error keys) are retired and replaced; every
-    * other file survives byte-identical (spec-asserted). This matches
-    * Iceberg MERGE's I/O granularity. Transactionality (round 5): the swap commits through the
+    * contain error rows are retired and replaced; every other file survives
+    * byte-identical (spec-asserted). This matches Iceberg MERGE's I/O
+    * granularity. Transactionality: the swap commits through the
     * [[SnapshotStore]] manifest — replacements move in under fresh names,
     * ONE manifest rename publishes the new file set, and replaced files
-    * stay on disk backing the pre-reparse snapshot (round 7 retention
-    * contract; [[expireResultSnapshots]] retires them), so
-    * manifest-resolving readers observe either the old or the new table,
-    * never a mix (COVERAGE.md divergence #2 is thereby narrowed to
-    * concurrent-writer arbitration). Replacement files accumulate per
-    * pass; compaction and expiry are separate concerns, as for Iceberg —
-    * [[compactResults]] also sweeps any orphans a crashed pass left.
-    * Assumes every error key still exists in the transcripts table (true
-    * here by construction: error rows originate from it).
+    * stay on disk backing the pre-reparse snapshot (retention contract;
+    * [[expireResultSnapshots]] retires them), so manifest-resolving readers
+    * observe either the old or the new table, never a mix (COVERAGE.md
+    * divergence #2 is thereby narrowed to concurrent-writer arbitration).
+    * The marker goes down before the commit and is cleared only once
+    * lineage is consistent again, so a crash in between forces the next
+    * run to heal. Replacement files accumulate per pass; compaction and
+    * expiry are separate concerns, as for Iceberg — [[compactResults]]
+    * also sweeps any orphans a crashed pass left. Assumes every error key
+    * still exists in the transcripts table (true here by construction:
+    * error rows originate from it; otherwise lineage heals).
     *
-    * Driver-list guard (round 5): the error-file list is collected on the
-    * driver — control-plane-sized at realistic error rates, but a SYSTEMIC
-    * payload bug could smear errors across every file, degenerating the
+    * Driver-list guard: the error-file list is collected on the driver —
+    * control-plane-sized at realistic error rates, but a SYSTEMIC payload
+    * bug could smear errors across every file, degenerating the
     * "file-granular" rewrite into a full-table rewrite driven through a
-    * driver-held array and a per-file delete loop. When error files exceed
-    * half the live set, fall back to an explicit whole-table rewrite
-    * (`rewrite_mode` = "full" in the returned metrics, with a log line);
-    * the lineage delta patch is granularity-independent either way.
+    * driver-held list. When error files exceed half the live set, fall
+    * back to an explicit whole-table rewrite (`rewrite_mode` = "full" in
+    * the returned metrics, with a log line); the lineage patch is
+    * granularity-independent either way.
     */
   def reparseErrors(spark: SparkSession, transcriptsPath: String,
                     outDir: String): Map[String, Any] = {
+    import spark.implicits._
     val resultsPath = new org.apache.hadoop.fs.Path(s"$outDir/results")
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireFlat(fs, resultsPath)
     val marker = lineageMarker(outDir)
-    // a crashed previous pass (marker present) or a pre-run_id lineage
-    // table: heal BEFORE taking deltas against it (a healed run log holds
-    // run 0 only)
-    val (maxRunId, nullRunIds) =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/lineage")))
-        runIdStats(spark, outDir)
-      else (-1L, 0L)
-    val healed = fs.exists(marker) || nullRunIds > 0L
-    if (healed) {
-      healLineage(spark, outDir)
-      fs.delete(marker, false)
-    }
+    val markerSet = fs.exists(marker)
+    val state = lineageState(spark, fs, outDir)
     val results = readResults(spark, outDir)
-    val errKeys = results.where(col("status") === "error")
-      .select("conv_id", "turn_idx")
-    if (errKeys.limit(1).count() == 0L)
+    val isError = col("status") === "error"
+    val tally = LineageTally.column(bucketHash(col("conv_id"))).as("lineage")
+    val scanned = Observation("reparse_scanned")
+    val replaced = Observation("reparse_replaced")
+    // the filter stays above the count's observation (Spark pushes no
+    // filter through one), so the count covers every row
+    val errFiles = results.select("conv_id", "filtered", "status", "md")
+      .observe(scanned, count(lit(1)).as("rows"))
+      .where(isError).observe(replaced, tally)
+      .select(input_file_name()).as[String]
+      .mapPartitions(_.toSet.iterator)
+      .collect().map(SnapshotStore.qualify(fs, _)).toSet
+    val (oldBuckets, runLog) = state()
+    val stale = lineageStale(markerSet, oldBuckets, runLog,
+      observed(scanned).map(_("rows").asInstanceOf[Long]))
+    def heal(): Unit = {
+      healLineage(spark, outDir)
+      fs.delete(marker, false) // cleared only after the heal
+    }
+    if (errFiles.isEmpty) {
+      if (stale) heal()
       return Map("rows" -> 0L, "rewrite_mode" -> "none")
+    }
 
-    // aggregates of the rows being replaced — materialized (≤ nBuckets
-    // rows) BEFORE the results dir is swapped out from under the plan
-    val oldAgg = bucketLineage(results.where(col("status") === "error"))
-      .select(col("bucket"), col("filtered_rows").as("f_old"),
-        col("error_rows").as("e_old"), col("md_chars").as("m_old"))
-      .localCheckpoint(true)
+    // manifest bootstrap BEFORE any file moves: from here on, readers
+    // resolve through a committed snapshot, so nothing below is visible
+    // until the commit
+    val live = SnapshotStore.bootstrap(fs, resultsPath,
+      listDataFiles(fs, resultsPath).toSeq.sorted).toSet
+    val fullRewrite = errFiles.size * 2 > live.size
+    if (fullRewrite)
+      System.err.println(s"[graft] reparse: ${errFiles.size} of " +
+        s"${live.size} files contain errors — falling back from " +
+        "file-granular to whole-table rewrite")
+    // the rows of the affected files (file-granular) or of the whole table
+    // (fallback): their error keys are re-extracted, the rest kept
+    val affected =
+      if (fullRewrite) results
+      else spark.read.schema(resultsSchema).parquet(errFiles.toSeq.sorted: _*)
+    val turnsErr = readTranscripts(spark, transcriptsPath).toDF()
+      .join(affected.where(isError).select("conv_id", "turn_idx"),
+        Seq("conv_id", "turn_idx"), "left_semi").as[Turn]
+    val (inc, obs) = withObservedMetrics(
+      extract(turnsErr).sortWithinPartitions("conv_id", "turn_idx"), tally)
 
-    val incDir = s"$outDir/results_reparse_inc"
     val tmpDir = s"$outDir/results_reparse_tmp"
-    val incPath = new org.apache.hadoop.fs.Path(incDir)
     val tmpPath = new org.apache.hadoop.fs.Path(tmpDir)
-    // scratch dirs are fully re-derivable: clear any leftovers from a
-    // crashed pass up front, and always clean up on exit (success or not)
+    // the staging dir is fully re-derivable: clear any leftover from a
+    // crashed pass up front, and always clean up on exit
     try {
-      fs.delete(incPath, true); fs.delete(tmpPath, true)
-
-      // re-extract exactly the error keys; materialize the increment to
-      // its own dir so the merge, the lineage delta, and the
-      // partition-lineage batch all read it without re-running extraction
-      import spark.implicits._
-      val turnsErr = readTranscripts(spark, transcriptsPath).toDF()
-        .join(errKeys, Seq("conv_id", "turn_idx"), "left_semi").as[Turn]
-      val (incDf, obs) = withObservedMetrics(
-        extract(turnsErr).sortWithinPartitions("conv_id", "turn_idx"))
-      incDf.write.mode("overwrite").parquet(incDir)
-      val metrics = observed(obs).getOrElse(Map.empty[String, Any])
-      val inc = spark.read.schema(resultsSchema).parquet(incDir)
-
-      // manifest bootstrap BEFORE any file moves: from here on, readers
-      // resolve through a committed snapshot, so nothing below is visible
-      // until the commit
-      val live = SnapshotStore.bootstrap(fs, resultsPath,
-        listDataFiles(fs, resultsPath).toSeq.sorted).toSet
-
-      // merge-by-key, FILE-granular (see Scaladoc scale note): only the
-      // part-files that actually CONTAIN error rows are rewritten —
-      // input_file_name() identifies them exactly during the same pruned
-      // scan that found the error keys, with no footer-stats machinery.
-      val errFiles = results
-        .withColumn("__f", input_file_name())
-        .where(col("status") === "error")
-        .select("__f").distinct().collect()
-        .map(r => SnapshotStore.qualify(fs, r.getString(0))).toSet
-      val fullRewrite = errFiles.size * 2 > live.size
-      if (fullRewrite)
-        System.err.println(s"[graft] reparse: ${errFiles.size} of " +
-          s"${live.size} files contain errors — falling back from " +
-          "file-granular to whole-table rewrite")
-
-      // the survivors: non-error rows of the affected files (file-granular)
-      // or of the whole table (fallback)
-      val keptSrc =
-        if (fullRewrite) results
-        else spark.read.schema(resultsSchema).parquet(errFiles.toSeq.sorted: _*)
-      keptSrc.where(col("status") =!= "error").unionByName(inc)
+      fs.delete(tmpPath, true)
+      affected.where(!isError).unionByName(inc)
         .write.mode("overwrite").parquet(tmpDir)
 
       // tmp fully materialized: move replacements in (fresh UUID names),
@@ -602,48 +645,30 @@ object Extract {
       fs.create(marker, true).close()
       // reparse = replace the error-holding files (or the whole live set
       // in fallback) with the rewritten ones — an (adds, removes) delta,
-      // committed through the rebase loop (round 6)
+      // committed through the rebase loop. Replaced files are NOT deleted
+      // (retention contract): the pre-reparse snapshot still lists them,
+      // and expireResultSnapshots retires them with it.
       SnapshotStore.commitRebase(fs, resultsPath, adds = moved,
         removes = (if (fullRewrite) live else errFiles).toSeq)
-      // replaced files are NOT deleted here (round 7, retention contract):
-      // the pre-reparse snapshot manifest still lists them, so they back a
-      // time-travel read of the pre-reparse table; expireResultSnapshots
-      // retires them when that snapshot expires. Only unreferenced
-      // stragglers (none in the normal flow) would be sweepable, and the
-      // next rewrite's orphan sweep handles those.
 
-      // bucket-lineage delta patch: only the three content sums move
-      val newAgg = bucketLineage(inc)
-        .select(col("bucket"), col("filtered_rows").as("f_new"),
-          col("error_rows").as("e_new"), col("md_chars").as("m_new"))
-      val patched = spark.read.schema(bucketLineageSchema(spark))
-        .parquet(s"$outDir/lineage_buckets")
-        .join(oldAgg, Seq("bucket"), "left")
-        .join(newAgg, Seq("bucket"), "left")
-        .select(col("bucket"),
-          col("rows_out"),
-          (col("filtered_rows") - coalesce(col("f_old"), lit(0L)) +
-            coalesce(col("f_new"), lit(0L))).as("filtered_rows"),
-          (col("error_rows") - coalesce(col("e_old"), lit(0L)) +
-            coalesce(col("e_new"), lit(0L))).as("error_rows"),
-          (col("md_chars") - coalesce(col("m_old"), lit(0L)) +
-            coalesce(col("m_new"), lit(0L))).as("md_chars"),
-          col("min_conv_id"), col("max_conv_id"))
-        .localCheckpoint(true)
-      patched.write.mode("overwrite").parquet(s"$outDir/lineage_buckets")
-      patched.unpersist(blocking = false)
-      oldAgg.unpersist(blocking = false)
-
-      val runId = (if (healed) 0L else maxRunId) + 1L
-      partitionLineage(inc).withColumn("run_id", lit(runId))
-        .write.mode("append").parquet(s"$outDir/lineage")
-      // lineage consistent again: clear the heal marker
-      fs.delete(marker, false)
-      metrics + ("rewrite_mode" ->
+      val written = observed(obs)
+      def tallies(m: Map[String, Any]) =
+        LineageTally.tallies(m("lineage").asInstanceOf[Row])
+      val patch = for {
+        w <- written if !stale
+        r <- observed(replaced)
+        added = tallies(w)
+        buckets <- patchBuckets(oldBuckets.get, tallies(r).buckets, added.buckets)
+      } yield (buckets, added.parts)
+      patch match {
+        case Some((buckets, parts)) =>
+          writeLineage(spark, outDir, buckets, parts, runLog.get._1 + 1L)
+          fs.delete(marker, false) // lineage consistent again
+        case None => heal()
+      }
+      (written.getOrElse(Map.empty) - "lineage") + ("rewrite_mode" ->
         (if (fullRewrite) "full" else "file_granular"))
-    } finally {
-      fs.delete(incPath, true); fs.delete(tmpPath, true)
-    }
+    } finally fs.delete(tmpPath, true)
   }
 
   /** Table maintenance: compact a results dir whose file count has grown
@@ -746,9 +771,9 @@ object Extract {
     * from the reference-golden parquet). The hash is the portable
     * md5-prefix family (DuckDB-recomputable).
     */
-  def bucketLineage(results: DataFrame, nBuckets: Int = 32): DataFrame = {
+  def bucketLineage(results: DataFrame): DataFrame = {
     results
-      .withColumn("bucket", bucketHash(col("conv_id"), nBuckets))
+      .withColumn("bucket", bucketHash(col("conv_id")))
       .groupBy(col("bucket"))
       .agg(
         count(lit(1)).as("rows_out"),

@@ -10,18 +10,20 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, conv, lit, md5, pmod, substring, sum => fsum}
+import org.apache.spark.sql.functions.{col, conv, lit, md5, pmod, substring, sum => fsum, xxhash64}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{Extract, Turn}
 
-/** The one-pass checkpointed append: lineage is tallied inside the results
-  * write and the heal check reads numbers the run already holds. Pins the
+/** The one-pass checkpointed append and reparse: lineage is tallied inside
+  * the results write (and, for a reparse, the scan that finds the error
+  * files) and the heal check reads numbers the run already holds. Pins the
   * Spark job budget per call, the tally's equivalence with a full
   * `bucketLineage` recompute (including UTF-8 string order and code-point
-  * md counts), and that resumes whose observed subtree AQE may prune
-  * finish without waiting and heal only a broken invariant.
+  * md counts), that resumes whose observed subtree AQE may prune finish
+  * without waiting and heal only a broken invariant, and that a reparse
+  * heals lineage it cannot patch.
   */
 class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -65,6 +67,11 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def rowsOf(m: Map[String, Any]): Long = m("rows").asInstanceOf[Long]
 
+  /** A reparse that fails the spec instead of hanging it. */
+  private def reparse(transcripts: String, out: String): Map[String, Any] =
+    Await.result(Future(Extract.reparseErrors(spark, transcripts, out)),
+      5.minutes)
+
   /** (name, size, mtime) of every lineage part-file. */
   private def lineageFiles(out: String): Seq[(String, Long, Long)] =
     Seq("lineage", "lineage_buckets").flatMap { dir =>
@@ -73,8 +80,36 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(f => (s"$dir/${f.getName}", f.length(), f.lastModified()))
     }.sorted
 
+  /** (path, size, mtime) of every file under `out`: results, manifests,
+    * both lineage tables, the marker and any staging dir.
+    */
+  private def tree(out: String): Seq[(String, Long, Long)] = {
+    val root = java.nio.file.Paths.get(out)
+    val ps = java.nio.file.Files.walk(root)
+    try ps.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => (root.relativize(p).toString, java.nio.file.Files.size(p),
+        java.nio.file.Files.getLastModifiedTime(p).toMillis)).toSeq.sorted
+    finally ps.close()
+  }
+
   private def buckets(out: String): Seq[Row] =
     spark.read.parquet(s"$out/lineage_buckets").orderBy("bucket").collect().toSeq
+
+  /** A full `bucketLineage` recompute over the live results. */
+  private def recomputed(out: String): Seq[Row] =
+    Extract.bucketLineage(Extract.readResults(spark, out))
+      .orderBy("bucket").collect().toSeq
+
+  private def markerLeft(out: String): Boolean =
+    new java.io.File(s"$out/_lineage_patch_pending").exists()
+
+  private def errorRows(out: String): Long =
+    Extract.readResults(spark, out).where(col("status") === "error").count()
+
+  /** rows_out summed per `run_id` of the partition lineage. */
+  private def perRun(out: String): Map[Long, Long] =
+    spark.read.parquet(s"$out/lineage").groupBy("run_id")
+      .agg(fsum("rows_out")).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** The first conv_id-prefix half of t1 as its own transcripts table. */
   private def firstHalf(base: String): (String, Long) = {
@@ -157,9 +192,7 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
         mds.map(_.length.toLong).sum)
 
       // partition lineage: one run per increment, rows_out sums to each
-      val perRun = spark.read.parquet(s"$out/lineage").groupBy("run_id")
-        .agg(fsum("rows_out")).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(perRun === Map(0L -> halfRows, 1L -> secondRows))
+      assert(perRun(out) === Map(0L -> halfRows, 1L -> secondRows))
     }
 
   test("resumes whose observed subtree AQE may prune finish and heal only when unsure or broken") {
@@ -198,4 +231,78 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
       } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
+
+  test("job budget per reparse: injected errors <=9, no error rows <=3") {
+    val out = s"${tmp("graft-ckpt-reparse-jobs")}/out"
+    assert(rowsOf(run("data/transcripts_t1", out)) === 1163L)
+    val n = Extract.injectTransientErrors(spark, out,
+      col("conv_id") === "t1-conv-00007")
+    assert(n > 0L)
+    val (m, injected) = counted(reparse("data/transcripts_t1", out))
+    assert(rowsOf(m) === n)
+    assert(errorRows(out) === 0L)
+    val files = tree(out)
+    val (m0, none) = counted(reparse("data/transcripts_t1", out))
+    assert(rowsOf(m0) === 0L && m0("rewrite_mode") === "none")
+    info(s"jobs: reparse of $n injected errors $injected, no error rows $none")
+    assert(injected <= 9, s"reparse of injected errors ran $injected jobs")
+    assert(none <= 3, s"reparse with no error rows ran $none jobs")
+    assert(tree(out) === files, "reparse with no error rows touched a file")
+  }
+
+  // a reparse must not take a delta against lineage it cannot trust: both
+  // damages keep the results intact, so only the heal check can see them
+  for (damage <- Seq("missing", "one row short"))
+    test(s"reparse heals a lineage_buckets table that is $damage") {
+      val out = s"${tmp("graft-ckpt-reparse-heal")}/out"
+      assert(rowsOf(run("data/transcripts_t1", out)) === 1163L)
+      assert(Extract.injectTransientErrors(spark, out,
+        col("conv_id") === "t1-conv-00007") > 0L)
+      val dir = new org.apache.hadoop.fs.Path(s"$out/lineage_buckets")
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (damage == "missing") fs.delete(dir, true)
+      else {
+        val kept = buckets(out).tail
+        spark.createDataFrame(kept.asJava, spark.read.parquet(dir.toString).schema)
+          .write.mode("overwrite").parquet(dir.toString)
+      }
+      assert(rowsOf(reparse("data/transcripts_t1", out)) > 0L)
+      assert(errorRows(out) === 0L)
+      assert(buckets(out) === recomputed(out))
+      assert(!markerLeft(out), "reparse left its marker behind")
+    }
+
+  // file-granular: one conversation of t1 and every unicode conversation
+  // fail, which the range split keeps to a few files; full rewrite: a third
+  // of the rows fail, smeared over every file
+  for (smeared <- Seq(false, true))
+    test("reparse lineage patch equals a full bucketLineage recompute" +
+        (if (smeared) " (full rewrite)" else " (file-granular)")) {
+      val base = tmp("graft-ckpt-reparse-tally")
+      val split = s"$base/split"
+      Extract.readTranscripts(spark, "data/transcripts_t1").toDF()
+        .unionByName(unicodeTurns())
+        .repartitionByRange(8, col("conv_id")).write.parquet(split)
+      val out = s"$base/out"
+      val total = rowsOf(run(split, out))
+      def rows() = Extract.readResults(spark, out)
+        .orderBy("conv_id", "turn_idx").collect().toSeq
+      val clean = rows()
+      val pred =
+        if (smeared) pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(3)) === 0
+        else col("conv_id") === "t1-conv-00007" ||
+          col("conv_id").startsWith("Ａ") || col("conv_id").startsWith("😀")
+      assert(Extract.injectTransientErrors(spark, out, pred) > 0L)
+      val errors = errorRows(out)
+      assert(perRun(out) === Map(0L -> total))
+
+      val m = reparse(split, out)
+      assert(m("rewrite_mode") === (if (smeared) "full" else "file_granular"))
+      assert(rowsOf(m) === errors)
+      assert(buckets(out) === recomputed(out))
+      // patched, not healed: the pass is one more run holding its rows
+      assert(perRun(out) === Map(0L -> total, 1L -> errors))
+      assert(rows() === clean)
+      assert(!markerLeft(out))
+    }
 }
