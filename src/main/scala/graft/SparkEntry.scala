@@ -259,7 +259,8 @@ object SparkEntry {
       val (e1, idx1) = DocOps.nearDupEdgesAppend(None, b1, tau = 0.5)
       val labels1 = DocOps.keepersFromEdges(b1, e1)
       val (eNew, _) = DocOps.nearDupEdgesAppend(Some((b1, idx1)), d.where(isNew), tau = 0.5)
-      DocOps.keepersFromEdgesIncremental(d, labels1, eNew).orderBy("doc_id")
+      DocOps.resolveKeepers(labels1.union(
+        DocOps.keepersFromEdges(d.where(isNew), eNew, Some(labels1)))).orderBy("doc_id")
     }),
 
     "doc_simhash_pairs" -> ((s, dir) =>
@@ -290,7 +291,8 @@ object SparkEntry {
       val (e1, idx1) = DocOps.simhashEdgesAppend(None, b1, maxDist = 3)
       val labels1 = DocOps.keepersFromEdges(b1, e1)
       val (eNew, _) = DocOps.simhashEdgesAppend(Some(idx1), d.where(isNew), maxDist = 3)
-      DocOps.keepersFromEdgesIncremental(d, labels1, eNew).orderBy("doc_id")
+      DocOps.resolveKeepers(labels1.union(
+        DocOps.keepersFromEdges(d.where(isNew), eNew, Some(labels1)))).orderBy("doc_id")
     }),
 
     "doc_lang_id" -> ((s, dir) => DocOps.langId(docs(s, dir)).orderBy("doc_id")),

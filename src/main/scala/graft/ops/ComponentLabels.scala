@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected-component labels dispatched on the size of the edge set — the
-  * one entry point of every keeper path ([[DocOps.keepersFromEdges]],
-  * [[DocOps.keepersFromEdgesIncremental]], [[DocOps.keepersDeltaIncremental]]).
+  * CC step of [[DocOps.keepersFromEdges]], the one keeper function of
+  * batch dedup, the appends and [[graft.streaming.DedupStream]].
   */
 object ComponentLabels {
 

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Training-data pipeline operators over a `documents(doc_id, text, lang,
   * source, n_chars)` corpus. All stages are Column-expression only (full
@@ -23,9 +24,10 @@ import org.apache.spark.sql.functions._
   * 64 rows per distinct text; SimHash: (doc_id, simhash, chunk_idx,
   * chunk_val), maxDist+1 rows per distinct fingerprint) plus the keeper
   * labels (doc_id, keeper_doc_id). A step returns the edges incident to its
-  * batch and its own band rows; [[keepersFromEdges]] (no state) or
-  * [[keepersFromEdgesIncremental]] / [[keepersDeltaIncremental]] turn the
-  * edges into labels. The MinHash append also takes the OLD docs — old
+  * batch and its own band rows; [[keepersFromEdges]] turns them into label
+  * rows against the prior labels (none for a batch run), and
+  * [[resolveKeepers]] resolves any union of label rows to the keeper
+  * table by per-doc minimum. The MinHash append also takes the OLD docs — old
   * only, never old ∪ batch — to verify old candidates by exact Jaccard;
   * the SimHash append verifies from the fingerprints in the index alone.
   * [[graft.streaming.DedupStream]] keeps this state as parquet deltas.
@@ -300,7 +302,8 @@ object DocOps {
     * batch doc identical or near-dup to ANY old doc collides with that
     * doc's rep in band space exactly as in a full run — old edges ∪ these
     * edges have the closure of [[nearDupEdges]] over old ∪ batch, and
-    * [[keepersFromEdgesIncremental]] over them equals the full recompute.
+    * [[keepersFromEdges]] over them against the old labels, resolved with
+    * them ([[resolveKeepers]]), equals the full recompute.
     * New↔old-member pairs are covered through the old member's rep and
     * its old star edge.
     */
@@ -454,8 +457,9 @@ object DocOps {
     * Closure composition (spec-asserted, incl. chained appends from empty
     * state ≡ [[simhashKeepers]]): fingerprints are pure functions of text,
     * so old edges ∪ these edges have the closure of [[simhashEdges]] over
-    * old ∪ batch, and [[keepersFromEdgesIncremental]] over them equals the
-    * full recompute (the `doc_simhash_keepers_incr` oracle).
+    * old ∪ batch, and [[keepersFromEdges]] over them against the old
+    * labels, resolved with them ([[resolveKeepers]]), equals the full
+    * recompute (the `doc_simhash_keepers_incr` oracle).
     */
   def simhashEdgesAppend(oldIndex: Option[DataFrame], newDocs: DataFrame,
                          maxDist: Int = 3): (DataFrame, DataFrame) = {
@@ -527,7 +531,7 @@ object DocOps {
     * linear [[simhashEdges]] relation.
     */
   def simhashKeepers(docs: DataFrame, maxDist: Int = 3, maxIters: Int = 25): DataFrame =
-    keepersFromEdges(docs, simhashEdges(docs, maxDist), maxIters)
+    keepersFromEdges(docs, simhashEdges(docs, maxDist), maxIters = maxIters)
 
   // ------------------------------------------------------------ text analysis
 
@@ -1763,34 +1767,72 @@ object DocOps {
     * join passes over (id, id) rows only, never text.
     */
   def dedupKeepers(docs: DataFrame, tau: Double = 0.5, maxIters: Int = 25): DataFrame =
-    keepersFromEdges(docs, nearDupEdges(docs, tau), maxIters)
+    keepersFromEdges(docs, nearDupEdges(docs, tau), maxIters = maxIters)
 
-  /** [[dedupKeepers]] with an explicit edge set — the same CC labels over
-    * any near-dup relation (MinHash, SimHash, embedding-cosine), and the
-    * entry point the adversarial-scale spec drives with a synthetic
-    * high-diameter graph.
+  /** Keeper label rows for `docs` from an edge set, against the `prior`
+    * keeper table (None: no prior state, a batch run) — the one keeper
+    * function of batch dedup, the `_incr` queries and
+    * [[graft.streaming.DedupStream]], over any near-dup relation (MinHash,
+    * SimHash, embedding-cosine):
     *
-    * Labels come from [[ComponentLabels.labelsOf]]: an edge set within
-    * `spark.sql.autoBroadcastJoinThreshold` (16 bytes an edge) is solved
-    * on the driver by union-find — it fits one node by Spark's own
-    * broadcast bound, and the fixpoint's ~16 jobs would be pure scheduling
-    * overhead; a larger one runs the [[componentLabels]] fixpoint. Both
-    * give the exact component minima.
+    *  1. [[contractEdges]] maps every edge endpoint through `prior`, an
+    *     exact contraction of the old graph, so old edges are never
+    *     revisited;
+    *  2. [[ComponentLabels.labelsOf]] labels the contracted graph: an edge
+    *     set within `spark.sql.autoBroadcastJoinThreshold` (16 bytes an
+    *     edge) by union-find on the driver, a larger one by the
+    *     [[componentLabels]] fixpoint — exact component minima either way;
+    *  3. the rows: every doc of `docs` (its contracted component's
+    *     minimum; self when it is no contracted node — an isolated doc, or
+    *     one the prior already labels, whose prior row then wins under
+    *     [[resolveKeepers]]) plus every prior doc whose root moved to a
+    *     smaller merged minimum.
+    *
+    * With a prior the rows are a DELTA: [[resolveKeepers]] over prior ∪
+    * rows is the keeper table of old ∪ new edges (spec-asserted, including
+    * old-component merges), at a cost proportional to the affected
+    * subgraph — at most |edges| contracted edges, and a merge of two
+    * million-doc components is ONE of them. With no prior the same
+    * expression runs over an empty prior, which Spark's empty-relation
+    * pruning removes from the plan: the rows are the keeper table of
+    * `docs` itself.
     */
-  def keepersFromEdges(docs: DataFrame, edges0: DataFrame,
+  def keepersFromEdges(docs: DataFrame, edges: DataFrame,
+                       prior: Option[DataFrame] = None,
                        maxIters: Int = 25): DataFrame = {
-    // edge-touched docs only; isolated docs — the corpus majority — join
-    // back with keeper=self (a broadcast join whenever the labels came
-    // back driver-sized)
-    val labels = ComponentLabels.labelsOf(edges0, maxIters)
-    docs.select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("keeper_doc_id"))
+    val labels0 = prior.getOrElse(docs.sparkSession.createDataFrame(
+        java.util.Collections.emptyList[Row](), KeeperSchema))
+      .select(col("doc_id"), col("keeper_doc_id"))
+    val relabel = ComponentLabels.labelsOf(contractEdges(labels0, edges), maxIters)
+    // edge-touched docs the prior does not know are contracted-graph nodes
+    // under their own id; isolated docs — the corpus majority — label self
+    // (a broadcast join whenever the labels came back driver-sized)
+    val docRows = docs.select(col("doc_id"))
+      .join(relabel, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("keeper_doc_id"))
+    // prior docs change label iff their root was relabeled to a smaller
+    // merged-component minimum
+    val moved = relabel.where(col("label") =!= col("doc_id"))
+      .select(col("doc_id").as("keeper_doc_id"), col("label"))
+    docRows.union(labels0.join(moved, Seq("keeper_doc_id"))
+      .select(col("doc_id"), col("label").as("keeper_doc_id")))
   }
 
+  /** (doc_id, keeper_doc_id): the schema of keeper label rows. */
+  private[graft] val KeeperSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("keeper_doc_id", LongType)))
+
+  /** The keeper table of a union of label rows — a prior table and the
+    * [[keepersFromEdges]] rows of later appends: per doc_id the MINIMUM
+    * keeper. In an append-only graph a component's minimum only falls as
+    * components merge, so on consistent state the minimum is the newest
+    * row; and a re-ingested doc's self row loses to its prior label.
+    */
+  def resolveKeepers(rows: DataFrame): DataFrame =
+    rows.groupBy(col("doc_id")).agg(min(col("keeper_doc_id")).as("keeper_doc_id"))
+
   /** Contraction of the OLD near-dup graph under its label table — the
-    * trunk of [[keepersFromEdgesIncremental]]: every new edge's endpoints
+    * first step of [[keepersFromEdges]]: every new edge's endpoints
     * are mapped to their existing component label (keeper), endpoints
     * unknown to `labels0` (brand-new docs) map to themselves, and edges
     * that collapse within one old component drop out. The result is an
@@ -1815,83 +1857,6 @@ object DocOps {
       .select(coalesce(col("la"), col("doc_a")).as("doc_a"),
         coalesce(col("lb"), col("doc_b")).as("doc_b"))
       .where(col("doc_a") =!= col("doc_b"))
-  }
-
-  /** INCREMENTAL keeper maintenance across appends (round 7) — the
-    * production shape of [[keepersFromEdges]]: a 100-TB pipeline appends
-    * batches and must maintain labels without recomputing the full CC
-    * fixpoint from scratch. Given `labels0` = the keeper table of a prior
-    * run and `newEdges` = the edges incident to the appended batch (plus
-    * any newly discovered ones), returns the keeper table for ALL of
-    * `docs` — byte-identical to a full recompute over oldEdges ∪ newEdges
-    * (spec-asserted, including old-component merges), at a cost
-    * proportional to the AFFECTED subgraph:
-    *
-    *  1. [[contractEdges]] maps new-edge endpoints through `labels0` —
-    *     the label table is an exact contraction of the old graph, so old
-    *     edges never need to be revisited;
-    *  2. component labels ([[ComponentLabels.labelsOf]]: driver union-find
-    *     when it fits the broadcast threshold, else the [[componentLabels]]
-    *     fixpoint) over the contracted graph only — ≤|newEdges| edges, and
-    *     a single merge of two million-doc components is ONE contracted
-    *     edge;
-    *  3. the relabel table (old root → new root, new doc → root) joins
-    *     back over `labels0` on the label column — a join against a
-    *     relabel side bounded by the affected components (broadcast-sized
-    *     in the steady state; unaffected docs pass through unchanged, new
-    *     isolated docs label themselves).
-    */
-  def keepersFromEdgesIncremental(docs: DataFrame, labels0: DataFrame,
-                                  newEdges: DataFrame,
-                                  maxIters: Int = 25): DataFrame = {
-    val relabel = ComponentLabels.labelsOf(contractEdges(labels0, newEdges), maxIters)
-    docs.select(col("doc_id"))
-      .join(labels0.select(col("doc_id"), col("keeper_doc_id")), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("keeper_doc_id"), col("doc_id")).as("l0"))
-      .join(relabel.select(col("doc_id").as("l0"), col("label").as("l1")),
-        Seq("l0"), "left")
-      .select(col("doc_id"), coalesce(col("l1"), col("l0")).as("keeper_doc_id"))
-  }
-
-  /** Label DELTA of an incremental append (round 8) — the I/O-layer
-    * companion of [[keepersFromEdgesIncremental]]: instead of the full
-    * keeper table for ALL docs, emit rows ONLY for
-    *  - the appended docs (label = their component min, self if isolated),
-    *  - previously-labeled docs whose component MERGED (old root relabeled).
-    *
-    * Resolving a chain of these deltas newest-row-wins (per doc_id, the
-    * highest version's row — [[graft.streaming.DedupStream.readLabels]])
-    * reproduces [[keepersFromEdgesIncremental]]'s full table exactly
-    * (spec-asserted): unaffected old docs keep their earlier rows, and the
-    * delta's two classes are precisely the rows the full recompute would
-    * change. This is what makes per-batch state WRITES batch-incident
-    * (O(batch + affected components)) instead of corpus-proportional.
-    *
-    * Same exact-contraction argument as [[keepersFromEdgesIncremental]]:
-    * `labels0` maps every old doc to its component MINIMUM, so the star
-    * fixpoint over the contracted graph yields true merged-component
-    * minima, and an old doc's label changes iff its old root's does.
-    */
-  private[graft] def keepersDeltaIncremental(newDocIds: DataFrame, labels0: DataFrame,
-                                             newEdges: DataFrame,
-                                             maxIters: Int = 25): DataFrame = {
-    val relabel = ComponentLabels.labelsOf(contractEdges(labels0, newEdges), maxIters)
-    // appended docs: edge-touched ones are contracted-graph nodes under
-    // their own id (they have no labels0 entry), isolated ones label self
-    val newLab = newDocIds.select(col("doc_id"))
-      .join(relabel, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("keeper_doc_id"))
-    // old docs change label iff their old root was relabeled to a smaller
-    // merged-component minimum
-    val changedRoots = relabel.where(col("label") =!= col("doc_id"))
-      .select(col("doc_id").as("keeper_doc_id"), col("label"))
-    val oldLab = labels0.select(col("doc_id"), col("keeper_doc_id"))
-      .join(changedRoots, Seq("keeper_doc_id"))
-      .select(col("doc_id"), col("label").as("keeper_doc_id"))
-    // appended ids are new to the state, so the union is disjoint
-    newLab.union(oldLab)
   }
 
   /** Connected-component labels over an undirected adjacency table (both

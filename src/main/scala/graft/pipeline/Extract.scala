@@ -616,7 +616,7 @@ object Extract {
     val fullRewrite = errFiles.size * 2 > live.size
     if (fullRewrite)
       System.err.println(s"[graft] reparse: ${errFiles.size} of " +
-        s"${live.size} files contain errors — falling back from " +
+        s"${live.size} files contain errors; falling back from " +
         "file-granular to whole-table rewrite")
     // the rows of the affected files (file-granular) or of the whole table
     // (fallback): their error keys are re-extracted, the rest kept

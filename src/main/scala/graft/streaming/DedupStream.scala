@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.ops.DocOps
@@ -13,10 +12,11 @@ import graft.ops.DocOps
   * SimHash band index for collisions (verification is bit_count(xor) on
   * fingerprints already stored in the index — the historical corpus is
   * never re-read), and maintains the keeper-label table via CC labels of
-  * the contracted graph ([[DocOps.keepersDeltaIncremental]]). Every batch,
-  * the first included, is one [[DocOps.simhashEdgesAppend]] step: the
-  * bootstrap is the step with no prior state, so its deltas are the
-  * batch's rep band rows and its [[DocOps.keepersFromEdges]] labels.
+  * the contracted graph. Every batch, the first included, is one
+  * [[DocOps.simhashEdgesAppend]] step and one [[DocOps.keepersFromEdges]]
+  * call against the labels so far: the bootstrap is that same call with
+  * no prior state, so its deltas are the batch's rep band rows and its
+  * batch keepers.
   *
   * State layout under `stateDir` (plain parquet, versioned by batch id —
   * round 8: every version is a DELTA, so per-batch bytes WRITTEN are
@@ -25,24 +25,34 @@ import graft.ops.DocOps
   *   index_v<batchId>/    THIS batch's rep band rows (doc_id, simhash,
   *                        chunk_idx, chunk_val); the live index is the
   *                        union of all versions ([[readIndex]])
-  *   labels_v<batchId>/   label rows CHANGED by this batch: the batch's
-  *                        own docs + old docs whose component merged; the
-  *                        live keeper table resolves newest-row-wins per
-  *                        doc_id ([[readLabels]])
+  *   labels_v<batchId>/   label rows of this batch: the batch's own docs +
+  *                        old docs whose component merged; the live keeper
+  *                        table is the per-doc MINIMUM over all versions
+  *                        ([[readLabels]], [[DocOps.resolveKeepers]])
   * }}}
+  * A component's minimum only falls as components merge, so on the state
+  * a clean run writes the minimum is the newest row.
   *
   * Replay safety (foreachBatch may re-deliver a batch after a crash):
-  * state for batch B is READ from versions strictly below B and WRITTEN
-  * (mode=overwrite) as version B — a replayed batch recomputes from the
-  * same inputs and overwrites the same delta, so the state after "crash
-  * between write and offset-commit, then replay" is byte-identical to the
-  * clean run (spec-asserted). Versions are never mutated in place, so a
-  * reader never observes a half-written table. Within a batch the index
-  * delta is written BEFORE the label delta: [[nextBatchId]] keys off the
-  * label versions, so a crash between the two writes leaves batch B
-  * unfinished and the replay overwrites both — the other order would
+  * state for batch B is READ from versions strictly below B and written
+  * as version B — a replayed batch recomputes from the same inputs and
+  * replaces the same delta, so the state after "crash between write and
+  * offset-commit, then replay" is byte-identical to the clean run
+  * (spec-asserted). Each delta is STAGED: written to `_index_vB` /
+  * `_labels_vB`, then renamed to its name after any old target is
+  * deleted — readers and [[nextBatchId]] list only the final names, so a
+  * crash during a write leaves no version behind. The index delta is
+  * published BEFORE the label delta: [[nextBatchId]] keys off the label
+  * versions, so a crash anywhere before the labels rename leaves batch B
+  * unfinished and the replay rewrites both — the other order would
   * advance past a batch whose reps never reached the index, and every
-  * later batch would silently miss its edges (spec-asserted).
+  * later batch would silently miss its edges (spec-asserted for a crash
+  * between the two writes and for one inside the labels write).
+  *
+  * Re-ingest: a batch may carry doc ids the state already holds. A known
+  * id keeps its label and its old edges: its batch row labels itself (its
+  * edges contract to its own root), and that self row loses to its prior
+  * label under the minimum; its text is not re-read against its old one.
   *
   * 100-TB shape: per-batch COMPUTE is O(batch + collisions) — batch-only
   * fingerprints (one partial agg), an equi-join against the index
@@ -62,13 +72,12 @@ import graft.ops.DocOps
   */
 object DedupStream {
 
-  // the written schemas of the two deltas: reads pass them instead of
-  // inferring them, which costs one Spark job per version read
+  // the written schema of the index delta: reads pass it instead of
+  // inferring it, which costs one Spark job per version read (the label
+  // delta's is DocOps.KeeperSchema)
   private val IndexSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("simhash", LongType),
     StructField("chunk_idx", IntegerType), StructField("chunk_val", LongType)))
-  private val LabelsSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("keeper_doc_id", LongType)))
 
   private def versions(spark: SparkSession, stateDir: String,
                        prefix: String, below: Long): Seq[Long] = {
@@ -97,21 +106,14 @@ object DedupStream {
   }
 
   /** The live keeper table as of (strictly below) `below`: per doc_id the
-    * row from the HIGHEST label delta version that mentions it (a doc's
-    * label changes only when a later batch merges its component, and the
-    * delta for that batch carries the new row).
+    * minimum keeper over all label delta versions ([[DocOps.resolveKeepers]]).
     */
   def readLabels(spark: SparkSession, stateDir: String,
                  below: Long = Long.MaxValue): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val vs = versions(spark, stateDir, "labels_v", below)
     require(vs.nonEmpty, s"no labels_v* below $below under $stateDir")
-    val chain = vs.map(v => spark.read.schema(LabelsSchema)
-        .parquet(s"$stateDir/labels_v$v").withColumn("_v", lit(v)))
-      .reduce(_.union(_))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("_v").desc)
-    chain.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
-      .select(col("doc_id"), col("keeper_doc_id"))
+    DocOps.resolveKeepers(spark.read.schema(DocOps.KeeperSchema)
+      .parquet(vs.map(v => s"$stateDir/labels_v$v"): _*))
   }
 
   /** Next batch id for DIRECT (non-streaming) appends against the state —
@@ -123,7 +125,7 @@ object DedupStream {
       .map(_ + 1L).getOrElse(0L)
 
   /** Process one micro-batch of documents(doc_id, text, …) against the
-    * state under `stateDir`, writing the `index_v<batchId>` and
+    * state under `stateDir`, publishing the `index_v<batchId>` and
     * `labels_v<batchId>` DELTAS. Exposed for direct (non-streaming) use
     * and for replay-idempotence testing. The state is read only when a
     * prior version exists.
@@ -138,15 +140,24 @@ object DedupStream {
     // minima, so cross-batch fingerprint collisions keep one rep per
     // (batch, fingerprint) — harmless for correctness (their hamming-0
     // pair is already an edge) and bounded by batch count
-    newIdx.write.mode("overwrite").parquet(s"$stateDir/index_v$batchId")
-    // label delta, written last (see "Replay safety"): the batch's docs +
-    // merged-component relabels only, batch-incident bytes
-    val labels = prior match {
-      case None => DocOps.keepersFromEdges(b, edges)
-      case Some(_) => DocOps.keepersDeltaIncremental(
-        b.select(col("doc_id")), readLabels(spark, stateDir, batchId), edges)
-    }
-    labels.write.mode("overwrite").parquet(s"$stateDir/labels_v$batchId")
+    publish(newIdx, stateDir, s"index_v$batchId")
+    // label delta, published last (see "Replay safety"): the batch's docs
+    // + merged-component relabels only, batch-incident bytes
+    val labels0 = prior.map(_ => readLabels(spark, stateDir, batchId))
+    publish(DocOps.keepersFromEdges(b, edges, labels0), stateDir, s"labels_v$batchId")
+  }
+
+  /** Writes `df` to `_<name>` under `stateDir`, then renames it to `name`
+    * after deleting any old `name`: a version is visible only once whole.
+    */
+  private def publish(df: DataFrame, stateDir: String, name: String): Unit = {
+    val staged = new Path(stateDir, s"_$name")
+    val target = new Path(stateDir, name)
+    df.write.mode("overwrite").parquet(staged.toString)
+    val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    fs.delete(target, true)
+    if (!fs.rename(staged, target))
+      throw new java.io.IOException(s"could not rename $staged to $target")
   }
 
   /** foreachBatch sink maintaining the dedup state. Attach with

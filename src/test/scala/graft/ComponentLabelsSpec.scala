@@ -10,7 +10,7 @@ import graft.streaming.DedupStream
 
 /** The size-dispatched CC labels: the driver union-find route (edge set
   * within `spark.sql.autoBroadcastJoinThreshold`) and the star-fixpoint
-  * route give every keeper path the same labels and the same output
+  * route give the keeper function the same labels and the same output
   * schema, nullability included — on the 10k-node adversarial path, on a
   * graph whose append merges old components, and with an edge set one
   * byte over the threshold, where the capped collect overflows.
@@ -95,7 +95,7 @@ class ComponentLabelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(labels(20000L) === 20000L && labels(20001L) === 20001L)
   }
 
-  test("all three keeper paths agree across routes on a graph with old-component merges") {
+  test("keepersFromEdges: batch and resolved append scope agree across routes") {
     val s = spark
     import s.implicits._
     // old graph: two path components (ids decorrelated from path order) +
@@ -122,15 +122,19 @@ class ComponentLabelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       runs.tail.foreach(r => assert(r === runs.head, name))
       runs.head._1
     }
-    val full = agree("keepersFromEdges", 2L * (n - 1) + 5)(
+    def append = DocOps.keepersFromEdges(newIds.toDF("doc_id"), newEdges, Some(labels0))
+    // batch scope: no prior, every edge
+    val full = agree("batch", 2L * (n - 1) + 5)(
       DocOps.keepersFromEdges(allDocs, oldEdges.union(newEdges)))
-    val inc = agree("keepersFromEdgesIncremental", contracted)(
-      DocOps.keepersFromEdgesIncremental(allDocs, labels0, newEdges))
-    assert(inc === full)
-    val delta = agree("keepersDeltaIncremental", contracted)(
-      DocOps.keepersDeltaIncremental(newIds.toDF("doc_id"), labels0, newEdges))
-    // the delta: the appended docs + every old doc of merged component B
+    // resolved full scope: the prior ∪ the append's rows, per-doc minimum
+    val resolved = agree("resolved", contracted)(
+      DocOps.resolveKeepers(labels0.union(append)))
+    assert(resolved === full)
+    // the append's rows: the appended docs + every old doc of merged
+    // component B, one row each
+    val delta = agree("append rows", contracted)(append)
     val minAB = (idsA ++ idsB).min
+    assert(delta.map(_._1).distinct.size === delta.size)
     assert(delta.toMap === (newIds.map(d => d -> full.toMap.apply(d)) ++
       idsB.map(_ -> minAB)).toMap)
     assert(full.toMap.apply(950002L) === minAB && full.toMap.apply(960000L) === 960000L)

@@ -957,7 +957,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (idsA(1234), idsB(777))).toDF("doc_a", "doc_b").localCheckpoint(true)
     val allDocs = oldDocs.union(newIds.toDF("doc_id")).localCheckpoint(true)
 
-    val inc = DocOps.keepersFromEdgesIncremental(allDocs, labels0, newEdges)
+    val inc = DocOps.resolveKeepers(labels0.union(
+        DocOps.keepersFromEdges(newIds.toDF("doc_id"), newEdges, Some(labels0))))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val full = DocOps.keepersFromEdges(allDocs, oldEdges.union(newEdges))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
@@ -1021,7 +1022,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lab(DocOps.keepersFromEdges(all, oldE.union(newE))) === full)
     // the production chain: contracted fixpoint over the append edges
     val labels1 = DocOps.keepersFromEdges(old, oldE).localCheckpoint(true)
-    assert(lab(DocOps.keepersFromEdgesIncremental(all, labels1, newE)) === full)
+    assert(lab(DocOps.resolveKeepers(
+      labels1.union(DocOps.keepersFromEdges(fresh, newE, Some(labels1))))) === full)
     assert(full(100L) === 1L && full(101L) === 20L && full(21L) === 20L)
     assert(full(111L) === 110L && full(112L) === 110L)
     assert(full(120L) === 120L && full(10L) === 10L)
@@ -1081,7 +1083,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val full = lab(DocOps.keepersFromEdges(all, DocOps.simhashEdges(all)))
     assert(lab(DocOps.keepersFromEdges(all, oldE.union(newE))) === full)
     val labels1 = DocOps.keepersFromEdges(old, oldE).localCheckpoint(true)
-    assert(lab(DocOps.keepersFromEdgesIncremental(all, labels1, newE)) === full)
+    assert(lab(DocOps.resolveKeepers(
+      labels1.union(DocOps.keepersFromEdges(fresh, newE, Some(labels1))))) === full)
     // cross-batch identical text joins its old component regardless of
     // what else pairs (identical fp ⇒ hamming 0)
     assert(full(100L) === full(1L))
@@ -1285,10 +1288,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.DocJob.run(spark, Array("dedup", s"$work/b0", s"$work/state"))
     graft.DocJob.run(spark, Array("dedup", s"$work/b1", s"$work/state"))
     // round 8: labels_v* are deltas; the live table resolves the chain
-    val labels = graft.streaming.DedupStream.readLabels(spark, s"$work/state")
+    def labels = graft.streaming.DedupStream.readLabels(spark, s"$work/state")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val full = DocOps.keepersFromEdges(docs, DocOps.simhashEdges(docs))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels === full)
+    // re-ingest: a known id keeps its label (its self row loses to the
+    // prior one under the per-doc minimum)
+    graft.DocJob.run(spark, Array("dedup", s"$work/b1", s"$work/state"))
     assert(labels === full)
 
     docs.write.parquet(s"$work/docs")

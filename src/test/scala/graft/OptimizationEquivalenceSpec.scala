@@ -153,7 +153,7 @@ class OptimizationEquivalenceSpec extends AnyFunSuite {
     }
   }
 
-  test("keepersDeltaIncremental: delta ∪ labels0 (newest wins) ≡ full incremental relabel") {
+  test("keepersFromEdges with a prior: resolved rows = full keepers") {
     val s = spark
     import s.implicits._
     def words(from: Int, to: Int): String =
@@ -167,7 +167,7 @@ class OptimizationEquivalenceSpec extends AnyFunSuite {
       .localCheckpoint(true)
     // append: doc 5's id is SMALLER than root 10 and shares its text, so
     // the merged component minimum MOVES — the old docs {10, 11} must be
-    // RELABELED to 5 (the delta's old-doc branch); 50 extends {21,22}
+    // RELABELED to 5 (the rows' old-doc branch); 50 extends {21,22}
     // without moving its root; 60 joins nobody
     val app = Seq((5L, words(1, 20)), (50L, words(100, 119)),
       (60L, words(500, 519))).toDF("doc_id", "text")
@@ -176,22 +176,20 @@ class OptimizationEquivalenceSpec extends AnyFunSuite {
       Some(DocOps.simhashEdgesAppend(None, old)._2), app)
     def lab(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = lab(DocOps.keepersFromEdgesIncremental(
-      all.select("doc_id"), labels0, edges))
-    val delta = lab(DocOps.keepersDeltaIncremental(
-      app.select("doc_id"), labels0, edges))
+    val full = lab(DocOps.simhashKeepers(all))
+    val rows = DocOps.keepersFromEdges(app, edges, Some(labels0))
+    val delta = lab(rows)
     // the root move relabels BOTH old members of {10,11}; the unmoved
-    // component and the isolated old doc contribute no delta rows
+    // component and the isolated old doc contribute no rows
     assert(delta.get(10L) === Some(5L) && delta.get(11L) === Some(5L))
     assert(!delta.contains(21L) && !delta.contains(22L) && !delta.contains(30L))
-    // delta rows only for appended docs + relabeled old docs
+    // rows only for appended docs + relabeled old docs
     assert(delta.keySet.intersect(Set(10L, 11L, 21L, 22L, 30L))
       .forall(d => full(d) !== lab(labels0)(d)))
-    // resolution: delta overrides labels0, rest unchanged
-    val resolved = lab(labels0) ++ delta
-    assert(resolved === full)
+    // resolution: per doc the minimum of labels0 and the rows
+    assert(lab(DocOps.resolveKeepers(labels0.union(rows))) === full)
     assert(full(10L) === 5L && full(50L) === 21L && full(60L) === 60L)
-    // appended docs are always present in the delta
+    // appended docs are always present in the rows
     assert(Set(5L, 50L, 60L).subsetOf(delta.keySet))
     graft.ops.CacheLedger.release()
   }
@@ -215,27 +213,27 @@ class OptimizationEquivalenceSpec extends AnyFunSuite {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** Appends `batches` one after another from EMPTY state — each batch's
-    * edges and index rows from `step(state, batch)`, its label delta from
-    * keepersDeltaIncremental against the labels resolved so far — and
-    * returns the labels resolved newest-row-wins.
+    * edges and index rows from `step(state, batch)`, its label rows from
+    * keepersFromEdges against the labels resolved so far — and returns the
+    * labels resolved by per-doc minimum ([[DocOps.resolveKeepers]]).
     */
   private def chained(batches: Seq[DataFrame],
                       step: (Option[(DataFrame, DataFrame)], DataFrame) => (DataFrame, DataFrame))
       : Map[Long, Long] = {
-    val s = spark
-    import s.implicits._
-    batches.foldLeft((Option.empty[(DataFrame, DataFrame)], Map.empty[Long, Long])) {
-      case ((state, resolved), batch) =>
+    val init = (Option.empty[(DataFrame, DataFrame)], Option.empty[DataFrame])
+    val labels = batches.foldLeft(init) {
+      case ((state, labels0), batch) =>
         val (edges, idx) = step(state, batch)
-        val labels0 = resolved.toSeq.toDF("doc_id", "keeper_doc_id")
-        val delta = keeperMap(
-          DocOps.keepersDeltaIncremental(batch.select(col("doc_id")), labels0, edges))
+        val rows = DocOps.keepersFromEdges(batch, edges, labels0)
+        val resolved = DocOps.resolveKeepers(labels0.fold(rows)(_.union(rows)))
         val next = state match {
           case None => (batch, idx)
           case Some((d, i)) => (d.union(batch), i.union(idx))
         }
-        (Some((next._1.localCheckpoint(true), next._2.localCheckpoint(true))), resolved ++ delta)
+        (Some((next._1.localCheckpoint(true), next._2.localCheckpoint(true))),
+          Some(resolved.localCheckpoint(true)))
     }._2
+    labels.fold(Map.empty[Long, Long])(keeperMap)
   }
 
   private def splits(d: DataFrame): Seq[Seq[DataFrame]] = (1 to 3).map { n =>
