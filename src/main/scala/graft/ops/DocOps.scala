@@ -535,9 +535,6 @@ object DocOps {
 
   // ------------------------------------------------------------ text analysis
 
-  private def charCount(c: Column, charClass: String): Column =
-    length(c) - length(regexp_replace(c, charClass, ""))
-
   /** The four script classes, as code-point ranges for the one-pass
     * [[graft.functions.CharClassCounts]] kernel (≡ the regex classes
     * `[A-Za-z]` `[一-鿿]` `[Ѐ-ӿ]` `[؀-ۿ]` —
@@ -549,14 +546,6 @@ object DocOps {
     Seq((0x0400, 0x04FF)),
     Seq((0x0600, 0x06FF)))
 
-  /** Script-profile language ID (n-gram-free heuristic: per-script char
-    * counts → dominant script). All four class counts come from ONE
-    * codegen'd pass over the text (round 5; the regex idiom ran four full
-    * regex passes and allocated four stripped copies per row). Counts are
-    * regex-expressible so the DuckDB oracle replicates them exactly.
-    * `idCols` pass through, so the same op runs over the documents corpus
-    * and over extracted per-turn markdown.
-    */
   /** A staging-column name guaranteed absent from `df` — `withColumn` with
     * a fixed internal name would silently REPLACE a caller column that
     * happens to share it (langIdFor/qualityScore take arbitrary frames).
@@ -565,6 +554,14 @@ object DocOps {
     Iterator.from(0).map(i => if (i == 0) base else s"$base$i")
       .find(n => !df.columns.contains(n)).get
 
+  /** Script-profile language ID (n-gram-free heuristic: per-script char
+    * counts → dominant script). All four class counts come from ONE
+    * codegen'd pass over the text (round 5; the regex idiom ran four full
+    * regex passes and allocated four stripped copies per row). Counts are
+    * regex-expressible so the DuckDB oracle replicates them exactly.
+    * `idCols` pass through, so the same op runs over the documents corpus
+    * and over extracted per-turn markdown.
+    */
   def langIdFor(df: DataFrame, idCols: Seq[String], textCol: String): DataFrame = {
     val counts = graft.functions.CharClassCounts
       .char_class_counts(col(textCol), ScriptClasses)
@@ -588,15 +585,15 @@ object DocOps {
   private val Stopwords = Seq("the", "a", "an", "of", "and", "to", "in", "is",
     "it", "that", "for", "on", "with", "as", "was", "at", "by", "be")
 
-  /** Quality scoring: length/punct/digit/stopword ratios + a composite.
-    * All arithmetic is plain double ops in a fixed order so the oracle's
-    * IEEE results are bit-identical.
-    */
   /** ASCII punct (the four ranges of `[!-/:-@\[-`{-~]`) + digits. */
   private[graft] val QualityClasses: Seq[Seq[(Int, Int)]] = Seq(
     Seq((33, 47), (58, 64), (91, 96), (123, 126)),
     Seq(('0'.toInt, '9'.toInt)))
 
+  /** Quality scoring: length/punct/digit/stopword ratios + a composite.
+    * All arithmetic is plain double ops in a fixed order so the oracle's
+    * IEEE results are bit-identical.
+    */
   def qualityScore(docs: DataFrame): DataFrame = {
     val t = col("text")
     val words = split(trim(t), "\\s+")
@@ -895,6 +892,17 @@ object DocOps {
           .shingle_strings(col("w"), k, distinct = false)).as(Seq("pos", "s")))
   }
 
+  /** Contaminated shingle occurrences: (doc_id, pos, s) of every corpus
+    * shingle occurrence present in the eval set — the shared trunk of
+    * [[decontamSpans]] and [[exciseContaminated]].
+    */
+  private def contamHits(corpus: DataFrame, evalDocs: DataFrame,
+                         k: Int, broadcastEval: Boolean): DataFrame = {
+    val evalSh0 = shingles(evalDocs, k).select(col("s")).distinct()
+    val evalSh = if (broadcastEval) broadcast(evalSh0) else evalSh0
+    shinglesPositioned(corpus, k).join(evalSh, Seq("s"), "left_semi")
+  }
+
   /** Span-level decontamination detail (round 6) — WHICH parts of a doc
     * overlap the eval set, so a split-correction pipeline can EXCISE the
     * contaminated spans instead of dropping the whole document
@@ -911,17 +919,6 @@ object DocOps {
     * or shuffle-semi-joins when it is a corpus split; only (doc_id, pos)
     * ints and the matched shingle strings reach the per-doc aggregate.
     */
-  /** Contaminated shingle occurrences: (doc_id, pos, s) of every corpus
-    * shingle occurrence present in the eval set — the shared trunk of
-    * [[decontamSpans]] and [[exciseContaminated]].
-    */
-  private def contamHits(corpus: DataFrame, evalDocs: DataFrame,
-                         k: Int, broadcastEval: Boolean): DataFrame = {
-    val evalSh0 = shingles(evalDocs, k).select(col("s")).distinct()
-    val evalSh = if (broadcastEval) broadcast(evalSh0) else evalSh0
-    shinglesPositioned(corpus, k).join(evalSh, Seq("s"), "left_semi")
-  }
-
   def decontamSpans(corpus: DataFrame, evalDocs: DataFrame,
                     k: Int = DecontamK,
                     broadcastEval: Boolean = true): DataFrame =
@@ -1252,6 +1249,22 @@ object DocOps {
       length(t).as("n_chars_m"))
   }
 
+  /** The per-doc token-count column both packing entry points budget by —
+    * trainers pack by TOKENIZER counts, not words: "bpe_ish" budgets by
+    * the same segmentation [[tokenStats]] reports (letter runs | digit
+    * runs | single other-symbol), "ws" by whitespace words.
+    */
+  private def packTokens(tokenizer: String): org.apache.spark.sql.Column =
+    tokenizer match {
+      case "ws" => when(length(trim(col("text"))) === 0, 0L)
+        .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
+      case "bpe_ish" =>
+        regexp_count(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"))
+          .cast("long")
+      case other => throw new IllegalArgumentException(
+        s"unknown tokenizer '$other' (expected ws | bpe_ish)")
+    }
+
   /** Sequence packing for pretraining: assign each doc a (bucket, pack_id,
     * offset) so that consecutive docs fill fixed `budget`-token packs —
     * the contiguous-cumsum approximation of bin packing: docs are laid
@@ -1272,22 +1285,6 @@ object DocOps {
     * produced. All arithmetic is integer, so the DuckDB window replay is
     * exact.
     */
-  /** The per-doc token-count column both packing entry points budget by —
-    * trainers pack by TOKENIZER counts, not words: "bpe_ish" budgets by
-    * the same segmentation [[tokenStats]] reports (letter runs | digit
-    * runs | single other-symbol), "ws" by whitespace words.
-    */
-  private def packTokens(tokenizer: String): org.apache.spark.sql.Column =
-    tokenizer match {
-      case "ws" => when(length(trim(col("text"))) === 0, 0L)
-        .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
-      case "bpe_ish" =>
-        regexp_count(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"))
-          .cast("long")
-      case other => throw new IllegalArgumentException(
-        s"unknown tokenizer '$other' (expected ws | bpe_ish)")
-    }
-
   def packSequences(docs: DataFrame, budget: Long = 2048,
                     nBuckets: Int = 32,
                     tokenizer: String = "ws"): DataFrame = {

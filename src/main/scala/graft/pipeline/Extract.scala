@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** The flagship pipeline: transcripts table → per-turn extraction results.
   *
@@ -122,21 +122,6 @@ object Extract {
     }.toDF("conv_id", "doc_md", "n_pages")
   }
 
-  /** Observed metrics (A2 via df.observe): corpus counters collected as a
-    * side effect of the write, no extra pass. Read them after the action via
-    * the returned Observation (see [[observed]]). `extra` adds more named
-    * aggregates to the same observation.
-    */
-  def withObservedMetrics(results: Dataset[TurnResult],
-                          extra: Column*): (DataFrame, Observation) = {
-    val obs = Observation("extract_metrics")
-    val df = results.toDF().observe(obs, count(lit(1)).as("rows"), Seq(
-      sum(when(col("filtered"), 1L).otherwise(0L)).as("filtered_rows"),
-      sum(when(col("status") === "error", 1L).otherwise(0L)).as("error_rows"),
-      sum(length(coalesce(col("md"), lit("")))).as("md_chars")) ++ extra: _*)
-    (df, obs)
-  }
-
   /** Upper bound on the wait for an observation's listener event after its
     * action has returned; a backstop only — the event normally lands in
     * milliseconds.
@@ -163,23 +148,50 @@ object Extract {
   private def bucketHash(c: Column): Column =
     pmod(conv(substring(md5(c), 1, 15), 16, 10).cast("long"), lit(NBuckets))
 
+  /** The [[LineageTally]] aggregate over result rows, per conv_id-hash
+    * bucket and per task partition: the one counter behind both lineage
+    * tables and the corpus metrics the writers return (A2).
+    */
+  private def tally: Column =
+    LineageTally.column(bucketHash(col("conv_id"))).as("lineage")
+
+  /** The value of [[tally]] observed as `obs`, or None (see [[observed]]). */
+  private def observedTally(obs: Observation): Option[LineageTallies] =
+    observed(obs).map(m => LineageTally.tallies(m("lineage").asInstanceOf[Row]))
+
+  /** The corpus metrics of an observed tally: rows, filtered rows, error
+    * rows and md chars, each summed over its bucket rows.
+    */
+  private def metricsOf(t: LineageTallies): Map[String, Any] = Map(
+    "rows" -> t.buckets.map(_.rows_out).sum,
+    "filtered_rows" -> t.buckets.map(_.filtered_rows).sum,
+    "error_rows" -> t.buckets.map(_.error_rows).sum,
+    "md_chars" -> t.buckets.map(_.md_chars).sum)
+
   /** The results table's schema, the [[TurnResult]] encoder's. Internal
     * tables are read with fixed schemas, which skips Spark's schema
     * inference job (one per read).
     */
   private lazy val resultsSchema: StructType = Encoders.product[TurnResult].schema
 
-  /** Fixed schemas of the two lineage tables: the output schemas of the
-    * functions that define them (analysis of an empty plan; no job).
+  /** Fixed schema of `lineage_buckets`: the output schema of
+    * [[bucketLineage]], which defines it (analysis of an empty plan; no job).
     */
   private def bucketLineageSchema(spark: SparkSession): StructType =
     bucketLineage(spark.createDataFrame(
       java.util.List.of[Row](), resultsSchema)).schema
 
-  private def runLineageSchema(spark: SparkSession): StructType =
-    partitionLineage(spark.createDataFrame(
-      java.util.List.of[Row](), resultsSchema))
-      .withColumn("run_id", lit(0L)).schema
+  /** Fixed schema of the partition lineage, the per-run log: the write
+    * task partition's counters plus the run that wrote them.
+    */
+  private val runLineageSchema: StructType = StructType(Seq(
+    StructField("part_id", IntegerType, nullable = false),
+    StructField("rows_out", LongType, nullable = false),
+    StructField("filtered_rows", LongType),
+    StructField("error_rows", LongType),
+    StructField("min_conv_id", StringType),
+    StructField("max_conv_id", StringType),
+    StructField("run_id", LongType, nullable = false)))
 
   /** Manifest-aware read of a results table (plain dir when no manifest —
     * see [[SnapshotStore]]). All internal readers resolve through this, so
@@ -218,19 +230,25 @@ object Extract {
   private def lineageMarker(outDir: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(s"$outDir/_lineage_patch_pending")
 
-  /** Recompute both lineage tables from the live results (run_id stamped 0
-    * — the heal discards per-run history, keeping the auditable content
-    * lineage exact).
+  /** Recompute both lineage tables from the live results: ONE scan
+    * observes the [[tally]] (a `noop` write drives it; `agg` rejects the
+    * tally's `spark_partition_id()` argument), then the old run log is
+    * deleted and both tables are written from the tally as run 0 — the heal
+    * discards per-run history, keeping the auditable content lineage exact.
+    * A crash after the delete leaves the run log missing, which the next
+    * run heals. An unknown tally (see [[observed]]) fails the heal before
+    * it touches either table, so what called for it is still there for the
+    * next run to see.
     */
-  private def healLineage(spark: SparkSession, outDir: String): Unit = {
-    val all = readResults(spark, outDir)
-    val healedBuckets = bucketLineage(all).localCheckpoint(true)
-    healedBuckets.write.mode("overwrite").parquet(s"$outDir/lineage_buckets")
-    healedBuckets.unpersist(blocking = false)
-    val healedParts = partitionLineage(all).withColumn("run_id", lit(0L))
-      .localCheckpoint(true)
-    healedParts.write.mode("overwrite").parquet(s"$outDir/lineage")
-    healedParts.unpersist(blocking = false)
+  private def healLineage(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                          outDir: String): Unit = {
+    val obs = Observation("lineage_heal")
+    readResults(spark, outDir).select("conv_id", "filtered", "status", "md")
+      .observe(obs, tally).write.format("noop").mode("overwrite").save()
+    val t = observedTally(obs).getOrElse(throw new IllegalStateException(
+      s"lineage heal of $outDir observed no tally"))
+    fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/lineage"), true)
+    writeLineage(spark, outDir, t.buckets, t.parts, 0L)
   }
 
   /** The `lineage_buckets` rows (≤ [[NBuckets]]), read with a fixed schema. */
@@ -245,7 +263,7 @@ object Extract {
     * task reads it all and the aggregate needs no shuffle: one job.
     */
   private def runIdStats(spark: SparkSession, outDir: String): (Long, Long) = {
-    val r = spark.read.schema(runLineageSchema(spark)).parquet(s"$outDir/lineage")
+    val r = spark.read.schema(runLineageSchema).parquet(s"$outDir/lineage")
       .coalesce(1)
       .agg(coalesce(max(col("run_id")), lit(-1L)), count_if(col("run_id").isNull))
       .collect()(0)
@@ -304,7 +322,7 @@ object Extract {
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/lineage_buckets"))
     spark.createDataFrame(parts.sortBy(_.key).map(t => Row(t.key.get.toInt,
         t.rows_out, t.filtered_rows, t.error_rows, t.min_conv_id,
-        t.max_conv_id, runId)).asJava, runLineageSchema(spark))
+        t.max_conv_id, runId)).asJava, runLineageSchema)
       .coalesce(1).write.mode("append").parquet(s"$outDir/lineage")
     bucketsWritten()
   }
@@ -421,8 +439,10 @@ object Extract {
     * already present in `outDir`, extract only the remainder, append results
     * + lineage. Idempotent under re-runs and task retries (parquet file
     * commits are atomic per task attempt); error rows are carried, never
-    * dropped, so a later pass can re-parse them by key. Returns the observed
-    * corpus metrics for the increment.
+    * dropped, so a later pass can re-parse them by key. Returns the
+    * increment's corpus metrics (`rows`, `filtered_rows`, `error_rows`,
+    * `md_chars`), summed over the bucket rows of the write's
+    * [[LineageTally]] observation — the same counter as its lineage.
     *
     * Lineage is maintained INCREMENTALLY and in the same pass as the write
     * (the InkStream idea: derived state is kept consistent by the pass that
@@ -472,18 +492,16 @@ object Extract {
       if (existed) resumeFrom(turns, readResults(spark, outDir)
         .select("conv_id", "turn_idx").observe(scanned, count(lit(1)).as("rows")))
       else turns
-    val (df, obs) = withObservedMetrics(
-      extract(remaining).sortWithinPartitions("conv_id", "turn_idx"),
-      LineageTally.column(bucketHash(col("conv_id"))).as("lineage"))
+    val obs = Observation("extract_tally")
+    val df = extract(remaining).sortWithinPartitions("conv_id", "turn_idx")
+      .observe(obs, tally)
     val before = dataFiles()
     // the live set per the manifest, when the table carries one: crash
     // orphans may exist physically but must not enter the next snapshot
     val liveBefore = SnapshotStore.liveFiles(fs, resultsPath)
     df.write.mode("append").parquet(s"$outDir/results")
     val (oldBuckets, runLog) = state()
-    val written = observed(obs)
-    val metrics = written.getOrElse(Map.empty) - "lineage"
-    val incRows = metrics.getOrElse("rows", 0L).asInstanceOf[Long]
+    val written = observedTally(obs)
     val newFiles = (dataFiles() -- before).toSeq.sorted
     // a manifest-carrying table folds the appended files into a new
     // snapshot (manifest-less tables stay plain — the manifest appears
@@ -503,15 +521,14 @@ object Extract {
     val healNeeded = written.isEmpty || existed && lineageStale(markerSet,
       oldBuckets, runLog, observed(scanned).map(_("rows").asInstanceOf[Long]))
     if (healNeeded) {
-      healLineage(spark, outDir)
+      healLineage(spark, fs, outDir)
       fs.delete(lineageMarker(outDir), false) // cleared only after the heal
-    } else if (incRows > 0L) {
-      val inc = LineageTally.tallies(written.get("lineage").asInstanceOf[Row])
+    } else written.filter(_.buckets.nonEmpty).foreach { inc =>
       writeLineage(spark, outDir,
         LineageTally.merge(oldBuckets.getOrElse(Seq.empty) ++ inc.buckets),
         inc.parts, runLog.fold(0L)(_._1 + 1L))
     }
-    metrics
+    written.fold(Map.empty[String, Any])(metricsOf)
   }
 
   /** Error-row re-parse pass (Q4's loop closed; the
@@ -536,7 +553,10 @@ object Extract {
     *    and appends the pass to the partition lineage under a fresh
     *    `run_id`, the two lineage writes running concurrently.
     * `lineage.part_id` of a reparse run is therefore the task partition of
-    * the write that re-extracted the rows.
+    * the write that re-extracted the rows. The returned metrics (`rows`,
+    * `filtered_rows`, `error_rows`, `md_chars` of the re-extracted rows)
+    * are sums over the bucket rows of that same write tally, plus
+    * `rewrite_mode`.
     *
     * Self-healing: the pass never takes a delta against lineage it cannot
     * trust. On the conditions [[runCheckpointed]] heals on — the reparse
@@ -585,7 +605,6 @@ object Extract {
     val state = lineageState(spark, fs, outDir)
     val results = readResults(spark, outDir)
     val isError = col("status") === "error"
-    val tally = LineageTally.column(bucketHash(col("conv_id"))).as("lineage")
     val scanned = Observation("reparse_scanned")
     val replaced = Observation("reparse_replaced")
     // the filter stays above the count's observation (Spark pushes no
@@ -600,7 +619,7 @@ object Extract {
     val stale = lineageStale(markerSet, oldBuckets, runLog,
       observed(scanned).map(_("rows").asInstanceOf[Long]))
     def heal(): Unit = {
-      healLineage(spark, outDir)
+      healLineage(spark, fs, outDir)
       fs.delete(marker, false) // cleared only after the heal
     }
     if (errFiles.isEmpty) {
@@ -626,8 +645,9 @@ object Extract {
     val turnsErr = readTranscripts(spark, transcriptsPath).toDF()
       .join(affected.where(isError).select("conv_id", "turn_idx"),
         Seq("conv_id", "turn_idx"), "left_semi").as[Turn]
-    val (inc, obs) = withObservedMetrics(
-      extract(turnsErr).sortWithinPartitions("conv_id", "turn_idx"), tally)
+    val obs = Observation("reparse_tally")
+    val inc = extract(turnsErr).sortWithinPartitions("conv_id", "turn_idx")
+      .observe(obs, tally)
 
     val tmpDir = s"$outDir/results_reparse_tmp"
     val tmpPath = new org.apache.hadoop.fs.Path(tmpDir)
@@ -635,7 +655,7 @@ object Extract {
     // crashed pass up front, and always clean up on exit
     try {
       fs.delete(tmpPath, true)
-      affected.where(!isError).unionByName(inc)
+      affected.where(!isError).unionByName(inc.toDF())
         .write.mode("overwrite").parquet(tmpDir)
 
       // tmp fully materialized: move replacements in (fresh UUID names),
@@ -651,14 +671,11 @@ object Extract {
       SnapshotStore.commitRebase(fs, resultsPath, adds = moved,
         removes = (if (fullRewrite) live else errFiles).toSeq)
 
-      val written = observed(obs)
-      def tallies(m: Map[String, Any]) =
-        LineageTally.tallies(m("lineage").asInstanceOf[Row])
+      val written = observedTally(obs)
       val patch = for {
-        w <- written if !stale
-        r <- observed(replaced)
-        added = tallies(w)
-        buckets <- patchBuckets(oldBuckets.get, tallies(r).buckets, added.buckets)
+        added <- written if !stale
+        r <- observedTally(replaced)
+        buckets <- patchBuckets(oldBuckets.get, r.buckets, added.buckets)
       } yield (buckets, added.parts)
       patch match {
         case Some((buckets, parts)) =>
@@ -666,7 +683,7 @@ object Extract {
           fs.delete(marker, false) // lineage consistent again
         case None => heal()
       }
-      (written.getOrElse(Map.empty) - "lineage") + ("rewrite_mode" ->
+      written.fold(Map.empty[String, Any])(metricsOf) + ("rewrite_mode" ->
         (if (fullRewrite) "full" else "file_granular"))
     } finally fs.delete(tmpPath, true)
   }
@@ -738,36 +755,20 @@ object Extract {
       degraded.write.mode("overwrite").parquet(tmpDir)
       commitRewrite(fs, tmpPath, resultsPath)
     } finally fs.delete(tmpPath, true)
-    healLineage(spark, outDir)
+    healLineage(spark, fs, outDir)
     nInjected
   }
 
-  /** Per-partition lineage/metrics table (SURVEY §4 checkpoint/lineage):
-    * rows in/out, filtered and error counts per physical partition, written
-    * alongside results for auditability + resume bookkeeping. The heal and
-    * the reparse pass derive it with this function; [[runCheckpointed]]
-    * writes the same columns from its write-pass [[LineageTally]], where
-    * `part_id` is the write's task partition.
-    */
-  def partitionLineage(results: DataFrame): DataFrame = {
-    results
-      .withColumn("part_id", spark_partition_id())
-      .groupBy(col("part_id"))
-      .agg(
-        count(lit(1)).as("rows_out"),
-        sum(when(col("filtered"), 1L).otherwise(0L)).as("filtered_rows"),
-        sum(when(col("status") === "error", 1L).otherwise(0L)).as("error_rows"),
-        min(col("conv_id")).as("min_conv_id"),
-        max(col("conv_id")).as("max_conv_id"))
-  }
-
   /** Deterministic CONTENT-keyed lineage: per conv_id-hash bucket, rows out,
-    * filtered/error counts, md volume, conv_id range. Physical-partition
-    * lineage ([[partitionLineage]], also written) reflects the run that
-    * happened — useful operationally but unstable across re-runs and
-    * cluster sizes; bucket lineage is the AUDITABLE surface: identical for
-    * any execution that produced the correct row set, so an external engine
-    * can recompute it from ground truth (the `extract_lineage` oracle does,
+    * filtered/error counts, md volume, conv_id range. The writers keep it
+    * through [[LineageTally]], which counts exactly what this function
+    * does; it remains the reference the specs compare against and the
+    * source of the `lineage_buckets` schema. Physical-partition lineage
+    * (the `lineage` run log, also written) reflects the run that happened
+    * — useful operationally but unstable across re-runs and cluster sizes;
+    * bucket lineage is the AUDITABLE surface: identical for any execution
+    * that produced the correct row set, so an external engine can
+    * recompute it from ground truth (the `extract_lineage` oracle does,
     * from the reference-golden parquet). The hash is the portable
     * md5-prefix family (DuckDB-recomputable).
     */

@@ -12,6 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * `min_conv_id`/`max_conv_id` follow Spark's string order (UTF-8 bytes,
   * `UTF8String.compareTo`), so a tally merges exactly with rows Spark's
   * own `min`/`max` aggregates wrote.
+  *
+  * The tally is the extraction writers' only counter: both lineage tables
+  * and the corpus metrics map that [[Extract.runCheckpointed]] and
+  * [[Extract.reparseErrors]] return (rows, filtered, error rows, md chars)
+  * are sums over its rows.
   */
 final case class LineageTally(key: Option[Long], rows_out: Long,
                               filtered_rows: Long, error_rows: Long,

@@ -119,7 +119,8 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     (s"$base/first_half", half.count())
   }
 
-  test("job budget per call: first append <=4, resumed append <=8, zero-row resume <=6") {
+  test("job budget per call: first append <=4, resumed append <=8, " +
+      "zero-row resume <=6, healing zero-row resume <=7") {
     val base = tmp("graft-ckpt-jobs")
     val (halfDir, halfRows) = firstHalf(base)
     val out = s"$base/out"
@@ -130,11 +131,19 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lineage = lineageFiles(out)
     val (m3, zero) = counted(run("data/transcripts_t1", out))
     assert(rowsOf(m3) === 0L)
-    info(s"jobs: first append $first, resumed append $resumed, zero-row resume $zero")
+    assert(lineageFiles(out) === lineage, "zero-row resume touched lineage files")
+    // a missing lineage table: the zero-row resume heals both tables
+    val dir = new org.apache.hadoop.fs.Path(s"$out/lineage_buckets")
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+    val (m4, healing) = counted(run("data/transcripts_t1", out))
+    assert(rowsOf(m4) === 0L)
+    assert(buckets(out) === recomputed(out))
+    info(s"jobs: first append $first, resumed append $resumed, " +
+      s"zero-row resume $zero, healing zero-row resume $healing")
     assert(first <= 4, s"first append ran $first jobs")
     assert(resumed <= 8, s"resumed append ran $resumed jobs")
     assert(zero <= 6, s"zero-row resume ran $zero jobs")
-    assert(lineageFiles(out) === lineage, "zero-row resume touched lineage files")
+    assert(healing <= 7, s"healing zero-row resume ran $healing jobs")
   }
 
   /** Conversations whose ids sort one way in UTF-16 (Java's String order)

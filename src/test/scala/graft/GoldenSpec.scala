@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Extract, ExtractTurn, ResultJson, Turn}
+import graft.pipeline.{Extract, ExtractTurn, ResultJson}
 
 /** The per-turn text-equality contract (FIXTURES.md §3): run the engine over
   * transcripts_t1 and require 100% byte equality with the frozen golden

@@ -227,7 +227,8 @@ class PropertySpec extends AnyFunSuite {
     check(Prop.forAll(payload) { s =>
       StrictFast.transcode(s, sx, sy) match {
         case StrictFast.ShapeFail => true // replays the tree path: trivially equal
-        case StrictFast.ParseFail | StrictFast.ParseFailTrail =>
+        case StrictFast.ParseFail | StrictFast.ParseFailTrail |
+             _: StrictFast.ParseFailTrailCaptured =>
           // the guarantee the ExtractTurn shortcut relies on
           try { PyJson.parse(s); false } catch { case _: Exception => true }
         case StrictFast.Ok(fastJson, lean) =>

@@ -6,11 +6,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.ExtractStream
-
-/** Drives the streaming variant end-to-end over a landing directory and
-  * checks (a) results equal the batch path, (b) restart-with-checkpoint
-  * does not reprocess (exactly-once file semantics = Q5 resume).
+/** Structured Streaming over a landing directory: the stateless DocOps
+  * and the decontam overlap stage compose onto a stream and equal their
+  * batch results, and `DedupStream.sink` keeps incremental dedup state
+  * equal to a full recompute, replay included.
   */
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -131,101 +130,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .where(col("n_contaminated") > 0)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(batch.nonEmpty && streamed === batch)
-  }
-
-  test("streaming extraction equals batch extraction; checkpoint resume skips done work") {
-    val work = Files.createTempDirectory("graft-stream").toFile.getAbsolutePath
-    val landing = s"$work/landing"
-    val out = s"$work/out"
-    val ckpt = s"$work/ckpt"
-
-    // land the t1 corpus as a file-source input
-    spark.read.parquet("data/transcripts_t1").coalesce(2)
-      .write.parquet(landing)
-
-    val q1 = ExtractStream.writer(
-      ExtractStream.extractStream(ExtractStream.readTranscriptStream(spark, landing)),
-      out, ckpt).start()
-    q1.awaitTermination()
-
-    val streamed = spark.read.parquet(out)
-    val batch = graft.pipeline.Extract.run(spark, "data/transcripts_t1").toDF()
-    assert(streamed.count() === batch.count())
-    val diff = streamed.select("conv_id", "turn_idx", "cells_json", "md", "md_nohf", "filtered")
-      .exceptAll(batch.select("conv_id", "turn_idx", "cells_json", "md", "md_nohf", "filtered"))
-      .count()
-    assert(diff === 0L)
-
-    // restart with same checkpoint: no new input -> no new rows
-    val q2 = ExtractStream.writer(
-      ExtractStream.extractStream(ExtractStream.readTranscriptStream(spark, landing)),
-      out, ckpt).start()
-    q2.awaitTermination()
-    assert(spark.read.parquet(out).count() === batch.count())
-  }
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
-
-  test("windowed report: watermarked event-time windows finalize and late data drops") {
-    val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[(java.sql.Timestamp, Boolean, String)]
-    val report = ExtractStream.windowedReport(
-      in.toDF().toDF("ts", "filtered", "md"), "1 minute", "1 minute")
-    val q = report.writeStream.format("memory").queryName("win_report")
-      .outputMode("append").start()
-    try {
-      in.addData((ts("2026-01-01 10:00:05"), false, "aa"),
-        (ts("2026-01-01 10:00:40"), true, "b"))
-      q.processAllAvailable()
-      // advance watermark past 10:01 + 1min lateness -> first window closes
-      in.addData((ts("2026-01-01 10:03:00"), false, "c"))
-      q.processAllAvailable()
-      in.addData((ts("2026-01-01 10:03:30"), false, "d"))
-      q.processAllAvailable()
-      val rows = spark.table("win_report").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getLong(1), r.getLong(2), r.getLong(3)))
-      assert(rows.contains(("2026-01-01 10:00:00.0", 2L, 1L, 3L)),
-        s"finalized first window missing: ${rows.mkString("; ")}")
-      // a row later than the watermark allows for 10:00 must NOT reopen it
-      in.addData((ts("2026-01-01 10:00:50"), false, "late-dropped"))
-      q.processAllAvailable()
-      val again = spark.table("win_report").collect()
-        .filter(_.getTimestamp(0).toString == "2026-01-01 10:00:00.0")
-      assert(again.length === 1 && again.head.getLong(1) === 2L)
-    } finally q.stop()
-  }
-
-  test("session fan-in: flatMapGroupsWithState emits the doc after the event-time gap") {
-    val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[(String, Int, String, java.sql.Timestamp)]
-    val docs = ExtractStream.sessionFanIn(in.toDS(), gapMs = 60000L)
-    val q = docs.writeStream.format("memory").queryName("conv_docs")
-      .outputMode("append").start()
-    try {
-      // conversation A arrives out of order across two batches
-      in.addData(("A", 1, "second page", ts("2026-01-01 10:00:10")),
-        ("A", 0, "first page", ts("2026-01-01 10:00:00")))
-      q.processAllAvailable()
-      in.addData(("A", 2, "third page", ts("2026-01-01 10:00:20")))
-      q.processAllAvailable()
-      assert(spark.table("conv_docs").count() === 0L, "must not emit before the gap")
-      // event time jumps past A's last turn + gap -> A times out and emits
-      in.addData(("B", 0, "other conv", ts("2026-01-01 10:05:00")))
-      q.processAllAvailable()
-      in.addData(("B", 1, "still other", ts("2026-01-01 10:05:10")))
-      q.processAllAvailable()
-      val out = spark.table("conv_docs").as[ExtractStream.ConvDoc].collect()
-      assert(out.length === 1)
-      assert(out.head.conv_id === "A")
-      assert(out.head.n_pages === 3)
-      assert(out.head.doc_md === "first page\n\n---\n\nsecond page\n\n---\n\nthird page")
-    } finally q.stop()
   }
 
   test("continuous incremental dedup: foreachBatch state ≡ full recompute; replay idempotent") {
