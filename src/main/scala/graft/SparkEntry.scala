@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{DocOps, MultimodalOps, VectorOps}
@@ -540,20 +540,36 @@ object SparkEntry {
     // reference's row set (error_rows stays engine-side: the golden has no
     // status column; it is spec-asserted instead)
     // Q4's loop closed end-to-end: run the checkpointed pipeline, knock a
-    // deterministic ~1/9 of rows down to the transient-error shape, then
-    // re-parse by key and overwrite in place — the final table must match
-    // the reference golden byte-for-byte (same oracle as extract_turns)
+    // deterministic ~1/9 of one conv_id range's rows down to the
+    // transient-error shape, then re-parse by key and overwrite in place —
+    // the final table must match the reference golden byte-for-byte (same
+    // oracle as extract_turns)
     "extract_reparse" -> ((s, _) => {
       import s.implicits._
       // local-FS temp dir: driver-harness only (production path resolves
       // through Hadoop FS inside runCheckpointed/reparseErrors)
-      val out = java.nio.file.Files.createTempDirectory("graft-reparse")
+      val tmp = java.nio.file.Files.createTempDirectory("graft-reparse")
         .toFile.getAbsolutePath
-      Extract.runCheckpointed(s, TranscriptsT2, out)
-      val n = Extract.injectTransientErrors(s, out,
+      val out = s"$tmp/out"
+      // append t2 in 4 contiguous conv_id ranges, one checkpointed run
+      // each, and fail rows of one range only: the error rows then sit in a
+      // minority of the part-files, so the reparse is file-granular
+      val turns = Extract.readTranscripts(s, TranscriptsT2).toDF()
+      val ids = turns.select("conv_id").distinct().as[String].collect().sorted
+      val cuts = (1 until 4).map(k => ids(k * ids.length / 4))
+      def range(k: Int): Column =
+        (if (k > 0) col("conv_id") >= cuts(k - 1) else lit(true)) &&
+          (if (k < 3) col("conv_id") < cuts(k) else lit(true))
+      (0 until 4).foreach { k =>
+        turns.where(range(k)).write.parquet(s"$tmp/t2_range$k")
+        Extract.runCheckpointed(s, s"$tmp/t2_range$k", out)
+      }
+      val n = Extract.injectTransientErrors(s, out, range(1) &&
         pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(9)) === 0)
       require(n > 0L, "error injection selected no rows")
-      Extract.reparseErrors(s, TranscriptsT2, out)
+      val m = Extract.reparseErrors(s, TranscriptsT2, out)
+      require(m("rewrite_mode") == "file_granular",
+        s"reparse of one range's errors ran as ${m("rewrite_mode")}")
       Extract.readResults(s, out).as[pipeline.TurnResult]
         .map(r => (r.conv_id, r.turn_idx, r.input_width, r.input_height,
           r.cells_json, r.md, r.md_nohf, r.filtered, ResultJson.spansJson(r.spans)))

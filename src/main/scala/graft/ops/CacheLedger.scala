@@ -41,24 +41,51 @@ object CacheLedger {
       if (!s.conf.getAll.contains(k)) s.conf.set(k, "true")
     } catch { case scala.util.control.NonFatal(_) => }
 
+  /** The frames tracked on this thread inside [[scoped]], or null. */
+  private val scope = new ThreadLocal[java.util.ArrayList[DataFrame]]
+
   private[ops] def track(df: DataFrame): DataFrame = {
     enableAdaptiveCachePartitioning(df)
-    tracked.add(df)
+    val mine = scope.get
+    if (mine != null) mine.add(df) else tracked.add(df)
     df
   }
 
+  /** Run `f`, then unpersist what ops persisted on this thread while it
+    * ran, whether `f` returned or threw. For callers that materialize
+    * their result inside `f` (a micro-batch that publishes its state), so
+    * the frames belong to that call alone and a long-lived session does
+    * not keep one more set of cached plans per call. Scopes nest; each
+    * releases only its own frames.
+    */
+  def scoped[A](f: => A): A = {
+    val outer = scope.get
+    val mine = new java.util.ArrayList[DataFrame]
+    scope.set(mine)
+    try f
+    finally {
+      scope.set(outer)
+      mine.forEach(unpersist)
+    }
+  }
+
+  /** Unpersist (non-blocking) a frame whose owning SparkSession may have
+    * been STOPPED since: its blocks died with the context, and unpersist
+    * against a dead context throws (round 6: surfaced by cross-suite
+    * ledger residue), so that failure is dropped.
+    */
+  private def unpersist(df: DataFrame): Unit =
+    try { df.unpersist(blocking = false); () }
+    catch { case scala.util.control.NonFatal(_) => }
+
   /** Unpersist every tracked intermediate (non-blocking). Safe to call at
     * any time: Spark recomputes dropped blocks if a plan still needs them,
-    * so releasing "too early" costs recompute, never correctness. Frames
-    * whose owning SparkSession has since been STOPPED are drained silently
-    * — their blocks died with the context, and unpersist against a dead
-    * context throws (round 6: surfaced by cross-suite ledger residue).
+    * so releasing "too early" costs recompute, never correctness.
     */
   def release(): Unit = {
     var df = tracked.poll()
     while (df != null) {
-      try df.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => }
+      unpersist(df)
       df = tracked.poll()
     }
   }

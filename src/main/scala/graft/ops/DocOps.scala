@@ -438,7 +438,7 @@ object DocOps {
     * (doc_id, simhash) table — maxDist+1 chunks of SimhashBits/(maxDist+1)
     * bits each.
     */
-  private def simhashBandRows(fps: DataFrame, maxDist: Int): DataFrame = {
+  private[graft] def simhashBandRows(fps: DataFrame, maxDist: Int): DataFrame = {
     val chunks = maxDist + 1
     val width = SimhashBits / chunks
     fps.select(col("doc_id"), col("simhash"),
@@ -473,7 +473,7 @@ object DocOps {
     * state, its rep pairs expanded to members through fingerprint-keyed
     * joins; within-group pairs are Hamming 0 by definition (groups ARE
     * fingerprint-equality classes). Byte-identical to the direct
-    * formulation ([[simhashPairsDirect]], spec-asserted); use
+    * formulation, a band self-join over every doc (spec-asserted); use
     * [[simhashEdges]] as the CC feed when the k² report rows are not
     * themselves the deliverable.
     */
@@ -494,25 +494,6 @@ object DocOps {
       .where(col("sh_a") =!= col("sh_b") || col("a") < col("b"))
       .select(least(col("a"), col("b")).as("doc_a"),
         greatest(col("a"), col("b")).as("doc_b"), col("hamming"))
-  }
-
-  /** The DIRECT (no fingerprint collapse) formulation — the reference
-    * [[simhashPairs]] is spec-asserted against. Quadratic through the
-    * candidate shuffle on duplicate groups.
-    */
-  private[graft] def simhashPairsDirect(docs: DataFrame, maxDist: Int = 3): DataFrame = {
-    val banded = CacheLedger.track(simhashBandRows(simhash(docs), maxDist)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val a = banded.select(col("chunk_idx"), col("chunk_val"),
-      col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
-    val b = banded.select(col("chunk_idx"), col("chunk_val"),
-      col("doc_id").as("doc_b"), col("simhash").as("sh_b"))
-    a.join(b, Seq("chunk_idx", "chunk_val"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxDist)
   }
 
   /** LINEAR-SIZE edge feed for connected components over the SimHash

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
@@ -27,12 +25,15 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   */
 object Extract {
 
-  /** Read a transcripts parquet/Iceberg dir into the typed input. */
+  /** Read a transcripts parquet/Iceberg dir into the typed input, with the
+    * [[Turn]] encoder's schema: columns resolve by name (other columns are
+    * not read), and no schema-inference job runs. A column of another type
+    * — say an int64 `turn_idx` — fails when the data is read, not at
+    * analysis.
+    */
   def readTranscripts(spark: SparkSession, path: String): Dataset[Turn] = {
-    import spark.implicits._
-    spark.read.parquet(path)
-      .select($"conv_id", $"turn_idx", $"role", $"text", $"tool")
-      .as[Turn]
+    val turn = Encoders.product[Turn]
+    spark.read.schema(turn.schema).parquet(path).as(turn)
   }
 
   /** The core object stage. Input is projected to exactly the needed columns
@@ -248,52 +249,28 @@ object Extract {
     val t = observedTally(obs).getOrElse(throw new IllegalStateException(
       s"lineage heal of $outDir observed no tally"))
     fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/lineage"), true)
-    writeLineage(spark, outDir, t.buckets, t.parts, 0L)
+    writeLineage(spark, fs, outDir, t.buckets, t.parts, 0L)
   }
 
-  /** The `lineage_buckets` rows (≤ [[NBuckets]]), read with a fixed schema. */
-  private def readBucketLineage(spark: SparkSession, outDir: String): Seq[LineageTally] =
-    spark.read.schema(bucketLineageSchema(spark))
-      .parquet(s"$outDir/lineage_buckets").collect().toSeq.map(LineageTally.fromRow)
-
-  /** (max `run_id`, count of null `run_id`s) of the partition lineage in one
-    * aggregate; max is -1 for an empty table. A table written before run
-    * ids existed has no such column, so every row reads as null — that
-    * count replaces a separate schema probe. The run log is small, so one
-    * task reads it all and the aggregate needs no shuffle: one job.
-    */
-  private def runIdStats(spark: SparkSession, outDir: String): (Long, Long) = {
-    val r = spark.read.schema(runLineageSchema).parquet(s"$outDir/lineage")
-      .coalesce(1)
-      .agg(coalesce(max(col("run_id")), lit(-1L)), count_if(col("run_id").isNull))
-      .collect()(0)
-    (r.getLong(0), r.getLong(1))
-  }
-
-  /** Start `a` on a new driver thread and return a function that waits for
-    * its value (rethrowing its failure). Spark runs the two threads' jobs
-    * concurrently; a new thread inherits the caller's Spark local properties
-    * (job group, scheduler pool), so its jobs stay attributed to the call.
-    */
-  private def fork[A](a: => A): () => A = {
-    val task = new java.util.concurrent.FutureTask[A](() => a)
-    new Thread(task, "graft-lineage").start()
-    () => try task.get() catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    }
-  }
-
-  /** Start reading the lineage state on a second driver thread: the
-    * `lineage_buckets` rows and the run log's (max `run_id`, null
-    * `run_id`s), each None when its table is missing. The writers read it
-    * alongside their own scans and writes, which touch neither table.
+  /** The lineage state, read on the driver: the `lineage_buckets` rows
+    * (≤ [[NBuckets]]) and the run log's (max `run_id`, count of null
+    * `run_id`s), each None when its table is missing. Max is -1 for an
+    * empty run log; a file written before run ids existed has no such
+    * column, so each of its rows counts as a null.
     */
   private def lineageState(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
                            outDir: String)
-      : () => (Option[Seq[LineageTally]], Option[(Long, Long)]) = fork {
-    def exists(dir: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/$dir"))
-    (if (exists("lineage_buckets")) Some(readBucketLineage(spark, outDir)) else None,
-      if (exists("lineage")) Some(runIdStats(spark, outDir)) else None)
+      : (Option[Seq[LineageTally]], Option[(Long, Long)]) = {
+    def table(dir: String, schema: StructType): Option[Seq[Row]] = {
+      val p = new org.apache.hadoop.fs.Path(s"$outDir/$dir")
+      Option.when(fs.exists(p))(DriverParquet.read(fs, p, schema))
+    }
+    val runLog = table("lineage", runLineageSchema).map { rows =>
+      val ids = rows.filterNot(_.isNullAt(6)).map(_.getLong(6))
+      (ids.maxOption.getOrElse(-1L), (rows.size - ids.size).toLong)
+    }
+    (table("lineage_buckets", bucketLineageSchema(spark)).map(_.map(LineageTally.fromRow)),
+      runLog)
   }
 
   /** Whether the lineage state cannot take a delta and must be recomputed:
@@ -309,22 +286,20 @@ object Extract {
       buckets.isEmpty || rows != buckets.map(_.map(_.rows_out).sum)
 
   /** Overwrite `lineage_buckets` and append the run `runId` to the
-    * partition lineage, both from driver-held rows (one file each), the two
-    * writes running concurrently.
+    * partition lineage, both from driver-held rows and on the driver (one
+    * file each, see [[DriverParquet.write]]).
     */
-  private def writeLineage(spark: SparkSession, outDir: String,
-                           buckets: Seq[LineageTally], parts: Seq[LineageTally],
-                           runId: Long): Unit = {
-    val bucketsWritten = fork(spark.createDataFrame(buckets.sortBy(_.key)
-        .map(t => Row(t.key.map(Long.box).orNull, t.rows_out, t.filtered_rows,
-          t.error_rows, t.md_chars, t.min_conv_id, t.max_conv_id)).asJava,
-        bucketLineageSchema(spark))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/lineage_buckets"))
-    spark.createDataFrame(parts.sortBy(_.key).map(t => Row(t.key.get.toInt,
-        t.rows_out, t.filtered_rows, t.error_rows, t.min_conv_id,
-        t.max_conv_id, runId)).asJava, runLineageSchema)
-      .coalesce(1).write.mode("append").parquet(s"$outDir/lineage")
-    bucketsWritten()
+  private def writeLineage(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                           outDir: String, buckets: Seq[LineageTally],
+                           parts: Seq[LineageTally], runId: Long): Unit = {
+    DriverParquet.write(fs, new org.apache.hadoop.fs.Path(s"$outDir/lineage_buckets"),
+      bucketLineageSchema(spark), buckets.sortBy(_.key).map(t => Row(
+        t.key.map(Long.box).orNull, t.rows_out, t.filtered_rows, t.error_rows,
+        t.md_chars, t.min_conv_id, t.max_conv_id)), replace = true)
+    DriverParquet.write(fs, new org.apache.hadoop.fs.Path(s"$outDir/lineage"),
+      runLineageSchema, parts.sortBy(_.key).map(t => Row(t.key.get.toInt,
+        t.rows_out, t.filtered_rows, t.error_rows, t.min_conv_id, t.max_conv_id,
+        runId)), replace = false)
   }
 
   /** `buckets` with the rows of the tally `replaced` swapped for those of
@@ -447,17 +422,20 @@ object Extract {
     * Lineage is maintained INCREMENTALLY and in the same pass as the write
     * (the InkStream idea: derived state is kept consistent by the pass that
     * changes the base table, not rebuilt by re-reading it):
-    *  - alongside the write, on a second driver thread, one collect of the
-    *    ≤32 `lineage_buckets` rows and one aggregate over the run log (max
-    *    `run_id`, null `run_id`s), both with fixed schemas;
+    *  - before the write, the driver itself reads the ≤32
+    *    `lineage_buckets` rows and the run log's (max `run_id`, null
+    *    `run_id`s) through parquet-hadoop ([[DriverParquet]]): no Spark job
+    *    and no second driver thread;
     *  - the resume anti-join counts the existing results while it scans
     *    their keys (an observation on the results side);
     *  - the write's observation tallies the increment per conv_id-hash
     *    bucket and per write task partition ([[LineageTally]]);
     *  - the driver merges the bucket tally into the old rows (sums add,
     *    min/max combine — all associative) and writes both lineage tables
-    *    from driver-held rows: `lineage_buckets` overwritten, the partition
+    *    itself, one file each: `lineage_buckets` overwritten, the partition
     *    lineage APPENDED under a fresh `run_id`.
+    * So every Spark job of the call touches data: the resume anti-join's
+    * scan of the results keys and the write (a heal adds its one scan).
     * `lineage.part_id` is therefore the task partition of the write that
     * produced the rows — the run that actually happened. A zero-row resume
     * writes no lineage at all: its files stay byte-identical (spec-asserted
@@ -486,7 +464,7 @@ object Extract {
     def dataFiles(): Set[String] = listDataFiles(fs, resultsPath)
     val existed = fs.exists(resultsPath)
     val markerSet = fs.exists(lineageMarker(outDir))
-    val state = lineageState(spark, fs, outDir)
+    val (oldBuckets, runLog) = lineageState(spark, fs, outDir)
     val scanned = Observation("resumed_results")
     val remaining =
       if (existed) resumeFrom(turns, readResults(spark, outDir)
@@ -500,7 +478,6 @@ object Extract {
     // orphans may exist physically but must not enter the next snapshot
     val liveBefore = SnapshotStore.liveFiles(fs, resultsPath)
     df.write.mode("append").parquet(s"$outDir/results")
-    val (oldBuckets, runLog) = state()
     val written = observedTally(obs)
     val newFiles = (dataFiles() -- before).toSeq.sorted
     // a manifest-carrying table folds the appended files into a new
@@ -524,7 +501,7 @@ object Extract {
       healLineage(spark, fs, outDir)
       fs.delete(lineageMarker(outDir), false) // cleared only after the heal
     } else written.filter(_.buckets.nonEmpty).foreach { inc =>
-      writeLineage(spark, outDir,
+      writeLineage(spark, fs, outDir,
         LineageTally.merge(oldBuckets.getOrElse(Seq.empty) ++ inc.buckets),
         inc.parts, runLog.fold(0L)(_._1 + 1L))
     }
@@ -536,8 +513,8 @@ object Extract {
     * rows errored through extraction and replace those rows in place by
     * key, in one pass over the table and one write, keeping lineage from
     * what the pass itself observed:
-    *  - on a second driver thread, the lineage state is read as
-    *    [[runCheckpointed]] reads it;
+    *  - the driver reads the lineage state as [[runCheckpointed]] reads it
+    *    (no Spark job, no second driver thread);
     *  - ONE scan, with no shuffle, collects the names of the part-files
     *    holding error rows (`input_file_name()`, made distinct per
     *    partition); the same scan observes the table's row count and tallies
@@ -551,7 +528,7 @@ object Extract {
     *    filtered/error/md sums become old − replaced + new; `rows_out` and
     *    the conv_id range are invariant because the key set is unchanged)
     *    and appends the pass to the partition lineage under a fresh
-    *    `run_id`, the two lineage writes running concurrently.
+    *    `run_id`, both lineage writes on the driver.
     * `lineage.part_id` of a reparse run is therefore the task partition of
     * the write that re-extracted the rows. The returned metrics (`rows`,
     * `filtered_rows`, `error_rows`, `md_chars` of the re-extracted rows)
@@ -602,7 +579,7 @@ object Extract {
     requireFlat(fs, resultsPath)
     val marker = lineageMarker(outDir)
     val markerSet = fs.exists(marker)
-    val state = lineageState(spark, fs, outDir)
+    val (oldBuckets, runLog) = lineageState(spark, fs, outDir)
     val results = readResults(spark, outDir)
     val isError = col("status") === "error"
     val scanned = Observation("reparse_scanned")
@@ -615,7 +592,6 @@ object Extract {
       .select(input_file_name()).as[String]
       .mapPartitions(_.toSet.iterator)
       .collect().map(SnapshotStore.qualify(fs, _)).toSet
-    val (oldBuckets, runLog) = state()
     val stale = lineageStale(markerSet, oldBuckets, runLog,
       observed(scanned).map(_("rows").asInstanceOf[Long]))
     def heal(): Unit = {
@@ -679,7 +655,7 @@ object Extract {
       } yield (buckets, added.parts)
       patch match {
         case Some((buckets, parts)) =>
-          writeLineage(spark, outDir, buckets, parts, runLog.get._1 + 1L)
+          writeLineage(spark, fs, outDir, buckets, parts, runLog.get._1 + 1L)
           fs.delete(marker, false) // lineage consistent again
         case None => heal()
       }

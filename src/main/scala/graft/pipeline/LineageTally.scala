@@ -16,7 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * The tally is the extraction writers' only counter: both lineage tables
   * and the corpus metrics map that [[Extract.runCheckpointed]] and
   * [[Extract.reparseErrors]] return (rows, filtered, error rows, md chars)
-  * are sums over its rows.
+  * are sums over its rows. Its observation rides the results write (or
+  * the reparse scan): the writers read and write both lineage tables on
+  * the driver ([[DriverParquet]]), with no Spark job and no second driver
+  * thread, so no Spark job of theirs touches lineage but a heal's scan.
   */
 final case class LineageTally(key: Option[Long], rows_out: Long,
                               filtered_rows: Long, error_rows: Long,

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
-import graft.ops.DocOps
+import graft.ops.{CacheLedger, DocOps}
 
 /** Continuous near-duplicate detection over a document stream — the
   * streaming face of round 7's incremental-append dedup: each micro-batch
@@ -128,10 +128,12 @@ object DedupStream {
     * state under `stateDir`, publishing the `index_v<batchId>` and
     * `labels_v<batchId>` DELTAS. Exposed for direct (non-streaming) use
     * and for replay-idempotence testing. The state is read only when a
-    * prior version exists.
+    * prior version exists. The frames the batch's ops persist are
+    * unpersisted once its label delta is published ([[CacheLedger.scoped]]):
+    * the batch is checkpointed inside the call, so they serve it alone.
     */
   def processBatch(spark: SparkSession, stateDir: String, batch: DataFrame,
-                   batchId: Long, maxDist: Int = 3): Unit = {
+                   batchId: Long, maxDist: Int = 3): Unit = CacheLedger.scoped {
     val prior = latestVersion(spark, stateDir, "labels_v", batchId)
     val oldIdx = prior.map(_ => readIndex(spark, stateDir, batchId))
     val b = batch.localCheckpoint(true)

@@ -2,14 +2,12 @@ package graft
 
 import java.io.IOException
 import java.net.URI
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{CachedPlans, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -70,7 +68,7 @@ object CrashFs {
 class DedupStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
-  private val jobs = new AtomicInteger
+  private var counted: JobCounter = _
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -81,25 +79,13 @@ class DedupStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    })
+    counted = new JobCounter(spark)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toFile.getAbsolutePath
-
-  private def counted[T](f: => T): (T, Int) = {
-    ListenerBusDrain(spark.sparkContext)
-    jobs.set(0)
-    val v = f
-    ListenerBusDrain(spark.sparkContext)
-    (v, jobs.get)
-  }
 
   /** Seeded random-word documents (30 words of a 2000-word vocabulary):
     * batch 0 holds ids 0-149, batch 1 ids 1000-1149; every 10th doc of a
@@ -136,6 +122,16 @@ class DedupStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(l.size === 300 && l(1007L) === l(7L) && l(10L) === 7L)
     assert(boot <= 10, s"bootstrap ran $boot jobs")
     assert(append <= 15, s"append ran $append jobs")
+  }
+
+  test("a batch releases the plans its ops cache") {
+    val state = tmp("graft-dedup-cache")
+    val Seq(b0, b1) = fixtureBatches()
+    val batches = Seq(b0, b1, b0.withColumn("doc_id", col("doc_id") + 5000L))
+    val before = CachedPlans(spark)
+    batches.indices.foreach(b => DedupStream.processBatch(spark, state, batches(b), b.toLong))
+    assert(CachedPlans(spark) === before)
+    assert(labels(state)(5007L) === 7L, "batch 2 copies batch 0")
   }
 
   test("bootstrap writes the batch's rep band rows and its batch keepers, schemas included") {

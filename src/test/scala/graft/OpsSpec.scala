@@ -734,6 +734,26 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"only $close/${nd.length} J>=0.9 pairs within hamming 12")
   }
 
+  /** The DIRECT (no fingerprint collapse) formulation of
+    * [[DocOps.simhashPairs]], the reference it is asserted against: every
+    * doc's band rows self-joined, quadratic on duplicate groups.
+    */
+  private def simhashPairsDirect(docs: org.apache.spark.sql.DataFrame,
+                                 maxDist: Int = 3): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{bit_count, col}
+    val banded = DocOps.simhashBandRows(DocOps.simhash(docs), maxDist)
+    val a = banded.select(col("chunk_idx"), col("chunk_val"),
+      col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
+    val b = banded.select(col("chunk_idx"), col("chunk_val"),
+      col("doc_id").as("doc_b"), col("simhash").as("sh_b"))
+    a.join(b, Seq("chunk_idx", "chunk_val"))
+      .where(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
+      .distinct()
+      .where(col("hamming") <= maxDist)
+  }
+
   test("SimHash collapse: pairs ≡ direct formulation (corpus + planted dup groups)") {
     // round 7: simhashPairs routes through the digest-collapse trunk
     // (reps band/join, members expand); output must be byte-identical to
@@ -741,7 +761,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2))
     val viaCollapse = DocOps.simhashPairs(docs).collect().map(key).sorted.toVector
-    val direct = DocOps.simhashPairsDirect(docs).collect().map(key).sorted.toVector
+    val direct = simhashPairsDirect(docs).collect().map(key).sorted.toVector
     assert(viaCollapse === direct)
     assert(viaCollapse.nonEmpty, "sf corpus should contain near-identical docs")
 
@@ -756,7 +776,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (10L, t2), (11L, t2),
       (50L, (100 to 119).map(i => s"zz$i").mkString(" "))).toDF("doc_id", "text")
     val a = DocOps.simhashPairs(d).collect().map(key).sorted.toVector
-    val b = DocOps.simhashPairsDirect(d).collect().map(key).sorted.toVector
+    val b = simhashPairsDirect(d).collect().map(key).sorted.toVector
     assert(a === b)
     // within-group pairs present with hamming 0
     assert(a.count { case (x, y, h) => h == 0L && Set(0L, 1L, 2L)(x) && Set(0L, 1L, 2L)(y) } === 3)
