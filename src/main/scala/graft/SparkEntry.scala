@@ -581,10 +581,10 @@ object SparkEntry {
     // Q6 time travel promoted into the driver contract (round 7): run the
     // checkpointed pipeline, compact (a whole-table rewrite through the
     // snapshot protocol), then TIME-TRAVEL-READ the pre-compaction
-    // snapshot (id 0 — the bootstrap commit over the original files). The
+    // snapshot (id 0 — the first append's commit over its own files). The
     // oracle is the reference golden, so a green row certifies
-    // bootstrap -> rewrite-commit -> retention -> readAt end-to-end: the
-    // rewrite must not have touched a byte the historical snapshot
+    // append-commit -> rewrite-commit -> retention -> readAt end-to-end:
+    // the rewrite must not have touched a byte the historical snapshot
     // references. (Expiry failing that same read is spec-asserted —
     // SnapshotSpec "time-travel reads resolve historical snapshots".)
     "snapshot_time_travel" -> ((s, _) => {

@@ -5,12 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.io.{OutputFile, api}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.{ColumnIOFactory, OutputFile, api}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.Type.Repetition
@@ -22,7 +22,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType
   * file Spark would write for the same rows — the same parquet schema
   * (`required` for a non-nullable field) and Spark's row-schema footer key
   * — so `spark.read.parquet` reads it with the same `StructType`. Flat
-  * schemas of int, long and string fields only.
+  * schemas of int, long and string fields only. A write may add its own
+  * key-value pairs to the footer, and a read returns them: `Extract`
+  * stamps `lineage_buckets` that way with the snapshot it describes.
   */
 private[pipeline] object DriverParquet {
 
@@ -42,12 +44,13 @@ private[pipeline] object DriverParquet {
       }
     }: _*)
 
-  private final class RowWriteSupport(schema: StructType) extends WriteSupport[Row] {
+  private final class RowWriteSupport(schema: StructType, meta: Map[String, String])
+      extends WriteSupport[Row] {
     private var out: api.RecordConsumer = _
     def init(conf: Configuration): WriteSupport.WriteContext =
-      new WriteSupport.WriteContext(parquetSchema(schema), Map(
+      new WriteSupport.WriteContext(parquetSchema(schema), (meta ++ Map(
         RowMetadataKey -> schema.json,
-        "org.apache.spark.version" -> org.apache.spark.SPARK_VERSION_SHORT).asJava)
+        "org.apache.spark.version" -> org.apache.spark.SPARK_VERSION_SHORT)).asJava)
     def prepareForWrite(c: api.RecordConsumer): Unit = out = c
     def write(r: Row): Unit = {
       out.startMessage()
@@ -64,11 +67,11 @@ private[pipeline] object DriverParquet {
     }
   }
 
-  private final class Builder(file: OutputFile, schema: StructType)
+  private final class Builder(file: OutputFile, schema: StructType, meta: Map[String, String])
       extends ParquetWriter.Builder[Row, Builder](file) {
     protected def self(): Builder = this
     protected def getWriteSupport(conf: Configuration): WriteSupport[Row] =
-      new RowWriteSupport(schema)
+      new RowWriteSupport(schema, meta)
   }
 
   /** The data files of `dir` as Spark lists them: names not starting with
@@ -80,15 +83,27 @@ private[pipeline] object DriverParquet {
       .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
       .sortBy(_.getName)
 
-  /** The rows of every data file of `dir`, in `schema`'s field order; a
-    * field a file does not have reads as null. Empty when `dir` is missing.
+  /** The rows of every data file of `dir`, in `schema`'s field order (a
+    * field a file does not have reads as null), and the footer key-value
+    * pairs of its file when it has exactly one (else none). Empty when
+    * `dir` is missing.
     */
-  def read(fs: FileSystem, dir: Path, schema: StructType): Seq[Row] =
-    dataFiles(fs, dir).flatMap { p =>
-      val reader = ParquetReader.builder(new GroupReadSupport, p).withConf(fs.getConf).build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null).map(rowOf(_, schema)).toSeq
-      finally reader.close()
+  def read(fs: FileSystem, dir: Path, schema: StructType): (Seq[Row], Map[String, String]) = {
+    val files = dataFiles(fs, dir).map { p =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, fs.getConf))
+      try {
+        val meta = r.getFooter.getFileMetaData
+        val io = new ColumnIOFactory().getColumnIO(meta.getSchema)
+        val rows = Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null)
+          .flatMap { pages =>
+            val rr = io.getRecordReader(pages, new GroupRecordConverter(meta.getSchema))
+            Iterator.fill(pages.getRowCount.toInt)(rowOf(rr.read(), schema))
+          }.toList
+        (rows, meta.getKeyValueMetaData.asScala.toMap)
+      } finally r.close()
     }
+    (files.flatMap(_._1), if (files.size == 1) files.head._2 else Map.empty)
+  }
 
   private def rowOf(g: Group, schema: StructType): Row = Row.fromSeq(schema.fields.toSeq.map { f =>
     if (!g.getType.containsField(f.name) || g.getFieldRepetitionCount(f.name) == 0) null
@@ -103,12 +118,13 @@ private[pipeline] object DriverParquet {
     * `_` name, which readers skip, and renamed once complete, so no reader
     * sees a partial file. With `replace`, the dir's other files go first
     * (an overwrite); a crash between the two leaves the table empty.
+    * `meta` goes into the file's footer beside Spark's keys.
     */
   def write(fs: FileSystem, dir: Path, schema: StructType, rows: Seq[Row],
-            replace: Boolean): Unit = {
+            replace: Boolean, meta: Map[String, String] = Map.empty): Unit = {
     val name = s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet"
     val staged = new Path(dir, s"_$name")
-    val w = new Builder(HadoopOutputFile.fromPath(staged, fs.getConf), schema)
+    val w = new Builder(HadoopOutputFile.fromPath(staged, fs.getConf), schema, meta)
       .withConf(fs.getConf).withCompressionCodec(CompressionCodecName.SNAPPY).build()
     try rows.foreach(w.write) finally w.close()
     if (replace) fs.listStatus(dir).map(_.getPath)

@@ -129,17 +129,6 @@ object Extract {
     */
   private val ObservationWait = scala.concurrent.duration.Duration(60, "s")
 
-  /** The metrics of `obs` after its action has finished, or None when
-    * there are none: when AQE prunes the observed subtree (an anti-join
-    * whose other side turned out empty) Spark reports an empty row, and an
-    * older listener never completes the observation at all — a plain
-    * `obs.get` would then block forever. Callers treat None as "unknown".
-    */
-  private def observed(obs: Observation): Option[Map[String, Any]] =
-    scala.util.Try(scala.concurrent.Await.result(obs.future, ObservationWait))
-      .toOption.filter(_.length > 0)
-      .map(r => r.getValuesMap[Any](r.schema.fieldNames.toSeq))
-
   /** The number of conv_id-hash buckets of bucket lineage. */
   private val NBuckets = 32L
 
@@ -156,9 +145,16 @@ object Extract {
   private def tally: Column =
     LineageTally.column(bucketHash(col("conv_id"))).as("lineage")
 
-  /** The value of [[tally]] observed as `obs`, or None (see [[observed]]). */
+  /** The value of [[tally]] observed as `obs` after its action has
+    * finished, or None when there is none: when AQE prunes the observed
+    * subtree Spark reports an empty row, and an older listener never
+    * completes the observation at all — a plain `obs.get` would then block
+    * forever. Callers treat None as "unknown".
+    */
   private def observedTally(obs: Observation): Option[LineageTallies] =
-    observed(obs).map(m => LineageTally.tallies(m("lineage").asInstanceOf[Row]))
+    scala.util.Try(scala.concurrent.Await.result(obs.future, ObservationWait))
+      .toOption.filter(_.length > 0)
+      .map(r => LineageTally.tallies(r.getAs[Row]("lineage")))
 
   /** The corpus metrics of an observed tally: rows, filtered rows, error
     * rows and md chars, each summed over its bucket rows.
@@ -176,11 +172,17 @@ object Extract {
   private lazy val resultsSchema: StructType = Encoders.product[TurnResult].schema
 
   /** Fixed schema of `lineage_buckets`: the output schema of
-    * [[bucketLineage]], which defines it (analysis of an empty plan; no job).
+    * [[bucketLineage]], restated so that no writer pays for analysing it
+    * (~18 ms a time); CheckpointSpec compares the two through the footers.
     */
-  private def bucketLineageSchema(spark: SparkSession): StructType =
-    bucketLineage(spark.createDataFrame(
-      java.util.List.of[Row](), resultsSchema)).schema
+  private val bucketLineageSchema: StructType = StructType(Seq(
+    StructField("bucket", LongType),
+    StructField("rows_out", LongType, nullable = false),
+    StructField("filtered_rows", LongType),
+    StructField("error_rows", LongType),
+    StructField("md_chars", LongType),
+    StructField("min_conv_id", StringType),
+    StructField("max_conv_id", StringType)))
 
   /** Fixed schema of the partition lineage, the per-run log: the write
     * task partition's counters plus the run that wrote them.
@@ -194,16 +196,17 @@ object Extract {
     StructField("max_conv_id", StringType),
     StructField("run_id", LongType, nullable = false)))
 
-  /** Manifest-aware read of a results table (plain dir when no manifest —
-    * see [[SnapshotStore]]). All internal readers resolve through this, so
-    * maintenance ops' pre-commit file movements are never observed.
+  /** Read of a results table through its current snapshot (see
+    * [[SnapshotStore]]). All internal readers resolve through this, so
+    * writers' uncommitted and retired files are never observed.
     */
   def readResults(spark: SparkSession, outDir: String): DataFrame =
     SnapshotStore.read(spark, s"$outDir/results", resultsSchema)
 
   /** Time-travel read: the results table as of snapshot `id` (the
     * VERSION-AS-OF analog; see [[SnapshotStore.readAt]] for the expiry
-    * contract). Available once the table carries a manifest.
+    * contract). Snapshot 0 is the first append's commit, and every later
+    * append, reparse and compaction commits the next id.
     */
   def readResultsAt(spark: SparkSession, outDir: String, id: Long): DataFrame =
     SnapshotStore.readAt(spark, s"$outDir/results", id, resultsSchema)
@@ -220,86 +223,89 @@ object Extract {
     SnapshotStore.expireSnapshots(fs, p, retainLast)
   }
 
-  /** Marker signalling "results were swapped but the lineage patch has not
-    * completed" — created by [[reparseErrors]] immediately before its
-    * snapshot commit and cleared only after both lineage tables are
-    * patched. Its presence at the start of any run means lineage is
-    * (possibly) stale in ways the rows_out invariant cannot see — reparse
-    * preserves the key set, so filtered/error/md_chars can drift while
-    * rows_out stays exact — and forces a full lineage heal.
+  /** The current snapshot id of a results table, None when there is no
+    * table yet. A table an older build wrote without a manifest first
+    * gets one over its part-files ([[SnapshotStore.bootstrap]]).
     */
-  private def lineageMarker(outDir: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$outDir/_lineage_patch_pending")
+  private def snapshotOf(fs: org.apache.hadoop.fs.FileSystem,
+                         resultsPath: org.apache.hadoop.fs.Path): Option[Long] =
+    Option.when(fs.exists(resultsPath))(SnapshotStore.bootstrap(fs, resultsPath,
+      listDataFiles(fs, resultsPath).toSeq.sorted))
 
-  /** Recompute both lineage tables from the live results: ONE scan
-    * observes the [[tally]] (a `noop` write drives it; `agg` rejects the
-    * tally's `spark_partition_id()` argument), then the old run log is
-    * deleted and both tables are written from the tally as run 0 — the heal
-    * discards per-run history, keeping the auditable content lineage exact.
-    * A crash after the delete leaves the run log missing, which the next
-    * run heals. An unknown tally (see [[observed]]) fails the heal before
-    * it touches either table, so what called for it is still there for the
-    * next run to see.
+  /** Footer keys of the `lineage_buckets` stamp: the results snapshot its
+    * rows describe and the run that wrote them.
+    */
+  private val SnapshotKey = "graft.lineage.snapshot"
+  private val RunKey = "graft.lineage.run"
+
+  /** The `lineage_buckets` rows, read on the driver, and their stamp
+    * (snapshot, run): None for a missing table and for a file without
+    * one (an older build's, or Spark's).
+    */
+  private final case class Lineage(buckets: Seq[LineageTally], stamp: Option[(Long, Long)]) {
+
+    /** Whether the rows may take a delta: the stamp names `base`, the
+      * snapshot the run started from, and the run's commit, if it made
+      * one, landed at the next id. Anything else heals.
+      */
+    def describes(base: Option[Long], committed: Option[Long]): Boolean =
+      stamp.map(_._1) == base && committed.forall(_ == base.fold(0L)(_ + 1L))
+
+    /** The `run_id` of the next run-log append. */
+    def nextRun: Long = stamp.fold(0L)(_._2 + 1L)
+  }
+
+  private def readLineage(fs: org.apache.hadoop.fs.FileSystem, outDir: String): Lineage = {
+    val (rows, meta) = DriverParquet.read(fs,
+      new org.apache.hadoop.fs.Path(s"$outDir/lineage_buckets"), bucketLineageSchema)
+    Lineage(rows.map(LineageTally.fromRow),
+      for (s <- meta.get(SnapshotKey); r <- meta.get(RunKey)) yield (s.toLong, r.toLong))
+  }
+
+  /** Overwrite `lineage_buckets` with `buckets`, stamped (`snapshot`,
+    * `run`): one file, written on the driver ([[DriverParquet.write]]).
+    * Every writer writes it last: it is lineage's commit point.
+    */
+  private def writeBuckets(fs: org.apache.hadoop.fs.FileSystem, outDir: String,
+                           buckets: Seq[LineageTally], snapshot: Long, run: Long): Unit =
+    DriverParquet.write(fs, new org.apache.hadoop.fs.Path(s"$outDir/lineage_buckets"),
+      bucketLineageSchema, buckets.sortBy(_.key).map(t => Row(
+        t.key.map(Long.box).orNull, t.rows_out, t.filtered_rows, t.error_rows,
+        t.md_chars, t.min_conv_id, t.max_conv_id)), replace = true,
+      meta = Map(SnapshotKey -> snapshot.toString, RunKey -> run.toString))
+
+  /** Append the run `run` to the partition lineage, then stamp `buckets`
+    * as of `snapshot` ([[writeBuckets]]). The run log is write-only: a
+    * crash between the two leaves the stamp behind, and the next run
+    * heals both tables.
+    */
+  private def writeLineage(fs: org.apache.hadoop.fs.FileSystem,
+                           outDir: String, buckets: Seq[LineageTally],
+                           parts: Seq[LineageTally], snapshot: Long, run: Long): Unit = {
+    DriverParquet.write(fs, new org.apache.hadoop.fs.Path(s"$outDir/lineage"),
+      runLineageSchema, parts.sortBy(_.key).map(t => Row(t.key.get.toInt,
+        t.rows_out, t.filtered_rows, t.error_rows, t.min_conv_id, t.max_conv_id,
+        run)), replace = false)
+    writeBuckets(fs, outDir, buckets, snapshot, run)
+  }
+
+  /** Recompute both lineage tables from the results as of `snapshot`: ONE
+    * scan observes the [[tally]] (a `noop` write drives it; `agg` rejects
+    * the tally's `spark_partition_id()` argument), then the old run log is
+    * deleted and both tables are written from the tally as run 0 — the
+    * heal discards per-run history, keeping the auditable content lineage
+    * exact. An unknown tally (see [[observedTally]]) fails the heal before it
+    * touches either table; the stale stamp stays for the next run to see.
     */
   private def healLineage(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                          outDir: String): Unit = {
+                          outDir: String, snapshot: Long): Unit = {
     val obs = Observation("lineage_heal")
     readResults(spark, outDir).select("conv_id", "filtered", "status", "md")
       .observe(obs, tally).write.format("noop").mode("overwrite").save()
     val t = observedTally(obs).getOrElse(throw new IllegalStateException(
       s"lineage heal of $outDir observed no tally"))
     fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/lineage"), true)
-    writeLineage(spark, fs, outDir, t.buckets, t.parts, 0L)
-  }
-
-  /** The lineage state, read on the driver: the `lineage_buckets` rows
-    * (≤ [[NBuckets]]) and the run log's (max `run_id`, count of null
-    * `run_id`s), each None when its table is missing. Max is -1 for an
-    * empty run log; a file written before run ids existed has no such
-    * column, so each of its rows counts as a null.
-    */
-  private def lineageState(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                           outDir: String)
-      : (Option[Seq[LineageTally]], Option[(Long, Long)]) = {
-    def table(dir: String, schema: StructType): Option[Seq[Row]] = {
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/$dir")
-      Option.when(fs.exists(p))(DriverParquet.read(fs, p, schema))
-    }
-    val runLog = table("lineage", runLineageSchema).map { rows =>
-      val ids = rows.filterNot(_.isNullAt(6)).map(_.getLong(6))
-      (ids.maxOption.getOrElse(-1L), (rows.size - ids.size).toLong)
-    }
-    (table("lineage_buckets", bucketLineageSchema(spark)).map(_.map(LineageTally.fromRow)),
-      runLog)
-  }
-
-  /** Whether the lineage state cannot take a delta and must be recomputed:
-    * the reparse marker is set (reparse keeps the key set, so the count
-    * invariant cannot see its half-patched lineage), a lineage table is
-    * missing, a `run_id` is null (a table from before run ids), or the
-    * bucket `rows_out` sum differs from the observed results count — None
-    * (an observation that came back empty) counts as a difference.
-    */
-  private def lineageStale(markerSet: Boolean, buckets: Option[Seq[LineageTally]],
-                           runLog: Option[(Long, Long)], rows: Option[Long]): Boolean =
-    markerSet || runLog.forall { case (_, nullRunIds) => nullRunIds > 0L } ||
-      buckets.isEmpty || rows != buckets.map(_.map(_.rows_out).sum)
-
-  /** Overwrite `lineage_buckets` and append the run `runId` to the
-    * partition lineage, both from driver-held rows and on the driver (one
-    * file each, see [[DriverParquet.write]]).
-    */
-  private def writeLineage(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                           outDir: String, buckets: Seq[LineageTally],
-                           parts: Seq[LineageTally], runId: Long): Unit = {
-    DriverParquet.write(fs, new org.apache.hadoop.fs.Path(s"$outDir/lineage_buckets"),
-      bucketLineageSchema(spark), buckets.sortBy(_.key).map(t => Row(
-        t.key.map(Long.box).orNull, t.rows_out, t.filtered_rows, t.error_rows,
-        t.md_chars, t.min_conv_id, t.max_conv_id)), replace = true)
-    DriverParquet.write(fs, new org.apache.hadoop.fs.Path(s"$outDir/lineage"),
-      runLineageSchema, parts.sortBy(_.key).map(t => Row(t.key.get.toInt,
-        t.rows_out, t.filtered_rows, t.error_rows, t.min_conv_id, t.max_conv_id,
-        runId)), replace = false)
+    writeLineage(fs, outDir, t.buckets, t.parts, snapshot, 0L)
   }
 
   /** `buckets` with the rows of the tally `replaced` swapped for those of
@@ -324,16 +330,15 @@ object Extract {
     }))
   }
 
-  /** Move every part-file from `srcDir` into `dstDir` (fresh UUID names —
-    * collisions impossible), returning the qualified destination paths for
-    * the snapshot commit. Rename failures throw: at this stage nothing has
-    * been committed, so the table is untouched.
+  /** Move every part-file from `srcDir` into `dstDir`, the results dir of
+    * a manifest-carrying table (fresh UUID names — collisions impossible),
+    * returning the qualified destination paths for the snapshot commit.
+    * Rename failures throw: at this stage nothing has been committed, so
+    * the table is untouched.
     */
   private def movePartsCollect(fs: org.apache.hadoop.fs.FileSystem,
                                srcDir: org.apache.hadoop.fs.Path,
-                               dstDir: org.apache.hadoop.fs.Path): Seq[String] = {
-    if (!fs.exists(dstDir) && !fs.mkdirs(dstDir))
-      throw new IllegalStateException(s"could not create $dstDir")
+                               dstDir: org.apache.hadoop.fs.Path): Seq[String] =
     fs.listStatus(srcDir)
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-")).toSeq
       .map { s =>
@@ -342,46 +347,38 @@ object Extract {
           throw new IllegalStateException(s"rename ${s.getPath} -> $dst failed")
         SnapshotStore.qualify(fs, dst.toString)
       }
-  }
 
-  /** Whole-table rewrite through the snapshot protocol: stage in `tmpPath`
-    * (already written), bootstrap a manifest over the CURRENT physical
-    * files if none exists (so a crash mid-move leaves readers on the old
-    * consistent snapshot, never a half-populated dir), move the staged
-    * files in, commit the new snapshot, then sweep ORPHANS — files neither
-    * committed nor referenced by any retained snapshot. Replaced files
-    * survive (they back time travel) until [[expireResultSnapshots]].
+  /** Whole-table rewrite through the snapshot protocol: move the files
+    * staged in `tmpPath` (already written) into the manifest-carrying
+    * table, commit them as its new snapshot, then sweep ORPHANS — files
+    * neither committed nor referenced by any retained snapshot. Replaced
+    * files survive (they back time travel) until [[expireResultSnapshots]].
+    * Returns the committed snapshot id.
     */
   private def commitRewrite(fs: org.apache.hadoop.fs.FileSystem,
                             tmpPath: org.apache.hadoop.fs.Path,
-                            resultsPath: org.apache.hadoop.fs.Path): Unit = {
-    val live = SnapshotStore.bootstrap(fs, resultsPath,
-      listDataFiles(fs, resultsPath).toSeq.sorted)
+                            resultsPath: org.apache.hadoop.fs.Path): Long = {
+    val live = SnapshotStore.liveFiles(fs, resultsPath).getOrElse(Seq.empty)
     // physical listing taken BEFORE this writer's staged files move in:
     // pre-rewrite live files + orphans stranded by earlier crashes. The
     // sweep below is restricted to (preList ++ moved) so a concurrent
     // append's moved-but-not-yet-committed files are out of reach unless
     // the append both moved in before this listing AND commits after the
     // `keep` read — i.e. spans the entire rewrite; under the declared
-    // single-writer(-per-table) scope (SnapshotStore.scala:99-110) no
-    // such writer exists. (Round 7: the previous post-commit full listing
-    // could sweep any append that moved in anywhere in the window.)
+    // single-writer(-per-table) scope no such writer exists.
     val preList = listDataFiles(fs, resultsPath)
     val moved = movePartsCollect(fs, tmpPath, resultsPath)
     // whole-table rewrite = replace the pre-rewrite live set with the
     // staged one; through the rebase loop a concurrent APPEND landing in
     // the window survives (its files are neither in `removes` nor
     // replaced), instead of being clobbered by an absolute commit
-    SnapshotStore.commitRebase(fs, resultsPath, adds = moved, removes = live)
-    // sweep ORPHANS only (round 7, the Iceberg retention contract):
-    // candidates are limited to files this writer observed pre-move or
-    // staged itself (crash orphans, rebase-dropped stages) — a concurrent
-    // append that survived the rebase must survive the sweep too — and a
-    // file referenced by ANY retained snapshot manifest is out of bounds:
-    // it backs a time-travel read (readResultsAt) and is retired by
-    // expireResultSnapshots when its last referencing snapshot expires,
-    // not here. The REPLACED live set is therefore no longer deleted at
-    // commit time; snapshot N-1 stays readable until expiry.
+    val id = SnapshotStore.commitRebase(fs, resultsPath, adds = moved, removes = live)
+    // sweep ORPHANS only (the Iceberg retention contract): candidates are
+    // limited to files this writer observed pre-move or staged itself
+    // (crash orphans, rebase-dropped stages), and a file referenced by ANY
+    // retained snapshot manifest is out of bounds: it backs a time-travel
+    // read (readResultsAt) and is retired by expireResultSnapshots when
+    // its last referencing snapshot expires, not here.
     val referenced = SnapshotStore.referencedFiles(fs, resultsPath)
     ((preList ++ moved) -- referenced).foreach { f =>
       val p = new org.apache.hadoop.fs.Path(f)
@@ -389,6 +386,7 @@ object Extract {
         System.err.println(s"[graft] WARN: could not sweep orphan $p; it is " +
           "invisible through the manifests and the next rewrite retries")
     }
+    id
   }
 
   /** Fail fast on a results dir in the bucket-partitioned layout an older
@@ -420,37 +418,30 @@ object Extract {
     * [[LineageTally]] observation — the same counter as its lineage.
     *
     * Lineage is maintained INCREMENTALLY and in the same pass as the write
-    * (the InkStream idea: derived state is kept consistent by the pass that
-    * changes the base table, not rebuilt by re-reading it):
-    *  - before the write, the driver itself reads the ≤32
-    *    `lineage_buckets` rows and the run log's (max `run_id`, null
-    *    `run_id`s) through parquet-hadoop ([[DriverParquet]]): no Spark job
-    *    and no second driver thread;
-    *  - the resume anti-join counts the existing results while it scans
-    *    their keys (an observation on the results side);
+    * (the InkStream idea: derived state is kept consistent against the
+    * version of the base table it was computed from):
+    *  - before the write, the driver reads the ≤32 `lineage_buckets` rows
+    *    and their stamp, the snapshot they describe and the run that wrote
+    *    them, through parquet-hadoop ([[DriverParquet]]): no Spark job;
     *  - the write's observation tallies the increment per conv_id-hash
     *    bucket and per write task partition ([[LineageTally]]);
-    *  - the driver merges the bucket tally into the old rows (sums add,
-    *    min/max combine — all associative) and writes both lineage tables
-    *    itself, one file each: `lineage_buckets` overwritten, the partition
-    *    lineage APPENDED under a fresh `run_id`.
+    *  - in this order: the data files, the snapshot commit that publishes
+    *    them (every table carries a manifest from its first append, even an
+    *    empty one), the run-log append under the next `run_id`, and last the
+    *    merged `lineage_buckets` (sums add, min/max combine), stamped with
+    *    the new snapshot — lineage's commit point.
     * So every Spark job of the call touches data: the resume anti-join's
     * scan of the results keys and the write (a heal adds its one scan).
     * `lineage.part_id` is therefore the task partition of the write that
     * produced the rows — the run that actually happened. A zero-row resume
-    * writes no lineage at all: its files stay byte-identical (spec-asserted
-    * in GoldenSpec).
+    * commits no snapshot and writes no lineage: its files stay
+    * byte-identical (spec-asserted in GoldenSpec).
     *
-    * Self-healing: the results append and the lineage writes are separate
-    * non-atomic steps, so a crash between them leaves lineage stale, which a
-    * later zero-row resume would never repair. After the write, from the
-    * numbers already in hand, the run heals (recomputes both tables from the
-    * full results) when the reparse marker exists (reparse keeps the key
-    * set, so the count invariant cannot see its half-patched lineage), when
-    * a lineage table is missing, when a `run_id` is null (a table from
-    * before run ids), when the bucket `rows_out` sum differs from the
-    * observed results count, or when an observation came back empty —
-    * unknown counts as stale, never as a wait.
+    * Staleness is one check: the stamp must name the snapshot the run
+    * started from, and the run's commit must land at the next id.
+    * Otherwise — a crash between the commit and the stamp, a missing or
+    * unstamped table, a concurrent commit, an unknown tally — the run
+    * heals, recomputing both tables from the committed results.
     */
   def runCheckpointed(spark: SparkSession, transcriptsPath: String,
                       outDir: String): Map[String, Any] = {
@@ -461,49 +452,35 @@ object Extract {
     val resultsPath = new org.apache.hadoop.fs.Path(s"$outDir/results")
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireFlat(fs, resultsPath)
-    def dataFiles(): Set[String] = listDataFiles(fs, resultsPath)
-    val existed = fs.exists(resultsPath)
-    val markerSet = fs.exists(lineageMarker(outDir))
-    val (oldBuckets, runLog) = lineageState(spark, fs, outDir)
-    val scanned = Observation("resumed_results")
+    val base = snapshotOf(fs, resultsPath)
+    val lineage = readLineage(fs, outDir)
     val remaining =
-      if (existed) resumeFrom(turns, readResults(spark, outDir)
-        .select("conv_id", "turn_idx").observe(scanned, count(lit(1)).as("rows")))
-      else turns
+      if (base.nonEmpty) resumeFrom(turns, readResults(spark, outDir)) else turns
     val obs = Observation("extract_tally")
     val df = extract(remaining).sortWithinPartitions("conv_id", "turn_idx")
       .observe(obs, tally)
-    val before = dataFiles()
-    // the live set per the manifest, when the table carries one: crash
-    // orphans may exist physically but must not enter the next snapshot
-    val liveBefore = SnapshotStore.liveFiles(fs, resultsPath)
+    val before = listDataFiles(fs, resultsPath)
+    // a write that crashed in its job commit leaves task outputs under
+    // `_temporary`, which this write's commit would publish a second time
+    fs.delete(new org.apache.hadoop.fs.Path(resultsPath, "_temporary"), true)
     df.write.mode("append").parquet(s"$outDir/results")
+    val newFiles = (listDataFiles(fs, resultsPath) -- before).toSeq.sorted
     val written = observedTally(obs)
-    val newFiles = (dataFiles() -- before).toSeq.sorted
-    // a manifest-carrying table folds the appended files into a new
-    // snapshot (manifest-less tables stay plain — the manifest appears
-    // lazily with the first maintenance op)
-    // append = an adds-only delta; routed through the optimistic rebase
-    // loop (round 6) so a concurrent maintenance commit re-bases this
-    // append instead of failing it (single-writer behavior identical)
-    liveBefore.foreach { _ =>
-      if (newFiles.nonEmpty)
-        SnapshotStore.commitRebase(fs, resultsPath, adds = newFiles,
-          removes = Seq.empty)
-    }
-    // (only lineage_buckets carries the rows_out == table-count invariant:
-    // the partition-lineage table is an append-only run log whose sums
-    // legitimately exceed the row count once reparseErrors has appended a
-    // re-parse batch)
-    val healNeeded = written.isEmpty || existed && lineageStale(markerSet,
-      oldBuckets, runLog, observed(scanned).map(_("rows").asInstanceOf[Long]))
-    if (healNeeded) {
-      healLineage(spark, fs, outDir)
-      fs.delete(lineageMarker(outDir), false) // cleared only after the heal
-    } else written.filter(_.buckets.nonEmpty).foreach { inc =>
-      writeLineage(spark, fs, outDir,
-        LineageTally.merge(oldBuckets.getOrElse(Seq.empty) ++ inc.buckets),
-        inc.parts, runLog.fold(0L)(_._1 + 1L))
+    // append = an adds-only delta through the optimistic rebase loop, so a
+    // concurrent maintenance commit re-bases this append instead of
+    // failing it. The first append commits even when it wrote no row; a
+    // later one that wrote none commits nothing and drops the empty file
+    // Spark leaves behind.
+    val committed =
+      if (base.nonEmpty && written.exists(_.buckets.isEmpty)) {
+        newFiles.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
+        None
+      } else Some(SnapshotStore.commitRebase(fs, resultsPath, adds = newFiles,
+        removes = Seq.empty))
+    written.filter(_ => lineage.describes(base, committed)) match {
+      case Some(inc) => committed.foreach(id => writeLineage(fs, outDir,
+        LineageTally.merge(lineage.buckets ++ inc.buckets), inc.parts, id, lineage.nextRun))
+      case None => healLineage(spark, fs, outDir, committed.orElse(base).get)
     }
     written.fold(Map.empty[String, Any])(metricsOf)
   }
@@ -513,36 +490,33 @@ object Extract {
     * rows errored through extraction and replace those rows in place by
     * key, in one pass over the table and one write, keeping lineage from
     * what the pass itself observed:
-    *  - the driver reads the lineage state as [[runCheckpointed]] reads it
-    *    (no Spark job, no second driver thread);
+    *  - the driver reads `lineage_buckets` and its stamp as
+    *    [[runCheckpointed]] reads them (no Spark job);
     *  - ONE scan, with no shuffle, collects the names of the part-files
     *    holding error rows (`input_file_name()`, made distinct per
-    *    partition); the same scan observes the table's row count and tallies
-    *    the error rows about to be replaced per conv_id-hash bucket
-    *    ([[LineageTally]]). No error file means nothing to do;
+    *    partition) and tallies the error rows about to be replaced per
+    *    conv_id-hash bucket ([[LineageTally]]). No error file means nothing
+    *    to do;
     *  - ONE write stages the replacement — the affected files' non-error
     *    rows plus the re-extracted error turns, whose tally rides the
     *    write's observation — straight into `results_reparse_tmp`;
     *  - the staged files move in and the swap commits (below); then the
-    *    driver patches `lineage_buckets` from the three tallies (per bucket
-    *    filtered/error/md sums become old − replaced + new; `rows_out` and
-    *    the conv_id range are invariant because the key set is unchanged)
-    *    and appends the pass to the partition lineage under a fresh
-    *    `run_id`, both lineage writes on the driver.
+    *    driver appends the pass to the partition lineage under the next
+    *    `run_id` and, last, writes `lineage_buckets` patched from the two
+    *    tallies (per bucket filtered/error/md sums become old − replaced +
+    *    new; `rows_out` and the conv_id range are invariant because the
+    *    key set is unchanged), stamped with the new snapshot.
     * `lineage.part_id` of a reparse run is therefore the task partition of
     * the write that re-extracted the rows. The returned metrics (`rows`,
     * `filtered_rows`, `error_rows`, `md_chars` of the re-extracted rows)
     * are sums over the bucket rows of that same write tally, plus
     * `rewrite_mode`.
     *
-    * Self-healing: the pass never takes a delta against lineage it cannot
-    * trust. On the conditions [[runCheckpointed]] heals on — the reparse
-    * marker, a missing lineage table, a null `run_id`, a bucket `rows_out`
-    * sum other than the observed row count, an observation that came back
-    * empty — or when a bucket's row count moved (an error key missing from,
-    * or duplicated in, the transcripts), it recomputes both lineage tables
-    * from the committed results instead of patching them; a table with no
-    * error rows is healed all the same.
+    * The pass patches only lineage whose stamp passes [[runCheckpointed]]'s
+    * staleness check; otherwise, or when a bucket's row count moved (an
+    * error key missing from, or duplicated in, the transcripts), it
+    * recomputes both lineage tables from the committed results. A table
+    * with no error rows is healed all the same when its stamp is stale.
     *
     * Scale note: the rewrite is FILE-granular — only the part-files that
     * contain error rows are retired and replaced; every other file survives
@@ -554,13 +528,11 @@ object Extract {
     * [[expireResultSnapshots]] retires them), so manifest-resolving readers
     * observe either the old or the new table, never a mix (COVERAGE.md
     * divergence #2 is thereby narrowed to concurrent-writer arbitration).
-    * The marker goes down before the commit and is cleared only once
-    * lineage is consistent again, so a crash in between forces the next
-    * run to heal. Replacement files accumulate per pass; compaction and
-    * expiry are separate concerns, as for Iceberg — [[compactResults]]
-    * also sweeps any orphans a crashed pass left. Assumes every error key
-    * still exists in the transcripts table (true here by construction:
-    * error rows originate from it; otherwise lineage heals).
+    * Replacement files accumulate per pass; compaction and expiry are
+    * separate concerns, as for Iceberg — [[compactResults]] also sweeps
+    * any orphans a crashed pass left. Assumes every error key still exists
+    * in the transcripts table (true here by construction: error rows
+    * originate from it; otherwise lineage heals).
     *
     * Driver-list guard: the error-file list is collected on the driver —
     * control-plane-sized at realistic error rates, but a SYSTEMIC payload
@@ -577,37 +549,22 @@ object Extract {
     val resultsPath = new org.apache.hadoop.fs.Path(s"$outDir/results")
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireFlat(fs, resultsPath)
-    val marker = lineageMarker(outDir)
-    val markerSet = fs.exists(marker)
-    val (oldBuckets, runLog) = lineageState(spark, fs, outDir)
+    val base = snapshotOf(fs, resultsPath)
+    val lineage = readLineage(fs, outDir)
     val results = readResults(spark, outDir)
     val isError = col("status") === "error"
-    val scanned = Observation("reparse_scanned")
     val replaced = Observation("reparse_replaced")
-    // the filter stays above the count's observation (Spark pushes no
-    // filter through one), so the count covers every row
     val errFiles = results.select("conv_id", "filtered", "status", "md")
-      .observe(scanned, count(lit(1)).as("rows"))
       .where(isError).observe(replaced, tally)
       .select(input_file_name()).as[String]
       .mapPartitions(_.toSet.iterator)
       .collect().map(SnapshotStore.qualify(fs, _)).toSet
-    val stale = lineageStale(markerSet, oldBuckets, runLog,
-      observed(scanned).map(_("rows").asInstanceOf[Long]))
-    def heal(): Unit = {
-      healLineage(spark, fs, outDir)
-      fs.delete(marker, false) // cleared only after the heal
-    }
     if (errFiles.isEmpty) {
-      if (stale) heal()
+      if (!lineage.describes(base, None)) healLineage(spark, fs, outDir, base.get)
       return Map("rows" -> 0L, "rewrite_mode" -> "none")
     }
 
-    // manifest bootstrap BEFORE any file moves: from here on, readers
-    // resolve through a committed snapshot, so nothing below is visible
-    // until the commit
-    val live = SnapshotStore.bootstrap(fs, resultsPath,
-      listDataFiles(fs, resultsPath).toSeq.sorted).toSet
+    val live = SnapshotStore.liveFiles(fs, resultsPath).getOrElse(Seq.empty).toSet
     val fullRewrite = errFiles.size * 2 > live.size
     if (fullRewrite)
       System.err.println(s"[graft] reparse: ${errFiles.size} of " +
@@ -617,7 +574,7 @@ object Extract {
     // (fallback): their error keys are re-extracted, the rest kept
     val affected =
       if (fullRewrite) results
-      else spark.read.schema(resultsSchema).parquet(errFiles.toSeq.sorted: _*)
+      else SnapshotStore.readFiles(spark, resultsPath, errFiles.toSeq.sorted, resultsSchema)
     val turnsErr = readTranscripts(spark, transcriptsPath).toDF()
       .join(affected.where(isError).select("conv_id", "turn_idx"),
         Seq("conv_id", "turn_idx"), "left_semi").as[Turn]
@@ -635,30 +592,24 @@ object Extract {
         .write.mode("overwrite").parquet(tmpDir)
 
       // tmp fully materialized: move replacements in (fresh UUID names),
-      // then COMMIT — the one atomic step. The marker goes down first so a
-      // crash after the commit but before the lineage patch forces a heal.
+      // then COMMIT — the one atomic step. Reparse = replace the
+      // error-holding files (or the whole live set in fallback) with the
+      // rewritten ones — an (adds, removes) delta, committed through the
+      // rebase loop. Replaced files are NOT deleted (retention contract):
+      // the pre-reparse snapshot still lists them, and
+      // expireResultSnapshots retires them with it.
       val moved = movePartsCollect(fs, tmpPath, resultsPath)
-      fs.create(marker, true).close()
-      // reparse = replace the error-holding files (or the whole live set
-      // in fallback) with the rewritten ones — an (adds, removes) delta,
-      // committed through the rebase loop. Replaced files are NOT deleted
-      // (retention contract): the pre-reparse snapshot still lists them,
-      // and expireResultSnapshots retires them with it.
-      SnapshotStore.commitRebase(fs, resultsPath, adds = moved,
+      val committed = SnapshotStore.commitRebase(fs, resultsPath, adds = moved,
         removes = (if (fullRewrite) live else errFiles).toSeq)
 
       val written = observedTally(obs)
-      val patch = for {
-        added <- written if !stale
+      val patched = for {
+        added <- written if lineage.describes(base, Some(committed))
         r <- observedTally(replaced)
-        buckets <- patchBuckets(oldBuckets.get, r.buckets, added.buckets)
-      } yield (buckets, added.parts)
-      patch match {
-        case Some((buckets, parts)) =>
-          writeLineage(spark, fs, outDir, buckets, parts, runLog.get._1 + 1L)
-          fs.delete(marker, false) // lineage consistent again
-        case None => heal()
-      }
+        buckets <- patchBuckets(lineage.buckets, r.buckets, added.buckets)
+      } yield writeLineage(fs, outDir, buckets, added.parts, committed,
+        lineage.nextRun)
+      if (patched.isEmpty) healLineage(spark, fs, outDir, committed)
       written.fold(Map.empty[String, Any])(metricsOf) + ("rewrite_mode" ->
         (if (fullRewrite) "full" else "file_granular"))
     } finally fs.delete(tmpPath, true)
@@ -668,22 +619,27 @@ object Extract {
     * through appends and re-parse passes — the plain-parquet analog of
     * Iceberg's rewrite_data_files. Row content is preserved exactly and
     * re-sorted to the (conv_id, turn_idx) run order (O1) within each of at
-    * most `flatFiles` files (a coalesce, no shuffle); lineage is untouched —
-    * the row set does not change, so the bucket invariant keeps holding
-    * (spec-asserted).
+    * most `flatFiles` files (a coalesce, no shuffle). The row set does not
+    * change, so lineage that described the pre-compaction snapshot
+    * describes the new one: its unchanged rows are re-stamped with the new
+    * snapshot id (no run-log append), and a later append still takes the
+    * delta path. Lineage that was already stale keeps its stale stamp, for
+    * the next writer to heal.
     *
-    * Commits through the [[SnapshotStore]] manifest (round 5): the rewrite
-    * is staged, moved in under fresh names, published by one manifest
-    * rename; orphans earlier crashed maintenance passes left are swept
-    * after the commit, while the replaced files survive to back the
-    * pre-compaction snapshot until [[expireResultSnapshots]] (round 7).
-    * No step deletes live or snapshot-referenced data.
+    * Commits through the [[SnapshotStore]] manifest: the rewrite is staged,
+    * moved in under fresh names, published by one manifest rename; orphans
+    * earlier crashed passes left are swept after the commit, while the
+    * replaced files survive to back the pre-compaction snapshot until
+    * [[expireResultSnapshots]]. No step deletes live or snapshot-referenced
+    * data.
     */
   def compactResults(spark: SparkSession, outDir: String,
                      flatFiles: Int = 32): Unit = {
     val resultsPath = new org.apache.hadoop.fs.Path(s"$outDir/results")
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireFlat(fs, resultsPath)
+    val base = snapshotOf(fs, resultsPath)
+    val lineage = readLineage(fs, outDir)
     val tmpDir = s"$outDir/results_compact_tmp"
     val tmpPath = new org.apache.hadoop.fs.Path(tmpDir)
     try {
@@ -691,7 +647,10 @@ object Extract {
       readResults(spark, outDir).coalesce(flatFiles)
         .sortWithinPartitions("conv_id", "turn_idx")
         .write.mode("overwrite").parquet(tmpDir)
-      commitRewrite(fs, tmpPath, resultsPath)
+      val committed = commitRewrite(fs, tmpPath, resultsPath)
+      lineage.stamp.filter(_ => lineage.describes(base, Some(committed))).foreach {
+        case (_, run) => writeBuckets(fs, outDir, lineage.buckets, committed, run)
+      }
     } finally fs.delete(tmpPath, true)
   }
 
@@ -707,6 +666,7 @@ object Extract {
     val resultsPath = new org.apache.hadoop.fs.Path(s"$outDir/results")
     val fs = resultsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireFlat(fs, resultsPath)
+    snapshotOf(fs, resultsPath) // a legacy table gets its manifest first
     val results = readResults(spark, outDir)
     val degraded = results.select(
       col("conv_id"), col("turn_idx"), col("role"), col("tool"),
@@ -726,12 +686,12 @@ object Extract {
     val nInjected = results.where(pred).count()
     val tmpDir = s"$outDir/results_inject_tmp"
     val tmpPath = new org.apache.hadoop.fs.Path(tmpDir)
-    try {
+    val committed = try {
       fs.delete(tmpPath, true)
       degraded.write.mode("overwrite").parquet(tmpDir)
       commitRewrite(fs, tmpPath, resultsPath)
     } finally fs.delete(tmpPath, true)
-    healLineage(spark, fs, outDir)
+    healLineage(spark, fs, outDir, committed)
     nInjected
   }
 
@@ -739,7 +699,7 @@ object Extract {
     * filtered/error counts, md volume, conv_id range. The writers keep it
     * through [[LineageTally]], which counts exactly what this function
     * does; it remains the reference the specs compare against and the
-    * source of the `lineage_buckets` schema. Physical-partition lineage
+    * schema `lineage_buckets` restates. Physical-partition lineage
     * (the `lineage` run log, also written) reflects the run that happened
     * — useful operationally but unstable across re-runs and cluster sizes;
     * bucket lineage is the AUDITABLE surface: identical for any execution

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Poor-man's snapshot manifests for a results table — the plain-parquet
@@ -11,23 +12,26 @@ import org.apache.spark.sql.types.StructType
   * narrowed by this to concurrent-writer arbitration only).
   *
   * Protocol:
-  *  - A table MAY carry a manifest dir `results/_manifests` holding
-  *    `snap-<id>.txt` files, each listing the table's live part-files
-  *    (paths relative to the results dir, sorted). The leading underscore
-  *    keeps the dir invisible to Spark/Hive file listings, so a table AT
-  *    REST stays readable by any plain parquet reader.
+  *  - Every table this build writes carries a manifest dir
+  *    `results/_manifests` from its first append: `snap-<id>.txt` files,
+  *    each listing the table's live part-files (paths relative to the
+  *    results dir, sorted). The leading underscore keeps the dir
+  *    invisible to Spark/Hive file listings.
   *  - The CURRENT snapshot is the highest id. Committing = write
   *    `snap-<id+1>.txt.tmp`, then ONE `rename` to `snap-<id+1>.txt` — the
   *    rename is the commit point (atomic on HDFS and on local FS; on S3 an
   *    Iceberg-style catalog swap would replace it, which is exactly the
   *    part Iceberg provides and this stand-in declares away).
-  *  - Writers NEVER delete before committing: replacement files are moved
-  *    in under fresh UUID names, the new snapshot is committed, and only
-  *    then are retired files deleted (best-effort — a crash or failed
-  *    delete leaves ORPHANS, which manifest-resolving readers never see
-  *    and which the next [[Extract.compactResults]] sweeps).
-  *  - Readers resolve through [[read]]: manifest present → exactly the
-  *    listed files; absent → plain directory read. A reader therefore
+  *  - Writers NEVER delete before committing: new files are moved in
+  *    under fresh UUID names and published by the commit. Files a commit
+  *    retires stay on disk while any retained snapshot lists them (they
+  *    back [[readAt]]); [[expireSnapshots]] deletes them with the last
+  *    snapshot that lists them. Files no snapshot lists — ORPHANS of a
+  *    crashed writer — are invisible to readers and swept by the next
+  *    [[Extract.compactResults]].
+  *  - Readers resolve through [[read]]: the files of the current snapshot.
+  *    A table from an older build without a manifest reads as a plain
+  *    directory until a writer [[bootstrap]]s one. A reader therefore
   *    observes either the pre-commit or the post-commit table, never a
   *    half-swapped one (spec-asserted in SnapshotSpec).
   */
@@ -268,40 +272,30 @@ object SnapshotStore {
     dropped.map(_._1).toSeq
   }
 
-  /** Ensure the table carries a manifest: when absent, commit snapshot 0 =
-    * the current physical file set. Maintenance ops call this BEFORE moving
-    * replacement files into the dir, so a crash mid-operation can never
-    * leave readers falling back to a half-populated plain directory.
-    * Returns the live file set.
+  /** The current snapshot id, after committing snapshot 0 = the physical
+    * `files` when the table has no manifest yet (a table an older build
+    * wrote). Writers call this before they touch the table, so a crash
+    * mid-operation can never leave readers on a half-populated plain dir.
     */
-  def bootstrap(fs: FileSystem, results: Path,
-                physicalFiles: => Seq[String]): Seq[String] =
-    liveFiles(fs, results).getOrElse {
-      val files = physicalFiles
-      commit(fs, results, files)
-      files
-    }
+  def bootstrap(fs: FileSystem, results: Path, files: => Seq[String]): Long =
+    currentSnapshot(fs, results).fold(commit(fs, results, files))(_._1)
 
-  /** Read a results table through its manifest when present, else as a
-    * plain parquet dir, with the caller's fixed `schema` (no inference
-    * job).
+  /** Read a results table with the caller's fixed `schema` (no inference
+    * job): the files of its current snapshot, or the plain dir for a table
+    * without a manifest.
     */
   def read(spark: SparkSession, resultsDir: String, schema: StructType): DataFrame = {
     val p = new Path(resultsDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     liveFiles(fs, p) match {
-      case Some(files) if files.nonEmpty =>
-        spark.read.schema(schema).parquet(files: _*)
-      case Some(_) =>
-        throw new IllegalStateException(s"snapshot of $resultsDir lists no files")
+      case Some(files) => readFiles(spark, p, files, schema)
       case None => spark.read.schema(schema).parquet(resultsDir)
     }
   }
 
   /** Time-travel read: the table as of snapshot `id` (Iceberg's
     * VERSION AS OF). Fails if the snapshot does not exist or if any of its
-    * files has since been retired by a compaction sweep (the analog of
-    * reading an expired snapshot).
+    * files has since been retired by [[expireSnapshots]].
     */
   def readAt(spark: SparkSession, resultsDir: String, id: Long,
              schema: StructType): DataFrame = {
@@ -310,11 +304,23 @@ object SnapshotStore {
     val manifest = snapshots(fs, p).collectFirst { case (`id`, m) => m }
       .getOrElse(throw new IllegalArgumentException(
         s"no snapshot $id under $resultsDir"))
-    val files = filesOf(fs, p, manifest)
-    files.find(f => !fs.exists(new Path(f))).foreach { missing =>
-      throw new IllegalStateException(
-        s"snapshot $id references retired file $missing (expired by compaction)")
+    readFiles(spark, p, filesOf(fs, p, manifest), schema)
+  }
+
+  /** The rows of `files` (qualified, under `results`): a read of the
+    * results dir pruned to them by `_metadata.file_path`. Spark lists the
+    * one dir on the driver at any file count, where more than 32 explicit
+    * paths would start its parallel-listing job. A listed file missing
+    * from the dir fails the read instead of dropping its rows.
+    */
+  private[pipeline] def readFiles(spark: SparkSession, results: Path,
+                                  files: Seq[String], schema: StructType): DataFrame = {
+    val fs = results.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val present = fs.listStatus(results).iterator.map(s => qualify(fs, s.getPath.toString)).toSet
+    files.find(f => !present(f)).foreach { f =>
+      throw new IllegalStateException(s"$results: listed file $f is missing")
     }
-    spark.read.schema(schema).parquet(files: _*)
+    spark.read.schema(schema).parquet(results.toString)
+      .where(col("_metadata.file_path").isin(files.map(new Path(_).toUri.toString): _*))
   }
 }

@@ -5,24 +5,27 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, conv, lit, md5, pmod, substring, sum => fsum, xxhash64}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Extract, Turn}
+import graft.pipeline.{Extract, SnapshotStore, Turn}
 
 /** The one-pass checkpointed append and reparse: lineage is tallied inside
   * the results write (and, for a reparse, the scan that finds the error
-  * files) and the heal check reads numbers the run already holds. Pins the
-  * Spark job budget per call, the tally's equivalence with a full
-  * `bucketLineage` recompute (including UTF-8 string order and code-point
-  * md counts), that resumes whose observed subtree AQE may prune finish
-  * without waiting and heal only a broken invariant, and that a reparse
-  * heals lineage it cannot patch. Lineage is read and written on the
-  * driver: its files must read, footers included, as the Spark-written
-  * ones of earlier builds, beside which a run log keeps growing.
+  * files), and `lineage_buckets` is stamped with the results snapshot it
+  * describes. Pins the Spark job budget per call (also on a table of more
+  * than 32 files), the tally's equivalence with a full `bucketLineage`
+  * recompute (including UTF-8 string order and code-point md counts), that
+  * resumes whose observed subtree AQE may prune finish without waiting and
+  * never heal an intact lineage, that a reparse heals lineage it cannot
+  * patch, and that a crash at any driver file-system call of a resumed
+  * append or a reparse recovers on re-run. Lineage is read and written on
+  * the driver: its files must read, footers included, as the Spark-written
+  * ones of earlier builds, which the first run of this build heals once.
   */
 class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -38,6 +41,7 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
     counted = new JobCounter(spark)
   }
 
@@ -67,7 +71,7 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.sorted
 
   /** (path, size, mtime) of every file under `out`: results, manifests,
-    * both lineage tables, the marker and any staging dir.
+    * both lineage tables and any staging dir.
     */
   private def tree(out: String): Seq[(String, Long, Long)] = {
     val root = java.nio.file.Paths.get(out)
@@ -85,9 +89,6 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def recomputed(out: String): Seq[Row] =
     Extract.bucketLineage(Extract.readResults(spark, out))
       .orderBy("bucket").collect().toSeq
-
-  private def markerLeft(out: String): Boolean =
-    new java.io.File(s"$out/_lineage_patch_pending").exists()
 
   private def errorRows(out: String): Long =
     Extract.readResults(spark, out).where(col("status") === "error").count()
@@ -193,15 +194,15 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  // the run log is append-only, so a Spark-written file can sit beside the
+  // driver's appends; the stamped `lineage_buckets` keeps the delta path
   test("a run log mixing Spark-written and driver-written files reads as one table") {
     val base = tmp("graft-ckpt-mixed")
     val (halfDir, halfRows) = firstHalf(base)
     val out = s"$base/out"
     assert(rowsOf(run(halfDir, out)) === halfRows)
-    // both tables as an earlier build's Spark writer left them
-    for (dir <- Seq("lineage_buckets", "lineage"))
-      sparkWritten(s"$out/$dir", spark.read.parquet(s"$out/$dir").collect().toSeq,
-        legacySchema(out, dir))
+    sparkWritten(s"$out/lineage", spark.read.parquet(s"$out/lineage").collect().toSeq,
+      legacySchema(out, "lineage"))
     val lineage = lineageFiles(out)
     assert(rowsOf(run("data/transcripts_t1", out)) === 1163L - halfRows)
     // the resume appended one file beside the Spark-written one and healed
@@ -211,6 +212,36 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
       .subsetOf(runLog.toSet))
     assert(perRun(out) === Map(0L -> halfRows, 1L -> (1163L - halfRows)))
     assert(buckets(out) === recomputed(out))
+  }
+
+  /** `out` as an earlier build left it: both lineage tables written by
+    * Spark (no stamp) and a results table without a manifest.
+    */
+  private def legacy(out: String): Unit = {
+    for (dir <- Seq("lineage_buckets", "lineage"))
+      sparkWritten(s"$out/$dir", spark.read.parquet(s"$out/$dir").collect().toSeq,
+        legacySchema(out, dir))
+    val manifests = new Path(s"$out/results/_manifests")
+    manifests.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(manifests, true)
+  }
+
+  test("a legacy table with Spark-written lineage heals once, then takes the delta path") {
+    val base = tmp("graft-ckpt-legacy")
+    val (halfDir, halfRows) = firstHalf(base)
+    val out = s"$base/out"
+    assert(rowsOf(run(halfDir, out)) === halfRows)
+    legacy(out)
+    // the first run bootstraps the manifest and heals: one run 0
+    assert(rowsOf(run(halfDir, out)) === 0L)
+    assert(perRun(out) === Map(0L -> halfRows))
+    assert(buckets(out) === recomputed(out))
+    // the next run appends run 1 beside it
+    assert(rowsOf(run("data/transcripts_t1", out)) === 1163L - halfRows)
+    assert(perRun(out) === Map(0L -> halfRows, 1L -> (1163L - halfRows)))
+    assert(buckets(out) === recomputed(out))
+    val lineage = lineageFiles(out)
+    assert(rowsOf(run("data/transcripts_t1", out)) === 0L)
+    assert(lineageFiles(out) === lineage, "zero-row resume touched lineage files")
   }
 
   /** Conversations whose ids sort one way in UTF-16 (Java's String order)
@@ -281,20 +312,18 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     val clean = buckets(out)
     for (broadcast <- Seq(true, false)) {
       // without broadcast the anti-join is shuffled on both sides, and once
-      // the transcript side comes back empty AQE drops the results side
-      // with its observed count: the run cannot check the invariant and
-      // heals (safe). Everywhere else an intact lineage is left untouched.
+      // the transcript side comes back empty AQE drops the results side;
+      // the staleness check reads no observation of it, so an intact
+      // lineage is left untouched either way
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
         if (broadcast) "10485760" else "-1")
       try {
         for (transcripts <- Seq(empty, "data/transcripts_t1")) {
-          val countPruned = !broadcast && transcripts == empty
           val lineage = lineageFiles(out)
           assert(rowsOf(run(transcripts, out)) === 0L)
-          if (countPruned) assert(buckets(out) === clean)
-          else assert(lineageFiles(out) === lineage,
+          assert(lineageFiles(out) === lineage,
             s"healed an intact lineage (broadcast=$broadcast, $transcripts)")
-          // break the invariant: drop bucket 0's row
+          // break the lineage: drop bucket 0's row (Spark writes no stamp)
           val stale = spark.read.parquet(s"$out/lineage_buckets")
             .where(col("bucket") =!= 0).collect().toSeq
           spark.createDataFrame(stale.asJava,
@@ -345,7 +374,6 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rowsOf(reparse("data/transcripts_t1", out)) > 0L)
       assert(errorRows(out) === 0L)
       assert(buckets(out) === recomputed(out))
-      assert(!markerLeft(out), "reparse left its marker behind")
     }
 
   // file-granular: one conversation of t1 and every unicode conversation
@@ -379,6 +407,102 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
       // patched, not healed: the pass is one more run holding its rows
       assert(perRun(out) === Map(0L -> total, 1L -> errors))
       assert(rows() === clean)
-      assert(!markerLeft(out))
+    }
+
+  // more than 32 explicit paths would start Spark's parallel-listing job;
+  // a manifest read lists the results dir instead, at any file count
+  test("a 40-file table resumes and counts with the jobs of a directory read") {
+    val base = tmp("graft-ckpt-40")
+    val split = s"$base/split"
+    Extract.readTranscripts(spark, "data/transcripts_t1").toDF()
+      .repartition(40).write.parquet(split)
+    val out = s"$base/out"
+    // an open cost above the split size keeps each transcripts file in a
+    // partition of its own, so the append writes one results file per file
+    spark.conf.set("spark.sql.files.openCostInBytes", 256L << 20)
+    try assert(rowsOf(run(split, out)) === 1163L)
+    finally spark.conf.unset("spark.sql.files.openCostInBytes")
+    val results = new Path(s"$out/results")
+    val fs = results.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(SnapshotStore.liveFiles(fs, results).get.size === 40)
+    val (m, resume) = counted(run(split, out))
+    assert(rowsOf(m) === 0L)
+    val (n, count) = counted(Extract.readResults(spark, out).count())
+    assert(n === 1163L)
+    info(s"jobs over 40 files: zero-row resume $resume, count $count")
+    assert(resume <= 2, s"zero-row resume ran $resume jobs")
+    assert(count <= 2, s"count ran $count jobs")
+  }
+
+  test("an empty first append leaves a readable table and the next append takes the delta path") {
+    val base = tmp("graft-ckpt-empty")
+    val empty = s"$base/empty"
+    Extract.readTranscripts(spark, "data/transcripts_t1").toDF().limit(0)
+      .write.parquet(empty)
+    val out = s"$base/out"
+    assert(rowsOf(run(empty, out)) === 0L)
+    assert(Extract.readResults(spark, out).count() === 0L)
+    val (halfDir, halfRows) = firstHalf(base)
+    assert(rowsOf(run(halfDir, out)) === halfRows)
+    // run 1 after the empty run 0; a heal would have written one run 0
+    assert(perRun(out) === Map(1L -> halfRows))
+    assert(buckets(out) === recomputed(out))
+    val results = new Path(s"$out/results")
+    val fs = results.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val snapshots = SnapshotStore.snapshots(fs, results)
+    val lineage = lineageFiles(out)
+    assert(rowsOf(run(halfDir, out)) === 0L)
+    assert(SnapshotStore.snapshots(fs, results) === snapshots, "zero-row resume committed")
+    assert(lineageFiles(out) === lineage, "zero-row resume touched lineage files")
+  }
+
+  /** Rows of the live results, in key order. */
+  private def resultRows(out: String): Seq[Row] =
+    Extract.readResults(spark, out).orderBy("conv_id", "turn_idx").collect().toSeq
+
+  // every create, rename, delete and mkdirs the driver makes is a crash
+  // point. After the crash the same entry point, run again, must leave the
+  // clean run's results and exact lineage; the run log is the clean run's
+  // or a heal's (one run 0 holding every row).
+  for (op <- Seq("resumed append", "reparse"))
+    test(s"a $op that crashes at any driver file-system call recovers on re-run") {
+      val base = tmp("graft-ckpt-crash")
+      val (halfDir, _) = firstHalf(base)
+      def call(out: String): Map[String, Any] =
+        if (op == "reparse") Extract.reparseErrors(spark, "data/transcripts_t1", out)
+        else Extract.runCheckpointed(spark, "data/transcripts_t1", out)
+      // the table the call starts from, copied for every crash point
+      val start = s"crashfs://$base/start"
+      if (op == "reparse") {
+        run("data/transcripts_t1", start)
+        Extract.injectTransientErrors(spark, start, col("conv_id") === "t1-conv-00007")
+      } else run(halfDir, start)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = new Path(start).getFileSystem(conf)
+      def copy(name: String): String = {
+        assert(FileUtil.copy(fs, new Path(start), fs, new Path(s"crashfs://$base/$name"), false, conf))
+        s"crashfs://$base/$name"
+      }
+      val clean = copy("clean")
+      CrashFs.arm(CrashFs.NthCall(Int.MaxValue))
+      try call(clean) finally CrashFs.armed = false
+      val points = CrashFs.calls
+      info(s"${points.size} crash points: " +
+        points.groupBy(_.takeWhile(_ != ' ')).view.mapValues(_.size).toSeq.sorted.mkString(", "))
+      val cleanRows = resultRows(clean)
+      val runLogs = Set(perRun(clean), Map(0L -> 1163L))
+      for (n <- 1 to points.size) {
+        val out = copy(s"crash$n")
+        spark.sparkContext.setLogLevel("OFF")
+        CrashFs.arm(CrashFs.NthCall(n))
+        try intercept[Exception](call(out))
+        finally { CrashFs.armed = false; spark.sparkContext.setLogLevel("ERROR") }
+        call(out)
+        val at = s"crash before ${points(n - 1)}"
+        val sameRows = resultRows(out) == cleanRows
+        assert(sameRows, s"$at: results differ from the clean run's")
+        assert(buckets(out) === recomputed(out), at)
+        assert(runLogs.contains(perRun(out)), s"$at: run log ${perRun(out)}")
+      }
     }
 }

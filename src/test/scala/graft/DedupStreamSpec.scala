@@ -1,11 +1,5 @@
 package graft
 
-import java.io.IOException
-import java.net.URI
-
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.{CachedPlans, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
@@ -13,52 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.DocOps
 import graft.streaming.DedupStream
-
-/** `crashfs:` — the local file system, except that while [[CrashFs.armed]]
-  * it fails at one crash point:
-  *  - [[CrashFs.BetweenWrites]]: the set-up of the SECOND output directory
-  *    a write commits into — a process that dies between the two state
-  *    writes of a batch;
-  *  - [[CrashFs.InLabelsWrite]]: the first part-file create of a labels
-  *    write — a process that dies during the labels write.
-  */
-class CrashFs extends RawLocalFileSystem {
-  override def getUri: URI = URI.create("crashfs:///")
-  override def getScheme: String = "crashfs"
-  override def mkdirs(f: Path): Boolean = { CrashFs.onMkdirs(f); super.mkdirs(f) }
-  override def mkdirs(f: Path, p: FsPermission): Boolean = { CrashFs.onMkdirs(f); super.mkdirs(f, p) }
-  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
-                      blockSize: Long, progress: Progressable): FSDataOutputStream = {
-    CrashFs.onCreate(f)
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-  }
-}
-
-object CrashFs {
-  sealed trait Point
-  case object BetweenWrites extends Point
-  case object InLabelsWrite extends Point
-
-  @volatile var armed = false
-  @volatile private var point: Point = BetweenWrites
-  private val outputs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  // the output directory of a write: the parent of its FIRST `_temporary`
-  private val Staging = "(?:.*?/)?([^/]+)/_temporary(?:/.*)?".r
-
-  def arm(at: Point): Unit = { outputs.clear(); point = at; armed = true }
-
-  private def onMkdirs(f: Path): Unit = f.toUri.getPath match {
-    case Staging(out) if armed && point == BetweenWrites =>
-      outputs.add(out)
-      if (outputs.size > 1) throw new IOException(s"injected crash before writing $out")
-    case _ =>
-  }
-
-  private def onCreate(f: Path): Unit =
-    if (armed && point == InLabelsWrite && f.getName.startsWith("part-") &&
-        f.toUri.getPath.contains("labels_v"))
-      throw new IOException(s"injected crash creating $f")
-}
 
 /** Per-batch cost and crash safety of [[DedupStream.processBatch]]: the
   * Spark job budget of a bootstrap and of an appended batch, and that a

@@ -9,12 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.{Extract, SnapshotStore}
 
 /** Snapshot-manifest commit protocol (the plain-parquet stand-in for
-  * Iceberg's atomic snapshot, COVERAGE.md divergence #2): maintenance ops
-  * publish file swaps via ONE manifest rename; readers resolving through
-  * the manifest observe either the pre- or post-commit table, never a
-  * half-swapped one. Also covers the round-5 crash-recovery guards: the
-  * lineage-patch marker, pre-run_id lineage heal, the smeared-error
-  * fallback, and orphan sweeping.
+  * Iceberg's atomic snapshot, COVERAGE.md divergence #2): every writer
+  * publishes its file set via ONE manifest rename; readers resolving
+  * through the manifest observe either the pre- or post-commit table, never
+  * a half-swapped one. Also covers the lineage stamp (lineage one snapshot
+  * behind heals, a legacy table heals once), the smeared-error fallback,
+  * and orphan sweeping.
   */
 class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -63,11 +63,12 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
     val clean = rows(out)
     assert(clean.size === 1163)
 
-    // first maintenance op creates the manifest (bootstrap + commit)
-    Extract.compactResults(spark, out)
+    // the first append committed the manifest; compaction commits the next
     val resultsPath = new Path(s"$out/results")
     val fs = fsOf(out)
-    assert(SnapshotStore.currentSnapshot(fs, resultsPath).nonEmpty)
+    assert(SnapshotStore.currentSnapshot(fs, resultsPath).map(_._1) === Some(0L))
+    Extract.compactResults(spark, out)
+    assert(SnapshotStore.currentSnapshot(fs, resultsPath).map(_._1) === Some(1L))
     assert(rows(out) === clean)
 
     // simulate the mid-maintenance window: a replacement file has been
@@ -103,7 +104,7 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("reparse on a manifest-carrying table restores the clean state") {
     val out = freshTable("graft-snap-reparse", files = 8)
     val clean = rows(out)
-    Extract.compactResults(spark, out) // table now carries a manifest
+    Extract.compactResults(spark, out) // one file, snapshot 1
     val fs = fsOf(out)
     assert(SnapshotStore.currentSnapshot(fs, new Path(s"$out/results")).nonEmpty)
 
@@ -122,56 +123,77 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
         .orderBy("bucket").collect().toSeq)
   }
 
-  test("crash between results swap and lineage patch forces a heal (marker)") {
-    val out = freshTable("graft-snap-marker")
-    val cleanBuckets = spark.read.parquet(s"$out/lineage_buckets")
-      .orderBy("bucket").collect().toSeq
+  private def bucketRows(out: String) =
+    spark.read.parquet(s"$out/lineage_buckets").orderBy("bucket").collect().toSeq
 
-    // simulate the window reparseErrors protects with the marker: results
-    // swapped, lineage patch NOT done. The key set is unchanged, so the
-    // rows_out invariant holds and CANNOT catch this — corrupt md_chars
-    // (a stale content sum) and drop the marker file as reparse would.
-    val stale = spark.read.parquet(s"$out/lineage_buckets")
-      .withColumn("md_chars", col("md_chars") + lit(12345L))
-      .localCheckpoint(true)
-    stale.write.mode("overwrite").parquet(s"$out/lineage_buckets")
+  test("lineage stamped one snapshot behind the results forces a heal") {
+    val out = freshTable("graft-snap-stamp")
+    val cleanBuckets = bucketRows(out)
+    // the window between a reparse's commit and its lineage write: results
+    // swapped, lineage_buckets still the pre-reparse table. The key set is
+    // unchanged, so rows_out agrees with the results and cannot catch it;
+    // the stamp, one snapshot behind, does.
+    Extract.injectTransientErrors(spark, out, col("conv_id") === "t1-conv-00003")
     val fs = fsOf(out)
-    val marker = new Path(s"$out/_lineage_patch_pending")
-    fs.create(marker, true).close()
+    val buckets = new Path(s"$out/lineage_buckets")
+    val saved = new Path(s"$out/lineage_buckets_pre_reparse")
+    org.apache.hadoop.fs.FileUtil.copy(fs, buckets, fs, saved, false,
+      spark.sparkContext.hadoopConfiguration)
+    Extract.reparseErrors(spark, "data/transcripts_t1", out)
+    assert(bucketRows(out) === cleanBuckets)
+    fs.delete(buckets, true)
+    assert(fs.rename(saved, buckets))
+    assert(bucketRows(out) !== cleanBuckets, "pre-reparse lineage (precondition)")
 
-    // a zero-row resume must heal BECAUSE of the marker (invariant holds)
+    // a zero-row resume must heal it back to the clean lineage
     val m = Extract.runCheckpointed(spark, "data/transcripts_t1", out)
     assert(m("rows").asInstanceOf[Long] === 0L)
-    assert(!fs.exists(marker), "marker not cleared after heal")
-    assert(spark.read.parquet(s"$out/lineage_buckets")
-      .orderBy("bucket").collect().toSeq === cleanBuckets)
+    assert(bucketRows(out) === cleanBuckets)
   }
 
   test("pre-run_id lineage tables are healed on resume") {
-    val out = freshTable("graft-snap-runid")
-    // rewrite the partition-lineage table WITHOUT run_id (the pre-round-4
-    // layout); the bucket invariant still holds
-    val old = spark.read.parquet(s"$out/lineage").drop("run_id")
-      .localCheckpoint(true)
-    old.write.mode("overwrite").parquet(s"$out/lineage")
+    val base = java.nio.file.Files.createTempDirectory("graft-snap-runid")
+    val half = s"$base/first_half"
+    Extract.readTranscripts(spark, "data/transcripts_t1").toDF()
+      .where(col("conv_id") < "t1-conv-00060").write.parquet(half)
+    val out = s"$base/out"
+    Extract.runCheckpointed(spark, half, out)
+    // as an older build left it: both lineage tables written by Spark, the
+    // run log WITHOUT run_id (the pre-round-4 layout), and no manifest
+    spark.read.parquet(s"$out/lineage").drop("run_id").localCheckpoint(true)
+      .write.mode("overwrite").parquet(s"$out/lineage")
+    spark.read.parquet(s"$out/lineage_buckets").localCheckpoint(true)
+      .write.mode("overwrite").parquet(s"$out/lineage_buckets")
+    val fs = fsOf(out)
+    val resultsPath = new Path(s"$out/results")
+    fs.delete(SnapshotStore.manifestDir(resultsPath), true)
+    def perRun(): Map[Long, Long] = spark.read.parquet(s"$out/lineage")
+      .groupBy("run_id").agg(org.apache.spark.sql.functions.sum("rows_out"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+    // the first run bootstraps the manifest and heals once: one run 0
     val m = Extract.runCheckpointed(spark, "data/transcripts_t1", out)
-    assert(m("rows").asInstanceOf[Long] === 0L)
-    val lin = spark.read.parquet(s"$out/lineage")
-    assert(lin.columns.contains("run_id"))
-    assert(lin.agg(org.apache.spark.sql.functions.sum("rows_out"))
-      .collect()(0).getLong(0) === 1163L)
-    // and reparse heals it too (instead of throwing on max(run_id))
-    old.write.mode("overwrite").parquet(s"$out/lineage")
-    Extract.injectTransientErrors(spark, out,
-      col("conv_id") === "t1-conv-00003")
-    val mr = Extract.reparseErrors(spark, "data/transcripts_t1", out)
-    assert(mr("rows").asInstanceOf[Long] > 0L)
-    assert(spark.read.parquet(s"$out/lineage").columns.contains("run_id"))
+    val rest = m("rows").asInstanceOf[Long]
+    assert(rest > 0L && rest < 1163L)
+    assert(SnapshotStore.snapshots(fs, resultsPath).map(_._1) === Seq(0L, 1L))
+    assert(perRun() === Map(0L -> 1163L))
+    // the next run takes the delta path: a reparse patches as run 1
+    val n = Extract.injectTransientErrors(spark, out, col("conv_id") === "t1-conv-00003")
+    assert(perRun() === Map(0L -> 1163L))
+    assert(Extract.reparseErrors(spark, "data/transcripts_t1", out)("rows") === n)
+    assert(perRun() === Map(0L -> 1163L, 1L -> n))
+    assert(bucketRows(out) === Extract.bucketLineage(Extract.readResults(spark, out))
+      .orderBy("bucket").collect().toSeq)
+    // and a zero-row resume leaves both lineage tables untouched
+    def lineageFiles() = Seq("lineage", "lineage_buckets").flatMap(d =>
+      fs.listStatus(new Path(s"$out/$d")).map(s => (s.getPath.getName, s.getModificationTime)))
+    val before = lineageFiles()
+    assert(Extract.runCheckpointed(spark, "data/transcripts_t1", out)("rows") === 0L)
+    assert(lineageFiles() === before)
   }
 
   test("a racing commit to the same snapshot id is detected, not clobbered") {
     val out = freshTable("graft-snap-race")
-    Extract.compactResults(spark, out) // manifest exists
     val fs = fsOf(out)
     val resultsPath = new Path(s"$out/results")
     val (curId, _) = SnapshotStore.currentSnapshot(fs, resultsPath).get
@@ -200,9 +222,9 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(halfRows > 0 && halfRows < 1163)
     val pre = Extract.readResults(spark, out)
       .orderBy("conv_id", "turn_idx").collect().toSeq
-    // compaction creates the manifest: snap 0 = bootstrap (pre-compaction
-    // files), snap 1 = the compacted set; snap 0's files SURVIVE the
-    // rewrite (round 7 retention contract) so snap 0 stays readable
+    // snap 0 = the first append's files, snap 1 = the compacted set; snap
+    // 0's files SURVIVE the rewrite (retention contract) so snap 0 stays
+    // readable
     Extract.compactResults(spark, out)
     assert(Extract.readResultsAt(spark, out, 0L)
       .orderBy("conv_id", "turn_idx").collect().toSeq === pre,
@@ -231,7 +253,7 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = freshTable("graft-snap-expire")
     val fs = fsOf(out)
     val resultsPath = new Path(s"$out/results")
-    Extract.compactResults(spark, out) // snaps 0 (bootstrap) + 1 (compacted)
+    Extract.compactResults(spark, out) // snaps 0 (first append) + 1 (compacted)
     val total = Extract.readResults(spark, out).count()
     // snap 2 = snap 1's files + a dummy data file EXCLUSIVE to it; snap 3
     // drops the dummy again — so after expiry the dummy is referenced
@@ -266,7 +288,6 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = freshTable("graft-snap-rebase")
     val fs = fsOf(out)
     val resultsPath = new Path(s"$out/results")
-    Extract.compactResults(spark, out) // manifest exists
     val base = SnapshotStore.liveFiles(fs, resultsPath).get
     def mkFile(name: String): String = {
       val p = new Path(resultsPath, name)
