@@ -20,11 +20,13 @@ import graft.streaming.DedupStream
   * source, n_chars)` (only the columns an op reads are required).
   *
   * `dedup` is INCREMENTAL BY CONSTRUCTION: it appends the given docs to the
-  * versioned state under `<stateDir>` (labels_v<N>/index_v<N>, the same
-  * layout [[DedupStream]] maintains under Structured Streaming) — the first
-  * run bootstraps, every later run fingerprints only its own batch and
-  * probes the stored rep-level band index. Batch backfill and streaming
-  * ingestion therefore share one state and one code path.
+  * state under `<stateDir>` as its next snapshot (the
+  * [[graft.pipeline.SnapshotStore]] table of `index/` and `labels/` deltas,
+  * one manifest per batch, that [[DedupStream]] maintains under Structured
+  * Streaming) — the first run bootstraps, every later run fingerprints
+  * only its own batch and probes the stored rep-level band index. Batch
+  * backfill and streaming ingestion therefore share one state and one
+  * code path.
   */
 object DocJob {
   private def usage: String =
@@ -80,7 +82,7 @@ object DocJob {
           require(args.length >= 3, usage)
           val id = DedupStream.nextBatchId(spark, args(2))
           DedupStream.processBatch(spark, args(2), docs(args(1)), id)
-          println(s"[graft.DocJob] dedup: state advanced to v$id in ${args(2)}")
+          println(s"[graft.DocJob] dedup: committed snapshot $id of ${args(2)}")
         case "decontam" =>
           require(args.length >= 4, usage)
           DocOps.exciseContaminatedSpans(docs(args(1)), docs(args(2)),

@@ -330,24 +330,6 @@ object Extract {
     }))
   }
 
-  /** Move every part-file from `srcDir` into `dstDir`, the results dir of
-    * a manifest-carrying table (fresh UUID names — collisions impossible),
-    * returning the qualified destination paths for the snapshot commit.
-    * Rename failures throw: at this stage nothing has been committed, so
-    * the table is untouched.
-    */
-  private def movePartsCollect(fs: org.apache.hadoop.fs.FileSystem,
-                               srcDir: org.apache.hadoop.fs.Path,
-                               dstDir: org.apache.hadoop.fs.Path): Seq[String] =
-    fs.listStatus(srcDir)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-")).toSeq
-      .map { s =>
-        val dst = new org.apache.hadoop.fs.Path(dstDir, s.getPath.getName)
-        if (!fs.rename(s.getPath, dst))
-          throw new IllegalStateException(s"rename ${s.getPath} -> $dst failed")
-        SnapshotStore.qualify(fs, dst.toString)
-      }
-
   /** Whole-table rewrite through the snapshot protocol: move the files
     * staged in `tmpPath` (already written) into the manifest-carrying
     * table, commit them as its new snapshot, then sweep ORPHANS — files
@@ -367,7 +349,7 @@ object Extract {
     // `keep` read — i.e. spans the entire rewrite; under the declared
     // single-writer(-per-table) scope no such writer exists.
     val preList = listDataFiles(fs, resultsPath)
-    val moved = movePartsCollect(fs, tmpPath, resultsPath)
+    val moved = SnapshotStore.movePartsCollect(fs, tmpPath, resultsPath)
     // whole-table rewrite = replace the pre-rewrite live set with the
     // staged one; through the rebase loop a concurrent APPEND landing in
     // the window survives (its files are neither in `removes` nor
@@ -598,7 +580,7 @@ object Extract {
       // rebase loop. Replaced files are NOT deleted (retention contract):
       // the pre-reparse snapshot still lists them, and
       // expireResultSnapshots retires them with it.
-      val moved = movePartsCollect(fs, tmpPath, resultsPath)
+      val moved = SnapshotStore.movePartsCollect(fs, tmpPath, resultsPath)
       val committed = SnapshotStore.commitRebase(fs, resultsPath, adds = moved,
         removes = (if (fullRewrite) live else errFiles).toSeq)
 

@@ -7,16 +7,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-/** Poor-man's snapshot manifests for a results table — the plain-parquet
+/** Poor-man's snapshot manifests for a table — the plain-parquet
   * stand-in for Iceberg's atomic snapshot commit (COVERAGE.md divergence #2,
-  * narrowed by this to concurrent-writer arbitration only).
+  * narrowed by this to concurrent-writer arbitration only). It serves the
+  * extraction results tables ([[Extract]]) and the near-dup state of
+  * [[graft.streaming.DedupStream]].
   *
   * Protocol:
   *  - Every table this build writes carries a manifest dir
-  *    `results/_manifests` from its first append: `snap-<id>.txt` files,
+  *    `<table>/_manifests` from its first write: `snap-<id>.txt` files,
   *    each listing the table's live part-files (paths relative to the
-  *    results dir, sorted). The leading underscore keeps the dir
-  *    invisible to Spark/Hive file listings.
+  *    table dir, sorted). A results table keeps its files flat; the dedup
+  *    state keeps them one sub-dir deep (`index/`, `labels/`), and each
+  *    sub-dir is read through [[readFiles]] on its own. The leading
+  *    underscore keeps the manifest dir invisible to Spark/Hive file
+  *    listings.
   *  - The CURRENT snapshot is the highest id. Committing = write
   *    `snap-<id+1>.txt.tmp`, then ONE `rename` to `snap-<id+1>.txt` — the
   *    rename is the commit point (atomic on HDFS and on local FS; on S3 an
@@ -77,7 +82,7 @@ object SnapshotStore {
   def currentSnapshot(fs: FileSystem, results: Path): Option[(Long, Path)] =
     snapshots(fs, results).lastOption
 
-  private def filesOf(fs: FileSystem, results: Path, manifest: Path): Seq[String] = {
+  private[graft] def filesOf(fs: FileSystem, results: Path, manifest: Path): Seq[String] = {
     val in = fs.open(manifest)
     val content = try new String(in.readAllBytes(), UTF_8) finally in.close()
     content.linesIterator.filter(_.nonEmpty)
@@ -107,6 +112,23 @@ object SnapshotStore {
     require(q.startsWith(root + "/"), s"data file $f not under $results")
     q.substring(root.length + 1)
   }
+
+  /** Move every part-file from `srcDir` into `dstDir` (a table dir or one
+    * of its sub-dirs) under its own name, unique per write job, returning
+    * the qualified destination paths for the snapshot commit. Rename
+    * failures throw: at this stage nothing has been committed, so the
+    * table is untouched.
+    */
+  private[graft] def movePartsCollect(fs: FileSystem, srcDir: Path,
+                                      dstDir: Path): Seq[String] =
+    fs.listStatus(srcDir)
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-")).toSeq
+      .map { s =>
+        val dst = new Path(dstDir, s.getPath.getName)
+        if (!fs.rename(s.getPath, dst))
+          throw new IllegalStateException(s"rename ${s.getPath} -> $dst failed")
+        qualify(fs, dst.toString)
+      }
 
   /** Atomically commit a new snapshot listing exactly `files`. Returns the
     * new snapshot id. The single rename is the commit point — every step
@@ -313,8 +335,8 @@ object SnapshotStore {
     * paths would start its parallel-listing job. A listed file missing
     * from the dir fails the read instead of dropping its rows.
     */
-  private[pipeline] def readFiles(spark: SparkSession, results: Path,
-                                  files: Seq[String], schema: StructType): DataFrame = {
+  private[graft] def readFiles(spark: SparkSession, results: Path,
+                               files: Seq[String], schema: StructType): DataFrame = {
     val fs = results.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val present = fs.listStatus(results).iterator.map(s => qualify(fs, s.getPath.toString)).toSet
     files.find(f => !present(f)).foreach { f =>

@@ -180,7 +180,7 @@ class ComponentLabelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       (DedupStream.readLabels(spark, state).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap,
-        batches.indices.map(v => footer(s"$state/labels_v$v")))
+        batches.indices.map(v => footer(DedupState.added(spark, state, v.toLong, "labels").head)))
     }
     assert(runs(0)._1 === runs(1)._1)
     assert(runs(0)._2 === runs(1)._2)

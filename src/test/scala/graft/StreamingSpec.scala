@@ -158,12 +158,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("checkpointLocation", s"$work/ckpt").start()
     q.processAllAvailable(); q.stop()
 
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lastV = fs.listStatus(new org.apache.hadoop.fs.Path(state))
-      .map(_.getPath.getName).filter(_.startsWith("labels_v"))
-      .map(_.stripPrefix("labels_v").toLong).max
-    assert(lastV === batches.length - 1L)
+    // one snapshot per micro-batch, its id the batch id
+    assert(DedupState.ids(spark, state) === batches.indices.map(_.toLong))
+    val lastV = batches.length - 1L
     def lab(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // round 8: versions are DELTAS — the live table resolves the chain
@@ -176,11 +173,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Set(3L, 22L).forall(d => full(d) === d))    // isolated docs
 
     // per-batch state WRITES are batch-incident (the r7 verdict's top perf
-    // weak): each labels_v delta carries only that batch's docs plus
-    // merged-component relabels, never the whole corpus state
+    // weak): the label files each snapshot adds carry only that batch's
+    // docs plus merged-component relabels, never the whole corpus state
+    def delta(v: Long, sub: String) =
+      spark.read.parquet(DedupState.added(spark, state, v, sub): _*)
     val deltaIds = (0L to lastV).map(v =>
-      spark.read.parquet(s"$state/labels_v$v")
-        .collect().map(_.getLong(0)).toSet)
+      delta(v, "labels").collect().map(_.getLong(0)).toSet)
     assert(deltaIds(0) === Set(1L, 2L, 3L))
     assert(deltaIds(1) === Set(10L, 11L))        // 10 merges into root 1 (already min) — no old relabel rows
     assert(deltaIds(2) === Set(20L, 21L, 22L))   // root 11 keeps its label — no old relabel rows
@@ -189,20 +187,22 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lab(DedupStream.readLabels(spark, state, below = 2L)) ===
       lab(DocOps.keepersFromEdges(pref2, DocOps.simhashEdges(pref2))))
 
-    // crash-replay: re-deliver the LAST batch (same batchId) — state reads
-    // come from versions < lastV, writes overwrite the lastV delta → the
-    // recomputed tables are byte-identical
+    // crash-replay: re-delivering the LAST batch (same batchId) finds its
+    // snapshot committed and writes nothing — every file under the state
+    // dir stays byte-identical
+    val before = DedupState.tree(state)
     DedupStream.processBatch(spark, state,
       batches.last.toDF("doc_id", "text"), lastV)
+    assert(DedupState.tree(state) === before)
     assert(lab(DedupStream.readLabels(spark, state)) === full)
     // index stays rep-level: one rep per distinct (batch, fingerprint),
     // 4 band rows each — in-batch dup groups (20/21) collapse before the
-    // index ever sees them; each index_v delta holds ONLY its batch's reps
+    // index ever sees them; each snapshot adds ONLY its batch's reps
     val repsPerBatch = batches.map(b =>
       DocOps.simhash(b.toDF("doc_id", "text"))
         .select("simhash").distinct().count())
     (0L to lastV).foreach(v => assert(
-      spark.read.parquet(s"$state/index_v$v").count() ===
+      delta(v, "index").count() ===
         repsPerBatch(v.toInt) * 4L))
     assert(DedupStream.readIndex(spark, state).count() === repsPerBatch.sum * 4L)
     assert(repsPerBatch.sum < batches.map(_.length).sum) // the collapse did fire
